@@ -5,7 +5,7 @@ Spark has no ASOF JOIN in its SQL dialect (the library builder is
 ``operators/asof.py::as_of_join``). This module adds the SQL spelling
 as a Python-level front-end: :func:`asof_sql` recognizes one
 ``ASOF [LEFT] JOIN`` clause in an otherwise-ordinary SELECT, lowers it
-to the same join-then-window-top-1 plan the builder emits, and hands
+to a join-then-window-top-1 plan, and hands
 the rest of the statement to ``spark.sql`` untouched. A true Catalyst
 parser extension would need compiled Scala; the survey explicitly
 scoped this as optional — the Python front-end covers the user-visible
@@ -194,9 +194,8 @@ def asof_sql(spark: SparkSession, query: str) -> DataFrame:
     # Top-1 per LEFT ROW: greatest right ts, remaining ORDERABLE right
     # columns as deterministic tiebreakers (maps and other unorderable
     # types are skipped — a records table's feature map must not break
-    # the sort). Same shape as as_of_join's per-row branch
-    # (operators/asof.py) — Spark plans it as WindowGroupLimit, so the
-    # per-key top-1 happens map-side before the exchange.
+    # the sort). Spark plans it as WindowGroupLimit, so the per-key
+    # top-1 happens map-side before the exchange.
     from pyspark.sql import types as T
 
     orderable = (

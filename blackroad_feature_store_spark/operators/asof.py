@@ -4,18 +4,28 @@ The signature operator of the reference engine: "latest snapshot with
 timestamp <= t per key" (``feature_store.py:391-405``) and the
 point-in-time join built on it (``feature_store.py:411-448``). The
 reference runs one indexed SQLite point query per (entity × group)
-pair; here the same semantics are ONE distributed plan:
+pair; here the same semantics are ONE distributed plan per form.
+
+Global cutoff (``as_of`` a literal)::
 
     filter(ts <= t)                      -- pushed to the parquet scan
     window row_number over (key, ts desc) == 1   -- top-1 per key
     left join onto the spine             -- broadcast if spine is small
 
+Per-row cutoff (``as_of`` a spine column)::
+
+    spine rows ∪ records                 -- tagged, one shuffle on the key
+    sort per key by (instant, records before spine rows, tiebreakers)
+    last(record struct, ignorenulls) over ROWS UNBOUNDED PRECEDING
+
 Scale notes (100 TB): the ts filter and key filters reach the scan via
 predicate pushdown + partition pruning (records are partitioned by
-group_id); the window shuffles once on the key columns, and AQE splits
-skewed keys. When the spine is a small entity list, Spark's size
-estimate makes it the broadcast side automatically; we also expose
-``broadcast_spine`` to force it.
+group_id); each form shuffles once on the key columns, and AQE splits
+skewed keys. In the global form, when the spine is a small entity
+list, Spark's size estimate makes it the broadcast side automatically;
+we also expose ``broadcast_spine`` to force it. The per-row form is
+O((S+R) log) at any history depth: it never builds the (spine row,
+record) candidate-pair set and runs entirely in the JVM.
 """
 
 from __future__ import annotations
@@ -25,6 +35,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -113,53 +124,33 @@ def as_of_join(
     (``direction="forward"``: to the EARLIEST record at/after it — the
     label join; global-cutoff form only).
 
-    * ``as_of`` a literal → one global cutoff (the reference CLI case).
+    * ``as_of`` a literal → one global cutoff (the reference CLI case):
+      :func:`latest_as_of`, then a ``how`` join onto the spine
+      (``broadcast_spine`` forces the spine to the broadcast side).
     * ``as_of`` = a column name present in ``spine`` → per-row cutoff
-      (classic training-set point-in-time correctness). Implemented as
-      join-then-window so each spine row sees only records at or before
-      its own timestamp.
+      (classic training-set point-in-time correctness), ``how`` in
+      ``left``/``inner``: one sort per key over the spine rows and the
+      records together (see :func:`_as_of_per_row`), so each spine row
+      sees only records at or before its own instant. Output columns
+      are the spine's, then the records' minus the keys; a name on both
+      sides raises ``ValueError``.
     * ``tolerance`` (interval string) → snapshots older than
       ``as_of - tolerance`` don't match (stale features become NULLs
-      under a left join instead of silently serving old data). In the
-      per-row branch the bound tightens the range-join condition, which
-      SHRINKS the pre-window intermediate — at scale a tolerance makes
-      the per-row as-of cheaper, not costlier.
+      under a left join instead of silently serving old data),
+      inclusive at the boundary.
     """
     on_cols = [on] if isinstance(on, str) else list(on)
 
-    if direction != "backward" and isinstance(as_of, str) and as_of in spine.columns:
-        raise ValueError(
-            "direction='forward' supports the global-cutoff form only "
-            "(per-row forward labels: call latest_as_of per cutoff)"
-        )
     if isinstance(as_of, str) and as_of in spine.columns:
-        # Per-row as-of: range-join then per-spine-row top-1.
-        spine_keyed = spine.withColumn(
-            "__spine_id", F.monotonically_increasing_id()
-        )
-        s = F.broadcast(spine_keyed) if broadcast_spine else spine_keyed
-        conds = [s[c] == records[c] for c in on_cols] + [
-            records[ts_col] <= s[as_of]
-        ]
-        if tolerance is not None:
-            conds.append(
-                records[ts_col]
-                >= s[as_of].cast("timestamp")
-                - F.expr(f"INTERVAL {tolerance}")
+        if direction != "backward":
+            raise ValueError(
+                "direction='forward' supports the global-cutoff form only "
+                "(per-row forward labels: call latest_as_of per cutoff)"
             )
-        joined = s.join(records, on=conds, how=how)
-        order = [records[ts_col].desc()] + [
-            records[c].desc() for c in tiebreakers if c in records.columns
-        ]
-        w = Window.partitionBy("__spine_id").orderBy(*order)
-        out = (
-            joined.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__spine_id")
+        return _as_of_per_row(
+            spine, records, on_cols, as_of, ts_col, tiebreakers, how,
+            tolerance,
         )
-        for c in on_cols:
-            out = out.drop(records[c])
-        return out
 
     latest = latest_as_of(
         records, on_cols, ts_col, as_of, tiebreakers,
@@ -167,6 +158,101 @@ def as_of_join(
     )
     s = F.broadcast(spine) if broadcast_spine else spine
     return s.join(latest, on=on_cols, how=how)
+
+
+def _as_of_per_row(
+    spine: DataFrame,
+    records: DataFrame,
+    on_cols: list[str],
+    as_of_col: str,
+    ts_col: str,
+    tiebreakers: Sequence[str],
+    how: str,
+    tolerance: str | None,
+) -> DataFrame:
+    """The per-row as-of join as one sort-based plan.
+
+    Spine rows and records are tagged and unioned, shuffled once on the
+    key, and ordered per key by (instant, records before spine rows at
+    equal instants, tiebreakers ascending). Each spine row then takes
+    the last non-NULL record struct at or before it, so the winner is
+    the record with the greatest ts <= the spine row's instant and, at
+    equal ts, the greatest tiebreaker (NULL tiebreakers sort first and
+    lose, as under a DESC top-1). The instants are compared in the type
+    the union widens them to, which under ANSI type coercion (the
+    session default) is the type ``<=`` coerces the two sides to, e.g.
+    a ``date`` instant against a ``timestamp`` ts compares as
+    ``timestamp``.
+
+    ``tolerance`` is applied after the pick: the latest record at or
+    before the instant is stale only if every earlier one is too.
+    """
+    if how not in ("left", "inner"):
+        raise ValueError(
+            f"per-row as_of_join supports how=left|inner: {how!r}"
+        )
+    if as_of_col not in spine.columns:
+        raise ValueError(f"spine has no column {as_of_col!r}")
+    payload = [c for c in records.columns if c not in on_cols]
+    overlap = set(payload) & set(spine.columns)
+    if overlap:
+        raise ValueError(
+            f"column collision between spine and records: {sorted(overlap)}"
+        )
+    ties = [c for c in tiebreakers if c in records.columns]
+    tie_types = [records.schema[c].dataType for c in ties]
+    # NULL placeholders typed from the already-resolved schemas: no
+    # extra analysis of either side's plan.
+    spine_t = T.StructType(spine.schema.fields)
+    rec_t = T.StructType([records.schema[c] for c in payload])
+
+    tagged_spine = spine.select(
+        *on_cols,
+        F.col(as_of_col).alias("__t"),
+        F.lit(1).alias("__side"),
+        *[F.lit(None).cast(t).alias(f"__tb{i}") for i, t in enumerate(tie_types)],
+        F.struct(*spine.columns).alias("__s"),
+        F.lit(None).cast(rec_t).alias("__r"),
+    )
+    # NULL keys never match, and a NULL-ts record would sort first
+    # (nulls first) where every spine row of its key could pick it, so
+    # such records carry no payload. A spine row with a NULL instant
+    # sorts before every record that has a ts, so it never matches.
+    usable = F.col(ts_col).isNotNull()
+    for c in on_cols:
+        usable = usable & F.col(c).isNotNull()
+    tagged_records = records.select(
+        *on_cols,
+        F.col(ts_col).alias("__t"),
+        F.lit(0).alias("__side"),
+        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(ties)],
+        F.lit(None).cast(spine_t).alias("__s"),
+        F.when(usable, F.struct(*payload)).alias("__r"),
+    )
+    w = (
+        Window.partitionBy(*on_cols)
+        .orderBy("__t", "__side", *[f"__tb{i}" for i in range(len(ties))])
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    picked = tagged_spine.unionByName(tagged_records).select(
+        "__side",
+        "__s",
+        F.last("__r", ignorenulls=True).over(w).alias("__r"),
+    )
+    rec, keep = F.col("__r"), F.col("__side") == 1
+    if tolerance is not None:
+        rec = F.when(
+            rec[ts_col]
+            >= F.col("__s")[as_of_col].cast("timestamp")
+            - F.expr(f"INTERVAL {tolerance}"),
+            rec,
+        )
+    if how == "inner":
+        keep = keep & rec.isNotNull()
+    out = picked.where(keep)
+    if tolerance is not None:  # a stale pick becomes a NULL payload
+        out = out.select("__s", rec.alias("__r"))
+    return out.select("__s.*", "__r.*")
 
 
 def gapfill_locf(
@@ -312,20 +398,17 @@ def as_of_join_pandas(
 ) -> DataFrame:
     """The per-row point-in-time join on the pandas ``merge_asof``
     path — same contract as :func:`as_of_join` with a per-row
-    ``as_of`` column and ``how="left"``, different execution: instead
-    of range-join + per-spine-row window top-1 (which materializes
-    every candidate (spine, record) pair before pruning), both sides
-    cogroup-shuffle ONCE on the key and each group runs pandas'
-    O(n log n) sort + linear merge — no pair blow-up. The win grows
-    with snapshot depth per entity; the window form wins when groups
-    are tiny and the Python worker round-trip dominates. Both produce
-    identical rows (ties resolved to max ``tiebreakers`` at equal
-    timestamps, matching the window's DESC ordering; pinned by a
-    randomized parity test).
+    ``as_of`` column and ``how="left"``, independent execution: both
+    sides cogroup-shuffle ONCE on the key and each group runs pandas'
+    O(n log n) sort + linear merge in a Python worker. It is the
+    explicit opt-in second implementation that the parity tests and
+    ``core_pit_join_pandas`` hold the sorted JVM plan against; both
+    produce identical rows (ties resolved to max ``tiebreakers`` at
+    equal timestamps; pinned by randomized parity tests).
 
     ``tolerance`` accepts a pandas-Timedelta string ("90 days"):
     matches older than ``as_of - tolerance`` become NULLs, inclusive
-    at the boundary, same as the window form.
+    at the boundary, same as the sorted form.
 
     Grouping granularity: the cogroup keys on HASH BUCKETS of the join
     key (``pmod(xxhash64(key), shuffle_partitions)``), not on the key
@@ -336,26 +419,28 @@ def as_of_join_pandas(
     → ~2s at sf0.1). Bucketing keeps the call count at the partition
     count while ``by=`` preserves exact per-entity semantics.
 
-    NULL join keys: a NULL-key spine row gets NULL payload (no match)
-    in BOTH forms. The window form gets this for free — it starts from
-    an equality range-join, and SQL equality never matches NULL. The
-    pandas form must enforce it: ``merge_asof(by=...)`` PAIRS
-    None/NaN/NA keys (verified for object, float64, and nullable-Int64
-    dtypes), so NULL-key records are dropped from the right side
-    before the merge. Pinned by ``test_asof_pandas_null_key_parity``.
+    NULLs: a spine row with a NULL key or a NULL instant gets NULL
+    payload (no match) in BOTH forms, and a record with a NULL key or
+    a NULL ts never matches. The pandas form must enforce this:
+    ``merge_asof(by=...)`` PAIRS None/NaN/NA keys (verified for object,
+    float64, and nullable-Int64 dtypes) and rejects NULL ``on`` values
+    outright, so such records are dropped and NULL-instant spine rows
+    bypass the merge. Pinned by ``test_asof_pandas_null_key_parity``
+    and the randomized parity tests. Unmatched rows get None (not
+    merge_asof's NaN) in map, array and struct payload columns, which
+    Arrow cannot build from a float.
 
-    Float-NaN key caveat (distinct from NULL): Spark treats NaN = NaN
-    as TRUE in equality joins, so the window form matches records
-    whose double-typed key is a genuine (non-NULL) NaN. Arrow maps
-    Spark NULL in a double column to pandas NaN too, making NULL and
-    real NaN indistinguishable here — the ``dropna`` therefore also
-    drops real-NaN keys and the two forms diverge for double keys
-    containing NaN values. Feature-store entity keys are strings/ints
-    in every catalog path; avoid double join keys holding NaN, or use
-    the window form for them.
+    Float-NaN key caveat (distinct from NULL): Spark groups NaN with
+    NaN, so the sorted form matches records whose double-typed key is
+    a genuine (non-NULL) NaN. Arrow maps Spark NULL in a double column
+    to pandas NaN too, making NULL and real NaN indistinguishable
+    here — the ``dropna`` therefore also drops real-NaN keys and the
+    two forms diverge for double keys containing NaN values.
+    Feature-store entity keys are strings/ints in every catalog path;
+    avoid double join keys holding NaN, or use the sorted form for
+    them.
     """
     import pandas as pd
-    from pyspark.sql import types as T
 
     on_cols = [on] if isinstance(on, str) else list(on)
     if as_of_col not in spine.columns:
@@ -388,14 +473,19 @@ def as_of_join_pandas(
     sp = spine.withColumn("__bkt", bkt)
     rc = records.withColumn("__bkt", bkt)
 
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.drop(columns="__bkt").sort_values(
-            as_of_col, kind="mergesort"
+    nested = [
+        c for c in payload
+        if isinstance(
+            records.schema[c].dataType, (T.MapType, T.ArrayType, T.StructType)
         )
-        # NULL-key records can never match (SQL equality semantics,
-        # matching the window form) — but merge_asof's by= WOULD pair
-        # them with NULL-key spine rows, so drop them first.
-        right = right.dropna(subset=on_cols)
+    ]
+
+    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        left = left.drop(columns="__bkt")
+        # NULL-key and NULL-ts records can never match (SQL semantics,
+        # matching the sorted form) — but merge_asof's by= WOULD pair
+        # NULL keys, and it rejects NULL merge keys, so drop them first.
+        right = right.dropna(subset=on_cols + [ts_col])
         if right.empty:
             out = left.copy()
             for c in payload:
@@ -404,8 +494,9 @@ def as_of_join_pandas(
         right = right.drop(columns="__bkt").sort_values(
             sort_rec, kind="mergesort"
         )
+        timed = left[as_of_col].notna()
         merged = pd.merge_asof(
-            left,
+            left[timed].sort_values(as_of_col, kind="mergesort"),
             right[on_cols + payload],
             left_on=as_of_col,
             right_on=ts_col,
@@ -413,6 +504,11 @@ def as_of_join_pandas(
             direction="backward",
             tolerance=tol,
         )
+        if not timed.all():
+            merged = pd.concat([merged, left[~timed]], ignore_index=True)
+        for c in nested:
+            col = merged[c].astype(object)
+            merged[c] = col.where(col.notna(), None)
         return merged[spine_cols + payload]
 
     return (
@@ -430,56 +526,13 @@ def as_of_join_auto(
     ts_col: str = "timestamp",
     tiebreakers: Sequence[str] = ("id",),
     tolerance: str | None = None,
-    depth_threshold: float = 16.0,
 ) -> DataFrame:
-    """Per-row point-in-time join with the execution strategy picked
-    automatically (callers previously had to choose, and the wrong
-    pick at scale is expensive in opposite directions):
-
-    * :func:`as_of_join` (range-join + window top-1) materializes
-      every (spine row, record at-or-before) candidate pair before
-      pruning — cost grows with mean snapshot DEPTH per entity, but
-      everything stays JVM-side in whole-stage codegen.
-    * :func:`as_of_join_pandas` (bucketed ``merge_asof``) never builds
-      the pair set — each bucket is one O(n log n) sort + linear
-      merge — but pays Arrow transfer of both sides and Python
-      workers.
-
-    The crossover is history depth: shallow history (few snapshots per
-    entity) means a small pair set, so the window form wins; deep
-    history means the pair blow-up dominates, so the pandas form wins.
-    Depth is estimated as ``count / approx_count_distinct(key)`` in
-    ONE column-pruned, map-side-partial aggregation over the records
-    side — an HLL-sketch scan whose cost stays bounded at any corpus
-    size (only sketches shuffle, never rows). ``depth_threshold``
-    defaults to 16: near the threshold both forms are within ~2x of
-    each other (sf0.1 measurements, PLANS_r07.md), so the heuristic
-    only needs to catch the order-of-magnitude far-from-threshold
-    cases.
-
-    Strategy contract: per-row cutoff, ``how="left"``, backward
-    direction — the intersection both forms support. Both are proven
-    value-identical on randomized workloads (``test_pit_property``).
-    """
+    """Per-row point-in-time join in :func:`as_of_join_pandas`'s
+    signature, run as :func:`as_of_join`'s sorted plan (``how="left"``,
+    backward direction). Building it starts no Spark job: the sorted
+    plan needs no estimate of the data to pick an execution form."""
     on_cols = [on] if isinstance(on, str) else list(on)
-    # approx_count_distinct over a struct keeps NULL components
-    # distinct: a concat_ws proxy would SKIP NULLs, collapsing
-    # ('a', NULL), (NULL, 'a') and ('a',) into one key and deflating
-    # the distinct count — a mispicked strategy (perf only) on
-    # NULL-heavy composite keys.
-    est = records.select(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(
-            F.struct(*[F.col(c) for c in on_cols])
-        ).alias("d"),
-    ).first()
-    depth = (est["n"] / est["d"]) if est["d"] else 0.0
-    if depth >= depth_threshold:
-        return as_of_join_pandas(
-            spine, records, on=on_cols, as_of_col=as_of_col,
-            ts_col=ts_col, tiebreakers=tiebreakers, tolerance=tolerance,
-        )
-    return as_of_join(
-        spine, records, on=on_cols, ts_col=ts_col, as_of=as_of_col,
-        tiebreakers=tiebreakers, tolerance=tolerance,
+    return _as_of_per_row(
+        spine, records, on_cols, as_of_col, ts_col, tiebreakers, "left",
+        tolerance,
     )

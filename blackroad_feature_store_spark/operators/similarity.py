@@ -517,9 +517,8 @@ def cosine_topk_auto(
     hyperplanes: list[list[float]] | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors with the execution strategy picked
-    automatically — the similarity-ladder mirror of
-    ``asof.py::as_of_join_auto`` (callers previously had to choose,
-    and the wrong pick is expensive in opposite directions).
+    automatically (callers previously had to choose, and the wrong
+    pick is expensive in opposite directions).
 
     Policy (measured — the committed crossover table
     ``CROSSOVER_TOPK.json``, re-measurable with

@@ -356,12 +356,13 @@ def core_pit_join(spark: SparkSession, sf: str) -> DataFrame:
 def core_pit_join_pandas(spark: SparkSession, sf: str) -> DataFrame:
     """J1 on the merge_asof execution path
     (`operators/asof.py::as_of_join_pandas`): hash-bucketed cogroup
-    shuffle + ONE pandas merge_asof(by=key) per bucket instead of
-    range-join + window top-1 — no candidate-pair blow-up when
-    entities have deep snapshot histories, and no per-entity Python
-    round-trip. Shares core_pit_join's oracle, so the gate proves the
-    two strategies are value-identical (including the orderkey
-    tiebreak at equal timestamps)."""
+    shuffle + ONE pandas merge_asof(by=key) per bucket — no
+    candidate-pair blow-up when entities have deep snapshot histories,
+    and no per-entity Python round-trip. The independent implementation
+    the sorted per-row plan of as_of_join is held against; shares
+    core_pit_join's oracle, so the gate proves the forms are
+    value-identical (including the orderkey tiebreak at equal
+    timestamps)."""
     from blackroad_feature_store_spark.operators.asof import (
         as_of_join_pandas,
     )
@@ -683,7 +684,8 @@ def core_asof_prev_order(spark: SparkSession, sf: str) -> DataFrame:
     """J1 per-row variant: each order joined to its customer's latest
     STRICTLY EARLIER order — the per-spine-row as-of cutoff that makes
     training sets leakage-free (classic point-in-time correctness).
-    Exercises as_of_join's range-join-then-window branch.
+    Exercises as_of_join's per-row branch: one sort per customer over
+    orders and spine rows together, no candidate-pair set.
 
     The two sides are read separately on purpose: deriving both from
     one DataFrame gives the join keys identical expression IDs (the
@@ -1520,8 +1522,7 @@ def sim_cosine_topk_gemm(spark: SparkSession, sf: str) -> DataFrame:
 )
 def sim_cosine_topk_auto(spark: SparkSession, sf: str) -> DataFrame:
     """Auto-picked top-k (`operators/similarity.py::cosine_topk_auto`,
-    VERDICT r9 item 8 — the similarity-ladder mirror of
-    `as_of_join_auto`): |Q| within the broadcast contract selects the
+    VERDICT r9 item 8): |Q| within the broadcast contract selects the
     measured-dominant exact GEMM path; past it the caller must opt
     into the IVF/LSH tier. The oracle is the SAME SQL as
     sim_cosine_topk, so the gate proves the auto pick lands on a
@@ -5869,8 +5870,9 @@ def core_asof_tolerance(spark: SparkSession, sf: str) -> DataFrame:
     """Tolerance-bounded per-row as-of join (pandas merge_asof
     tolerance semantics): each order sees its customer's latest earlier
     order ONLY if it is within 90 days — staler history joins as NULL
-    instead of silently serving old features. The lower bound tightens
-    the range-join condition, shrinking the pre-window intermediate.
+    instead of silently serving old features. The bound is checked on
+    the per-row pick: the latest earlier order is stale only if every
+    earlier one is.
     """
     spine = load(spark, sf, "orders").select(
         "o_orderkey",

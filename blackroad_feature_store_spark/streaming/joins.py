@@ -172,8 +172,8 @@ def start_pit_enrich_stream(
     """Start (or one-shot drain) the PIT enrichment stream: a live
     spine of events becomes point-in-time-correct training rows
     continuously. At 100 TB the per-batch cost is the batch as-of
-    join's — range-join bounded by ``tolerance``, no state held in
-    Spark between batches."""
+    join's — one sort of the batch's spine rows with the records per
+    key, no state held in Spark between batches."""
     writer = (
         spine.writeStream.foreachBatch(
             lambda batch_df, batch_id: process_pit_enrich_batch(

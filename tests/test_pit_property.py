@@ -104,11 +104,80 @@ def test_statistics_match_brute_force(random_store):
         assert s["mean"] == round(sum(vals) / len(vals), 6)
 
 
+def brute_force_per_row(spine_rows, recs, tol=None, how="left"):
+    """Per-row as-of by scan: for each (entity, cutoff) spine row the
+    record (id, entity, val, ts) with the greatest ts <= cutoff, ties
+    to the greatest id with NULL ids losing. NULL keys, cutoffs and
+    record ts never match; a pick older than ``cutoff - tol`` is
+    stale. Rows are (entity, cutoff, id, val, ts)."""
+    from datetime import date, datetime
+
+    out = []
+    for entity, cutoff in spine_rows:
+        bound = cutoff
+        if type(cutoff) is date:  # compared as a timestamp, like <=
+            bound = datetime(cutoff.year, cutoff.month, cutoff.day)
+        best = None
+        if entity is not None and bound is not None:
+            cands = [
+                r for r in recs
+                if r[1] == entity and r[3] is not None and r[3] <= bound
+            ]
+            if cands:
+                best = max(
+                    cands, key=lambda r: (r[3], r[0] is not None, r[0] or "")
+                )
+                if tol is not None and best[3] < bound - tol:
+                    best = None
+        if best is not None:
+            out.append((entity, cutoff, best[0], best[2], best[3]))
+        elif how == "left":
+            out.append((entity, cutoff, None, None, None))
+    return out
+
+
+def _random_pit_case(rng, t0, n_ent=8, depth=10, spine_per_ent=3):
+    """Records and spine rows with timestamp ties, spine instants equal
+    to record ts, NULL keys, NULL instants, NULL record ts and NULL
+    tiebreakers. At most one NULL-id record per (entity, ts), so every
+    pick is deterministic."""
+    from datetime import timedelta
+
+    recs, null_id_at = [], set()
+    for e in range(n_ent):
+        for _ in range(rng.randint(0, depth)):
+            ts = t0 + timedelta(hours=rng.randint(0, 240))
+            rid = f"r{len(recs):03d}"
+            if rng.random() < 0.1 and (e, ts) not in null_id_at:
+                null_id_at.add((e, ts))
+                rid = None
+            recs.append((rid, f"e{e}", rng.randint(0, 99), ts))
+    recs.append(("r900", "e0", 111, t0 + timedelta(hours=5)))  # max id
+    recs.append(("r901", "e0", 222, t0 + timedelta(hours=5)))  # wins tie
+    recs.append(("r902", None, 333, t0 + timedelta(hours=5)))  # NULL key
+    recs.append(("r903", "e1", 444, None))  # NULL ts
+    spine = [
+        (f"e{e}", t0 + timedelta(hours=rng.randint(0, 240)))
+        for e in range(n_ent + 2)  # the last two have no records
+        for _ in range(spine_per_ent)
+    ]
+    spine += [
+        ("e0", t0 + timedelta(hours=5)),  # instant == the tied records' ts
+        (None, t0 + timedelta(hours=9)),  # NULL key
+        ("e1", None),  # NULL instant
+    ]
+    spine += [(r[1], r[3]) for r in rng.sample(recs, 3)]  # more equal ts
+    return recs, spine
+
+
 def test_as_of_join_pandas_matches_window_form_randomized(spark):
-    """The merge_asof execution strategy must produce row-identical
-    results to the range-join+window form on random per-row-cutoff
-    workloads, including timestamp ties (max-id wins), entities with
-    no records, and tolerance bounds. Deterministic seeds."""
+    """The sorted per-row plan, the merge_asof execution strategy and a
+    brute-force scan agree row for row on random per-row-cutoff
+    workloads: timestamp ties (max id wins, NULL ids lose), record ts
+    equal to the spine instant, entities with no records, NULL keys,
+    NULL instants, NULL record ts, tolerance bounds, ``how="inner"``
+    and a ``date`` as-of column against a ``timestamp`` ts column.
+    Deterministic seeds."""
     import random
     from datetime import datetime, timedelta
 
@@ -117,48 +186,57 @@ def test_as_of_join_pandas_matches_window_form_randomized(spark):
         as_of_join_pandas,
     )
 
-    for seed, tol in ((5, None), (12, "36 hours")):
+    cols = ("entity", "cutoff", "id", "val", "timestamp")
+    key = lambda rows: sorted(map(tuple, rows), key=str)  # noqa: E731
+    cases = [
+        (5, None, "left", "timestamp"),
+        (12, "36 hours", "left", "timestamp"),
+        (7, None, "inner", "timestamp"),
+        (8, "48 hours", "inner", "timestamp"),
+        (9, None, "left", "date"),
+        (10, "72 hours", "left", "date"),
+    ]
+    for seed, tol, how, cutoff_type in cases:
         rng = random.Random(seed)
         t0 = datetime(2026, 1, 1)
-        recs = []
-        rid = 0
-        for e in range(8):
-            for _ in range(rng.randint(0, 10)):
-                recs.append(
-                    (
-                        f"r{rid:03d}",
-                        f"e{e}",
-                        rng.randint(0, 99),
-                        t0 + timedelta(hours=rng.randint(0, 240)),
-                    )
-                )
-                rid += 1
-        # force timestamp ties on one entity: the max id must win
-        recs.append(("r900", "e0", 111, t0 + timedelta(hours=5)))
-        recs.append(("r901", "e0", 222, t0 + timedelta(hours=5)))
+        recs, spine_rows = _random_pit_case(rng, t0)
+        if cutoff_type == "date":
+            spine_rows = [
+                (e, c.date() if c is not None else None)
+                for e, c in spine_rows
+            ]
         records = spark.createDataFrame(
             recs, "id string, entity string, val int, timestamp timestamp"
         )
         spine = spark.createDataFrame(
-            [
-                (f"e{e}", t0 + timedelta(hours=rng.randint(0, 240)))
-                for e in range(10)  # e8/e9 have no records at all
-                for _ in range(3)
-            ],
-            "entity string, cutoff timestamp",
+            spine_rows, f"entity string, cutoff {cutoff_type}"
         )
         tol_kw = {"tolerance": tol} if tol else {}
+        label = f"seed {seed} tol {tol} how {how} cutoff {cutoff_type}"
+        tol_td = timedelta(hours=int(tol.split()[0])) if tol else None
+        want = key(brute_force_per_row(spine_rows, recs, tol_td, how))
+
         a = as_of_join(
             spine, records, on="entity", ts_col="timestamp",
-            as_of="cutoff", **tol_kw,
-        ).select("entity", "cutoff", "id", "val", "timestamp")
+            as_of="cutoff", how=how, **tol_kw,
+        ).select(*cols)
+        assert key(a.collect()) == want, label
+
+        # the pandas form is left-only and merges timestamps: compare
+        # it on the timestamp-cast spine, keeping matched rows for inner
+        pandas_spine = spine.withColumn(
+            "cutoff", spine["cutoff"].cast("timestamp")
+        )
         b = as_of_join_pandas(
-            spine, records, on="entity", as_of_col="cutoff",
+            pandas_spine, records, on="entity", as_of_col="cutoff",
             ts_col="timestamp", **tol_kw,
-        ).select("entity", "cutoff", "id", "val", "timestamp")
-        ka = sorted(map(tuple, a.collect()))
-        kb = sorted(map(tuple, b.collect()))
-        assert ka == kb, f"seed {seed} tol {tol}"
+        ).select(*cols)
+        got_b = [
+            (e, c.date() if cutoff_type == "date" and c else c, *rest)
+            for e, c, *rest in b.collect()
+            if how == "left" or rest[2] is not None
+        ]
+        assert key(got_b) == want, label
 
 
 def test_asof_pandas_null_key_parity(spark):
@@ -206,6 +284,69 @@ def test_asof_pandas_null_key_parity(spark):
     assert by_key[(None, 4)] == (None, None)
     assert by_key[("e1", 4)] == ("r2", 30)
     assert by_key[("e2", 4)] == (None, None)
+
+
+def test_asof_map_payload_unmatched_row_all_forms(spark):
+    """A spine row with no match gets a NULL map payload, not a NaN
+    that breaks the Arrow conversion of the pandas form, and all three
+    per-row entry points return identical rows. The unmatched row's
+    entity has a record (after its cutoff), so the pandas form runs
+    merge_asof on it rather than its no-records shortcut."""
+    from datetime import datetime
+
+    from blackroad_feature_store_spark.operators.asof import (
+        as_of_join,
+        as_of_join_auto,
+        as_of_join_pandas,
+    )
+
+    records = spark.createDataFrame(
+        [("r1", "e1", {"city": "berlin"}, datetime(2026, 1, 1))],
+        "id string, entity string, _extras map<string,string>, "
+        "timestamp timestamp",
+    )
+    spine = spark.createDataFrame(
+        [("e1", datetime(2026, 1, 2)), ("e1", datetime(2025, 12, 31))],
+        "entity string, cutoff timestamp",
+    )
+    forms = [
+        as_of_join_pandas(spine, records, on="entity", as_of_col="cutoff"),
+        as_of_join(spine, records, on="entity", as_of="cutoff"),
+        as_of_join_auto(spine, records, on="entity", as_of_col="cutoff"),
+    ]
+    got = [sorted(map(tuple, df.collect()), key=str) for df in forms]
+    assert got[0] == [
+        ("e1", datetime(2025, 12, 31), None, None, None),
+        ("e1", datetime(2026, 1, 2), "r1", {"city": "berlin"},
+         datetime(2026, 1, 1)),
+    ]
+    assert got[1] == got[0] and got[2] == got[0]
+
+
+def test_per_row_as_of_join_rejects_bad_how_and_collisions(spark):
+    """The per-row form supports ``how`` left/inner only, and a column
+    on both sides raises the same error as the pandas form."""
+    from blackroad_feature_store_spark.operators.asof import (
+        as_of_join,
+        as_of_join_pandas,
+    )
+
+    records = spark.createDataFrame(
+        [], "id string, entity string, val int, timestamp timestamp"
+    )
+    spine = spark.createDataFrame([], "entity string, cutoff timestamp")
+    for how in ("right", "full", "left_anti"):
+        with pytest.raises(ValueError, match="how=left|inner"):
+            as_of_join(spine, records, on="entity", as_of="cutoff", how=how)
+    clash = spine.withColumn("val", spine["cutoff"].cast("int"))
+    for call in (
+        lambda: as_of_join(clash, records, on="entity", as_of="cutoff"),
+        lambda: as_of_join_pandas(
+            clash, records, on="entity", as_of_col="cutoff"
+        ),
+    ):
+        with pytest.raises(ValueError, match=r"collision.*\['val'\]"):
+            call()
 
 
 def test_latest_as_of_forward_direction_brute_force(spark):
@@ -260,9 +401,10 @@ def test_latest_as_of_forward_direction_brute_force(spark):
 
 
 def test_as_of_join_auto_picks_and_matches(spark):
-    """The auto strategy must (a) pick window for shallow history and
-    pandas for deep history, (b) return rows identical to the window
-    form either way."""
+    """``as_of_join_auto`` must (a) return rows identical to
+    ``as_of_join`` on deep and on shallow history, (b) start no Spark
+    job while building its plan (no eager probe of the data), and (c)
+    plan no cogroup and no Python worker at any history depth."""
     from datetime import datetime, timedelta
 
     from blackroad_feature_store_spark.operators.asof import (
@@ -302,16 +444,21 @@ def test_as_of_join_auto_picks_and_matches(spark):
         assert sorted(map(tuple, auto.collect()), key=str) == sorted(
             map(tuple, ref.collect()), key=str
         )
-    # strategy pick is observable via plan shape: the pandas path runs
-    # FlatMapCoGroupsInPandas, the window path does not.
-    deep_plan = as_of_join_auto(
-        spine, deep, on="entity", as_of_col="cutoff"
-    )._jdf.queryExecution().executedPlan().toString()
-    shallow_plan = as_of_join_auto(
-        spine, shallow, on="entity", as_of_col="cutoff"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "CoGroup" in deep_plan
-    assert "CoGroup" not in shallow_plan
+    sc = spark.sparkContext
+    group = "as_of_join_auto_builds_lazily"
+    sc.setJobGroup(group, "plan construction only")
+    try:
+        plans = [
+            as_of_join_auto(spine, recs, on="entity", as_of_col="cutoff")
+            for recs in (deep, shallow)
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for df in plans:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CoGroup" not in plan
+        assert "Python" not in plan and "Pandas" not in plan
 
 
 try:
@@ -329,33 +476,32 @@ if _HAVE_HYPOTHESIS:
         from datetime import datetime, timedelta
 
         t0 = datetime(2026, 1, 1)
+        hours = st.integers(min_value=0, max_value=72)
+        maybe = lambda v: draw(st.sampled_from([v, v, v, None]))  # noqa: E731
         n_ent = draw(st.integers(min_value=1, max_value=5))
-        recs = []
-        rid = 0
+        recs, null_id_at = [], set()
         for e in range(n_ent):
             for _ in range(draw(st.integers(min_value=0, max_value=6))):
+                entity = maybe(f"e{e}")
+                ts = maybe(t0 + timedelta(hours=draw(hours)))
+                rid = maybe(f"r{len(recs):03d}")
+                if rid is None:  # one NULL id per (entity, ts): no ambiguity
+                    if (entity, ts) in null_id_at:
+                        rid = f"r{len(recs):03d}"
+                    null_id_at.add((entity, ts))
                 recs.append(
-                    (
-                        f"r{rid:03d}",
-                        f"e{e}",
-                        draw(st.integers(min_value=0, max_value=99)),
-                        t0 + timedelta(
-                            hours=draw(st.integers(min_value=0, max_value=72))
-                        ),
-                    )
+                    (rid, entity, draw(st.integers(0, 99)), ts)
                 )
-                rid += 1
         spine = [
             (
-                f"e{draw(st.integers(min_value=0, max_value=n_ent + 1))}",
-                t0 + timedelta(
-                    hours=draw(st.integers(min_value=0, max_value=72))
-                ),
+                maybe(f"e{draw(st.integers(min_value=0, max_value=n_ent + 1))}"),
+                maybe(t0 + timedelta(hours=draw(hours))),
             )
             for _ in range(draw(st.integers(min_value=1, max_value=6)))
         ]
         tol = draw(st.sampled_from([None, "12 hours", "48 hours"]))
-        return recs, spine, tol
+        how = draw(st.sampled_from(["left", "inner"]))
+        return recs, spine, tol, how
 
     @settings(
         max_examples=10,
@@ -364,32 +510,40 @@ if _HAVE_HYPOTHESIS:
     )
     @given(_pit_workload())
     def test_asof_strategies_agree_hypothesis(spark, case):
-        """Shrinking fuzz: the window form and the pandas merge_asof
-        form must emit identical rows on arbitrary workloads —
-        timestamp ties, entities beyond the record set, duplicate
-        spine rows, and tolerance bounds included."""
+        """Shrinking fuzz: the sorted form, the pandas merge_asof form
+        and a brute-force scan emit identical rows on arbitrary
+        workloads — timestamp ties, entities beyond the record set,
+        duplicate spine rows, NULL keys, instants, record ts and
+        tiebreakers, tolerance bounds and inner joins included."""
+        from datetime import datetime, timedelta
+
         from blackroad_feature_store_spark.operators.asof import (
             as_of_join,
             as_of_join_pandas,
         )
 
-        recs, spine_rows, tol = case
+        recs, spine_rows, tol, how = case
         records = spark.createDataFrame(
-            recs or [("r_none", "e_none", 0, __import__("datetime").datetime(2020, 1, 1))],
+            recs or [("r_none", "e_none", 0, datetime(2020, 1, 1))],
             "id string, entity string, val int, timestamp timestamp",
         )
         spine = spark.createDataFrame(
             spine_rows, "entity string, cutoff timestamp"
         )
         kw = {"tolerance": tol} if tol else {}
+        cols = ("entity", "cutoff", "id", "val", "timestamp")
+        key = lambda rows: sorted(map(tuple, rows), key=str)  # noqa: E731
+        tol_td = timedelta(hours=int(tol.split()[0])) if tol else None
+        want = key(brute_force_per_row(spine_rows, recs, tol_td, how))
         a = as_of_join(
             spine, records, on="entity", ts_col="timestamp",
-            as_of="cutoff", **kw,
-        ).select("entity", "cutoff", "id", "val")
+            as_of="cutoff", how=how, **kw,
+        ).select(*cols)
         b = as_of_join_pandas(
             spine, records, on="entity", as_of_col="cutoff",
             ts_col="timestamp", **kw,
-        ).select("entity", "cutoff", "id", "val")
-        ka = sorted(map(tuple, a.collect()), key=str)
-        kb = sorted(map(tuple, b.collect()), key=str)
-        assert ka == kb
+        ).select(*cols)
+        assert key(a.collect()) == want
+        assert key(
+            r for r in b.collect() if how == "left" or r[4] is not None
+        ) == want
