@@ -14,18 +14,28 @@ Global cutoff (``as_of`` a literal)::
 
 Per-row cutoff (``as_of`` a spine column)::
 
-    spine rows ∪ records                 -- tagged, one shuffle on the key
+    records left-semi spine keys         -- broadcast if spine is small
+    spine rows ∪ those records           -- tagged, one shuffle on the key
     sort per key by (instant, records before spine rows, tiebreakers)
     last(record struct, ignorenulls) over ROWS UNBOUNDED PRECEDING
 
 Scale notes (100 TB): the ts filter and key filters reach the scan via
 predicate pushdown + partition pruning (records are partitioned by
-group_id); each form shuffles once on the key columns, and AQE splits
-skewed keys. In the global form, when the spine is a small entity
-list, Spark's size estimate makes it the broadcast side automatically;
-we also expose ``broadcast_spine`` to force it. The per-row form is
-O((S+R) log) at any history depth: it never builds the (spine row,
-record) candidate-pair set and runs entirely in the JVM.
+group_id). In the global form, when the spine is a small entity list,
+Spark's size estimate makes it the broadcast side automatically; we
+also expose ``broadcast_spine`` to force it. The per-row form is
+O((S+R') log) at any history depth, R' being the records whose key is
+in the spine: it never builds the (spine row, record) candidate-pair
+set and runs entirely in the JVM. Trade-offs: every record of a
+spine key crosses the shuffle (the candidate-pair plan it replaced
+shuffled about one row per spine row per map partition), and the
+spine is read twice (its keys for the semi join, its rows for the
+union). A spine too large to broadcast, or one Spark cannot size
+(built from Python rows rather than a scan), makes the semi join a
+sort-merge join, a second shuffle of the records. A hot key's whole
+history and all its spine rows are sorted by one task; AQE splits
+skewed sort-merge-join partitions, not window partitions, so that
+task is not split.
 """
 
 from __future__ import annotations
@@ -160,6 +170,27 @@ def as_of_join(
     return s.join(latest, on=on_cols, how=how)
 
 
+def _per_row_payload(
+    spine: DataFrame,
+    records: DataFrame,
+    on_cols: list[str],
+    as_of_col: str,
+) -> list[str]:
+    """The record columns a per-row as-of join appends to each spine
+    row (all but the keys), after the checks both per-row forms share:
+    the spine has ``as_of_col`` and no payload name is a spine column.
+    """
+    if as_of_col not in spine.columns:
+        raise ValueError(f"spine has no column {as_of_col!r}")
+    payload = [c for c in records.columns if c not in on_cols]
+    overlap = set(payload) & set(spine.columns)
+    if overlap:
+        raise ValueError(
+            f"column collision between spine and records: {sorted(overlap)}"
+        )
+    return payload
+
+
 def _as_of_per_row(
     spine: DataFrame,
     records: DataFrame,
@@ -172,7 +203,8 @@ def _as_of_per_row(
 ) -> DataFrame:
     """The per-row as-of join as one sort-based plan.
 
-    Spine rows and records are tagged and unioned, shuffled once on the
+    Records are cut to the spine's keys by a left semi join; spine rows
+    and those records are then tagged and unioned, shuffled once on the
     key, and ordered per key by (instant, records before spine rows at
     equal instants, tiebreakers ascending). Each spine row then takes
     the last non-NULL record struct at or before it, so the winner is
@@ -191,14 +223,7 @@ def _as_of_per_row(
         raise ValueError(
             f"per-row as_of_join supports how=left|inner: {how!r}"
         )
-    if as_of_col not in spine.columns:
-        raise ValueError(f"spine has no column {as_of_col!r}")
-    payload = [c for c in records.columns if c not in on_cols]
-    overlap = set(payload) & set(spine.columns)
-    if overlap:
-        raise ValueError(
-            f"column collision between spine and records: {sorted(overlap)}"
-        )
+    payload = _per_row_payload(spine, records, on_cols, as_of_col)
     ties = [c for c in tiebreakers if c in records.columns]
     tie_types = [records.schema[c].dataType for c in ties]
     # NULL placeholders typed from the already-resolved schemas: no
@@ -214,20 +239,25 @@ def _as_of_per_row(
         F.struct(*spine.columns).alias("__s"),
         F.lit(None).cast(rec_t).alias("__r"),
     )
-    # NULL keys never match, and a NULL-ts record would sort first
-    # (nulls first) where every spine row of its key could pick it, so
-    # such records carry no payload. A spine row with a NULL instant
-    # sorts before every record that has a ts, so it never matches.
-    usable = F.col(ts_col).isNotNull()
-    for c in on_cols:
-        usable = usable & F.col(c).isNotNull()
-    tagged_records = records.select(
-        *on_cols,
-        F.col(ts_col).alias("__t"),
-        F.lit(0).alias("__side"),
-        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(ties)],
-        F.lit(None).cast(spine_t).alias("__s"),
-        F.when(usable, F.struct(*payload)).alias("__r"),
+    # Only records whose key some spine row has reach the shuffle: the
+    # semi join is a map-side broadcast probe when the spine is small
+    # (a micro-batch, an entity list), so a deep history is cut to the
+    # spine's keys before it is sorted. It also drops NULL keys, which
+    # never match. A NULL-ts record would sort first (nulls first)
+    # where every spine row of its key could pick it, so it is dropped
+    # too; a spine row with a NULL instant sorts before every record,
+    # so it never matches.
+    tagged_records = (
+        records.where(F.col(ts_col).isNotNull())
+        .join(spine.select(*on_cols), on_cols, "left_semi")
+        .select(
+            *on_cols,
+            F.col(ts_col).alias("__t"),
+            F.lit(0).alias("__side"),
+            *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(ties)],
+            F.lit(None).cast(spine_t).alias("__s"),
+            F.struct(*payload).alias("__r"),
+        )
     )
     w = (
         Window.partitionBy(*on_cols)
@@ -443,14 +473,7 @@ def as_of_join_pandas(
     import pandas as pd
 
     on_cols = [on] if isinstance(on, str) else list(on)
-    if as_of_col not in spine.columns:
-        raise ValueError(f"spine has no column {as_of_col!r}")
-    payload = [c for c in records.columns if c not in on_cols]
-    overlap = set(payload) & set(spine.columns)
-    if overlap:
-        raise ValueError(
-            f"column collision between spine and records: {sorted(overlap)}"
-        )
+    payload = _per_row_payload(spine, records, on_cols, as_of_col)
     spine_cols = list(spine.columns)
     out_schema = T.StructType(
         [spine.schema[c] for c in spine_cols]

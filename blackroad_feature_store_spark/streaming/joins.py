@@ -172,8 +172,9 @@ def start_pit_enrich_stream(
     """Start (or one-shot drain) the PIT enrichment stream: a live
     spine of events becomes point-in-time-correct training rows
     continuously. At 100 TB the per-batch cost is the batch as-of
-    join's — one sort of the batch's spine rows with the records per
-    key, no state held in Spark between batches."""
+    join's — the records are cut to the batch's keys by a broadcast
+    semi join, then sorted per key with the batch's spine rows; no
+    state is held in Spark between batches."""
     writer = (
         spine.writeStream.foreachBatch(
             lambda batch_df, batch_id: process_pit_enrich_batch(

@@ -400,6 +400,38 @@ def test_latest_as_of_forward_direction_brute_force(spark):
         latest_as_of(df, ["entity"], as_of=cutoff, direction="sideways")
 
 
+def test_per_row_as_of_join_cuts_records_to_small_spine_keys(spark):
+    """A small spine over a wide record set: the records are cut to the
+    spine's keys by a broadcast semi join before the shuffle, so the
+    other keys' histories never reach the sort."""
+    from datetime import datetime, timedelta
+
+    from blackroad_feature_store_spark.operators.asof import as_of_join
+
+    t0 = datetime(2026, 1, 1)
+    recs = spark.createDataFrame(
+        [
+            (e * 100 + i, f"e{e}", i, t0 + timedelta(hours=i))
+            for e in range(50)
+            for i in range(20)
+        ],
+        "id long, entity string, val int, timestamp timestamp",
+    )
+    # A VALUES relation, unlike a frame built from Python rows, carries
+    # a size estimate, as a parquet or micro-batch spine does.
+    spine = spark.sql(
+        "SELECT * FROM VALUES ('e3', TIMESTAMP'2026-01-01 05:00:00'), "
+        "('e7', TIMESTAMP'2025-12-31 23:00:00') AS s(entity, cutoff)"
+    )
+    df = as_of_join(
+        spine, recs, on="entity", ts_col="timestamp", as_of="cutoff"
+    )
+    assert sorted(map(tuple, df.select("entity", "id", "val").collect()),
+                  key=str) == [("e3", 305, 5), ("e7", None, None)]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+
+
 def test_as_of_join_auto_picks_and_matches(spark):
     """``as_of_join_auto`` must (a) return rows identical to
     ``as_of_join`` on deep and on shallow history, (b) start no Spark
