@@ -369,10 +369,17 @@ def fold_exact_substr_index(
     bit-for-bit (each document must arrive whole in one batch, the
     same contract every ingest gate here states)."""
     cols = ["__h", "__h2", "n", "keep_id", "keep_start"]
+    return fold_index_rows(
+        index.select(cols).unionByName(delta.select(cols))
+    )
+
+
+def fold_index_rows(rows: DataFrame) -> DataFrame:
+    """:func:`fold_exact_substr_index` over ANY number of index
+    partials at once: ``rows`` is their union-all, folded by one
+    aggregate (one shuffle however many partials)."""
     return (
-        index.select(cols)
-        .unionByName(delta.select(cols))
-        .groupBy("__h", "__h2")
+        rows.groupBy("__h", "__h2")
         .agg(
             F.sum("n").cast("long").alias("n"),
             F.min(F.struct("keep_id", "keep_start")).alias("__keep"),
@@ -400,11 +407,14 @@ def fold_exact_substr_counts(
     window seen, how often". Inputs may carry extra columns (a full
     witness index folds fine); the output never has them."""
     cols = ["__h", "__h2", "n"]
-    return (
-        index.select(cols)
-        .unionByName(delta.select(cols))
-        .groupBy("__h", "__h2")
-        .agg(F.sum("n").cast("long").alias("n"))
+    return fold_count_rows(index.select(cols).unionByName(delta.select(cols)))
+
+
+def fold_count_rows(rows: DataFrame) -> DataFrame:
+    """:func:`fold_exact_substr_counts` over the union-all of any
+    number of keeperless partials, in one aggregate."""
+    return rows.groupBy("__h", "__h2").agg(
+        F.sum("n").cast("long").alias("n")
     )
 
 

@@ -8220,10 +8220,8 @@ def stream_exec_exact_substr_compacted(
     compaction and the fold==recompute invariants are pytest-pinned
     (tests/test_exactsubstr_ingest.py)."""
     from blackroad_feature_store_spark.streaming.ingest import (
+        _index_store,
         exact_substr_ingest_batch,
-    )
-    from blackroad_feature_store_spark.streaming.stats import (
-        _compaction_floor,
     )
 
     docs = load(spark, sf, "documents").select("doc_id", "text")
@@ -8263,8 +8261,6 @@ def stream_exec_exact_substr_compacted(
     )
     q_.awaitTermination()
 
-    import glob as _glob
-
     # compaction engaged mid-stream: snapshot floor >= 1 and the
     # folded-away partials are retired — this certifies the query
     # exercised the compacted path, not the plain one
@@ -8272,9 +8268,10 @@ def stream_exec_exact_substr_compacted(
     # survive `python -O` (ADVICE r15 — asserts compile out under
     # PYTHONOPTIMIZE and the query would silently pass even if
     # compaction never engaged).
-    if _compaction_floor(idx_store) < 1:
+    store = _index_store(spark, idx_store)
+    if store.floor() < 1:
         raise AssertionError("compaction never ran")
-    n_live = len(_glob.glob(f"{idx_store}/batch_id=*"))
+    n_live = len(store.batch_ids())
     if n_live > 2:
         raise AssertionError(
             f"compaction did not retire folded partials: {n_live} "

@@ -1,6 +1,8 @@
-"""Filesystem access for the ExactSubstr maintained-index store —
+"""Filesystem access for every batch-partial store
+(`streaming/partials.py`) and the ExactSubstr arrival-gate sidecars —
 plain OS paths AND scheme'd URIs (``hdfs://``, ``s3a://``,
-``file://``, ``viewfs://``…).
+``file://``, ``viewfs://``…). It is the only place under
+``streaming/`` that reads, writes or deletes store metadata.
 
 The store layout (per-batch ``batch_id=N`` partials, ``_maxid/b=N``
 arrival-gate sidecars, a ``_compaction.json`` floor marker, and
@@ -98,14 +100,24 @@ class LocalStoreFS:
             for p in _glob.glob(os.path.join(dirpath, f"{key}=*"))
         }
 
+    def names(self, dirpath: str) -> list[str]:
+        """Names of ``dirpath``'s children; empty when it is gone."""
+        try:
+            return os.listdir(dirpath)
+        except FileNotFoundError:
+            return []
+
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
 
     def read_json(self, path: str) -> dict | None:
+        """None when ``path`` does not exist; an unreadable or corrupt
+        file raises (a store must not read a damaged marker as "never
+        compacted")."""
         try:
             with open(path) as f:
                 return json.load(f)
-        except (OSError, ValueError):
+        except FileNotFoundError:
             return None
 
     def write_json_atomic(self, path: str, obj: dict) -> None:
@@ -198,6 +210,13 @@ class HadoopStoreFS:
                 continue
         return out
 
+    def names(self, dirpath: str) -> list[str]:
+        fs = self._fs(dirpath)
+        p = self._path(dirpath)
+        if not fs.exists(p):
+            return []
+        return [st.getPath().getName() for st in fs.listStatus(p)]
+
     def exists(self, path: str) -> bool:
         return bool(self._fs(path).exists(self._path(path)))
 
@@ -218,12 +237,9 @@ class HadoopStoreFS:
             out.close()
 
     def read_json(self, path: str) -> dict | None:
-        try:
-            if not self.exists(path):
-                return None
-            return json.loads(self._read_bytes(path).decode("utf-8"))
-        except ValueError:
+        if not self.exists(path):
             return None
+        return json.loads(self._read_bytes(path).decode("utf-8"))
 
     def write_json_atomic(self, path: str, obj: dict) -> None:
         """Write-to-tmp + ``FileContext.rename(OVERWRITE)`` — the HDFS

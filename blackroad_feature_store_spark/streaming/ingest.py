@@ -16,7 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blackroad_feature_store_spark.operators.exactsubstr import (
+    fold_count_rows,
+    fold_index_rows,
+)
 from blackroad_feature_store_spark.store import FeatureStore, FREQ_STREAMING
+from blackroad_feature_store_spark.streaming.partials import (
+    Monoid,
+    PartialStore,
+)
 
 
 def records_stream(
@@ -231,6 +239,36 @@ def materialize_windowed_features(
     return writer.start()
 
 
+# The ExactSubstr index: per window-hash pair, counts add and the
+# keeper witness is the struct-min (``fold_exact_substr_index``).
+INDEX = Monoid(fold=fold_index_rows, kind="exact_substr_index")
+# The KEEPERLESS rewrite tier (``witness=False`` compaction): counts
+# only — batch partials are projected to (__h, __h2, n) so they union
+# with the keeperless snapshot. Both tiers fold one store kind; the
+# marker's sticky ``witness`` names the tier.
+INDEX_COUNTS = Monoid(
+    fold=fold_count_rows,
+    kind="exact_substr_index",
+    lift=lambda p: p.select("__h", "__h2", "n"),
+)
+
+
+def _index_store(spark, idx_store: str, witness: bool = True):
+    """The index's partial store: partials at ``idx_store/batch_id=N``
+    (no ``batches/`` level — the layout predates the shared store),
+    folding under the tier the store was compacted to."""
+    return PartialStore(
+        spark, idx_store, INDEX if witness else INDEX_COUNTS, batches=""
+    )
+
+
+def _witness(marker: dict) -> bool:
+    """The store's sticky tier, recorded in the compaction marker
+    (absent — never compacted, or a pre-tier marker — means the full
+    keeper-witness index)."""
+    return bool(marker.get("witness", True))
+
+
 def fold_exact_substr_partials(
     spark,
     idx_store: str,
@@ -238,8 +276,10 @@ def fold_exact_substr_partials(
 ) -> DataFrame | None:
     """Fold persisted per-batch ExactSubstr index partials (laid out
     as ``idx_store/batch_id=N``, one directory per committed
-    micro-batch) into a single history index via
-    :func:`~blackroad_feature_store_spark.operators.exactsubstr.fold_exact_substr_index`.
+    micro-batch) into a single history index — one union-all folded
+    by one aggregate (``fold_index_rows``), equal to any chain of
+    :func:`~blackroad_feature_store_spark.operators.exactsubstr.fold_exact_substr_index`
+    calls by associativity.
 
     ``before_batch_id`` bounds history to partials with parsed batch
     id STRICTLY BELOW it — the replay-safety contract (ADVICE r13
@@ -253,10 +293,9 @@ def fold_exact_substr_partials(
     index rows carry no L; the caller owns the contract that every
     partial under one ``idx_store`` was built at ONE L (mixing Ls
     would fold apples into oranges silently — keep stores per-L).
-    ``idx_store`` may be a plain OS path (os-level glob discovery,
-    zero JVM calls) or a scheme'd URI (``hdfs://``, ``s3a://``,
-    ``file://``… — discovery through the Hadoop FileSystem API; see
-    ``streaming/fsio.py``; VERDICT r15 ask #5).
+    ``idx_store`` may be a plain OS path or a scheme'd URI
+    (``hdfs://``, ``s3a://``, ``file://``…); the store protocol is
+    `streaming/partials.py`'s.
 
     Compaction-aware (VERDICT r14 ask #5): when the store carries a
     compaction floor (:func:`compact_exact_substr_partials`), the
@@ -272,14 +311,8 @@ def fold_exact_substr_partials(
     compaction) makes the returned history keeperless too — exact for
     the rewrite/spans consumers, see
     :func:`~blackroad_feature_store_spark.operators.exactsubstr.exact_substr_rewrite_tier`."""
-    from blackroad_feature_store_spark.operators.exactsubstr import (
-        fold_exact_substr_counts,
-        fold_exact_substr_index,
-    )
-    from blackroad_feature_store_spark.streaming.fsio import store_fs
-
-    fs = store_fs(idx_store, spark)
-    floor, _ = _floor_and_witness(fs, idx_store)
+    marker = _index_store(spark, idx_store).marker()
+    floor = int(marker.get("floor", -1))
     if (
         before_batch_id is not None
         and floor >= 0
@@ -292,24 +325,9 @@ def fold_exact_substr_partials(
             "compact_exact_substr_partials must only ever be given "
             "checkpoint-committed batches (upto <= current - 1)"
         )
-    hist: DataFrame | None = None
-    if floor >= 0:
-        hist = spark.read.parquet(
-            f"{idx_store}/compacted/floor={floor}"
-        )
-    keeperless = hist is not None and "keep_id" not in hist.columns
-    fold = fold_exact_substr_counts if keeperless else fold_exact_substr_index
-    parts = fs.child_ids(idx_store, "batch_id")
-    for pid in sorted(parts):
-        if pid <= floor:
-            continue  # already inside the compacted snapshot
-        if before_batch_id is not None and pid >= before_batch_id:
-            continue
-        part = spark.read.parquet(parts[pid])
-        if keeperless:
-            part = part.select("__h", "__h2", "n")
-        hist = part if hist is None else fold(hist, part)
-    return hist
+    return _index_store(spark, idx_store, _witness(marker)).merged(
+        below=before_batch_id, empty_ok=True
+    )
 
 
 def compact_exact_substr_partials(
@@ -326,11 +344,8 @@ def compact_exact_substr_partials(
     one per batch ever ingested (VERDICT r14 ask #5: at 100 TB the
     index is a several-x-corpus-size distributed table; an O(batches)
     re-fold per micro-batch is the part that doesn't survive).
-
-    Same crash-safe protocol as ``streaming/quality.py::
-    compact_seen_keys``: write the new snapshot, atomically flip the
-    floor marker (the single commit point), best-effort cleanup — a
-    crash on either side of the flip leaves a correct store.
+    The crash-safe protocol (snapshot write, marker flip, best-effort
+    cleanup) is `streaming/partials.py`'s.
 
     CONTRACT — committed batches only: per-batch attribution is gone
     after the fold, so a batch folded into the snapshot can never be
@@ -355,54 +370,44 @@ def compact_exact_substr_partials(
 
     The ``_maxid`` arrival-gate sidecars are NEVER retired: they are
     a few bytes per batch and the monotone-arrival gate reads them
-    independently of the fold.
-
-    ``idx_store`` may be a plain OS path or a scheme'd URI — on a
-    remote filesystem the marker flip uses
-    ``FileContext.rename(OVERWRITE)`` (atomic on HDFS) and retirement
-    goes through the Hadoop FS API (``streaming/fsio.py``)."""
-    from blackroad_feature_store_spark.operators.exactsubstr import (
-        fold_exact_substr_counts,
-        fold_exact_substr_index,
+    independently of the fold."""
+    store = _index_store(spark, idx_store, witness)
+    marker = store.marker()
+    if "floor" in marker and _witness(marker) != witness:
+        raise ValueError(
+            f"compact_exact_substr_partials: store was compacted "
+            f"with witness={_witness(marker)}, got witness={witness} "
+            "— the tier choice is sticky per store (a mixed store "
+            "would carry keeper witnesses for only part of "
+            "history, silently wrong for keeper queries)"
+        )
+    store.compact(
+        upto_batch_id,
+        marker={"witness": bool(witness)},
+        before_retire=lambda folded: _synthesize_sidecars(
+            store.fs, idx_store, folded
+        ),
     )
-    from blackroad_feature_store_spark.streaming.fsio import store_fs
-    from blackroad_feature_store_spark.streaming.stats import _MARKER
 
-    fs = store_fs(idx_store, spark)
-    floor, prev_witness = _floor_and_witness(fs, idx_store)
-    if floor >= 0:
-        if prev_witness != witness:
-            raise ValueError(
-                f"compact_exact_substr_partials: store was compacted "
-                f"with witness={prev_witness}, got witness={witness} "
-                "— the tier choice is sticky per store (a mixed store "
-                "would carry keeper witnesses for only part of "
-                "history, silently wrong for keeper queries)"
-            )
-    parts = fs.child_ids(idx_store, "batch_id")
-    to_fold_ids = sorted(
-        b for b in parts if floor < b <= int(upto_batch_id)
-    )
-    if not to_fold_ids:
-        return
-    upto = to_fold_ids[-1]
-    # Legacy pre-sidecar batches (ADVICE r15): retiring a partial
-    # destroys its keep_id footers, and a KEEPERLESS (witness=False)
-    # snapshot carries no keep_id either — the monotone-arrival
-    # tripwire would go silently dark for every such batch. Before
-    # retiring, synthesize the missing ``_maxid`` sidecar from the
-    # partial's keep_id footer max (keeper ids are genuinely ingested
-    # ids, so this is a conservative lower bound — exactly the legacy
-    # gate's strength, never a false trip). Done in BOTH witness
-    # modes so the invariant "every retired batch is sidecar-covered"
-    # holds uniformly; a partial with no readable keep_id stats warns
-    # loudly instead of silently weakening the gate.
+
+def _synthesize_sidecars(fs, idx_store: str, folded: dict) -> None:
+    """Legacy pre-sidecar batches (ADVICE r15): retiring a partial
+    destroys its keep_id footers, and a KEEPERLESS (witness=False)
+    snapshot carries no keep_id either — the monotone-arrival
+    tripwire would go silently dark for every such batch. Before
+    retiring, synthesize the missing ``_maxid`` sidecar from the
+    partial's keep_id footer max (keeper ids are genuinely ingested
+    ids, so this is a conservative lower bound — exactly the legacy
+    gate's strength, never a false trip). Done in BOTH witness modes
+    so the invariant "every retired batch is sidecar-covered" holds
+    uniformly; a partial with no readable keep_id stats warns loudly
+    instead of silently weakening the gate."""
     import warnings as _warnings
 
-    for b in to_fold_ids:
+    for b in sorted(folded):
         if fs.exists(f"{_sidecar_dir(idx_store)}/b={b}"):
             continue
-        keep_max = fs.col_max(parts[b], "keep_id")
+        keep_max = fs.col_max(folded[b], "keep_id")
         if keep_max is not None:
             fs.write_sidecar(
                 f"{_sidecar_dir(idx_store)}/b={b}", b, int(keep_max)
@@ -414,44 +419,8 @@ def compact_exact_substr_partials(
                 "after retirement the monotone-arrival gate cannot "
                 "bound this batch's ingested ids",
                 RuntimeWarning,
-                stacklevel=2,
+                stacklevel=5,
             )
-    fold = fold_exact_substr_index if witness else fold_exact_substr_counts
-    hist: DataFrame | None = None
-    if floor >= 0:
-        hist = spark.read.parquet(f"{idx_store}/compacted/floor={floor}")
-    for b in to_fold_ids:
-        part = spark.read.parquet(parts[b])
-        if not witness:
-            part = part.select("__h", "__h2", "n")
-        hist = part if hist is None else fold(hist, part)
-    hist.write.mode("overwrite").parquet(
-        f"{idx_store}/compacted/floor={upto}"
-    )
-    # the commit point: marker carries the floor AND the tier choice
-    fs.write_json_atomic(
-        f"{idx_store}/{_MARKER}",
-        {"floor": int(upto), "witness": bool(witness)},
-    )
-    # -- best-effort cleanup; correctness never depends on it --
-    for b in to_fold_ids:
-        fs.delete(parts[b])
-    if floor >= 0:
-        fs.delete(f"{idx_store}/compacted/floor={floor}")
-
-
-def _floor_and_witness(fs, idx_store: str) -> tuple[int, bool]:
-    """(compaction floor, sticky witness mode) from the store's
-    ``_compaction.json`` marker; (-1, True) when absent/corrupt —
-    the same semantics as ``streaming/stats.py::_compaction_floor``
-    but routed through the store's filesystem (local or Hadoop)."""
-    from blackroad_feature_store_spark.streaming.stats import _MARKER
-
-    m = fs.read_json(f"{idx_store}/{_MARKER}")
-    try:
-        return int(m["floor"]), bool(m.get("witness", True))
-    except (TypeError, ValueError, KeyError):
-        return -1, True
 
 
 def _sidecar_dir(idx_store: str) -> str:
@@ -483,13 +452,12 @@ def _history_max_ingested_id(
        the sidecar (weaker: per-window minima — kept only so upgraded
        stores retain the old tripwire's strength for old batches).
     """
-    from blackroad_feature_store_spark.streaming.fsio import store_fs
-
-    fs = store_fs(idx_store, spark)
+    store = _index_store(spark, idx_store)
+    fs = store.fs
     hi, covered = fs.sidecar_scan(
         _sidecar_dir(idx_store), int(before_batch_id)
     )
-    for bid, p in fs.child_ids(idx_store, "batch_id").items():
+    for bid, p in store.batch_ids().items():
         if bid >= before_batch_id or bid in covered:
             continue
         m = fs.col_max(p, "keep_id")
@@ -505,9 +473,9 @@ def _history_max_ingested_id(
     # sidecar per batch, and compact_exact_substr_partials
     # synthesizes one from keep_id footers before retiring any legacy
     # pre-sidecar batch (ADVICE r15; warns if neither exists).
-    floor, _ = _floor_and_witness(fs, idx_store)
+    floor = store.floor()
     if floor >= 0 and floor < before_batch_id:
-        m = fs.col_max(f"{idx_store}/compacted/floor={floor}", "keep_id")
+        m = fs.col_max(store.snapshot_path(floor), "keep_id")
         if m is not None:
             hi = m if hi is None or m > hi else hi
     return hi
@@ -576,10 +544,8 @@ def exact_substr_ingest_batch(
         exact_substr_index,
     )
 
-    from blackroad_feature_store_spark.streaming.fsio import store_fs
-
     sp = batch_df.sparkSession
-    fs = store_fs(idx_store, sp)
+    store = _index_store(sp, idx_store)
     # One scalar agg gives both ends of the batch's id range: the min
     # feeds the arrival gate, the max becomes the batch's sidecar.
     lo, batch_max = batch_df.agg(
@@ -621,16 +587,14 @@ def exact_substr_ingest_batch(
     rewritten.write.mode("overwrite").parquet(
         f"{out_store}/batch_id={int(batch_id)}"
     )
-    delta.write.mode("overwrite").parquet(
-        f"{idx_store}/batch_id={int(batch_id)}"
-    )
+    store.write(delta, batch_id)
     if batch_max is not None:
         # Sidecar LAST: it only ever describes a fully-landed delta
         # (foreachBatch commits the checkpoint after this returns, so
         # a crash anywhere above replays the whole batch and
         # overwrites all three writes deterministically). Never a
         # Spark job: pyarrow locally, one Hadoop stream remotely.
-        fs.write_sidecar(
+        store.fs.write_sidecar(
             f"{_sidecar_dir(idx_store)}/b={int(batch_id)}",
             int(batch_id),
             int(batch_max),

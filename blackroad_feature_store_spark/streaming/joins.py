@@ -140,8 +140,8 @@ def process_pit_enrich_batch(
     two."""
     from blackroad_feature_store_spark.operators.asof import as_of_join
 
-    from blackroad_feature_store_spark.streaming.stats import (
-        _write_batch_partition,
+    from blackroad_feature_store_spark.streaming.partials import (
+        write_batch_partition,
     )
 
     enriched = as_of_join(
@@ -154,7 +154,7 @@ def process_pit_enrich_batch(
         how="left",
         tolerance=tolerance,
     )
-    _write_batch_partition(enriched, batch_id, out_path)
+    write_batch_partition(enriched, batch_id, out_path)
 
 
 def start_pit_enrich_stream(

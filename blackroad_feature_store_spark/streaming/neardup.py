@@ -13,9 +13,9 @@ outputs append as parquet partitions keyed by `batch_id`:
   how many documents have ever streamed through — the property that
   makes this runnable forever (the signature store grows, but only
   its colliding buckets are ever touched via the equi-join);
-- idempotent under micro-batch replay: a batch writes its own
-  `batch_id=` partition with dynamic partition overwrite, and the
-  existing-signature read EXCLUDES the current batch id, so a failed
+- idempotent under micro-batch replay: a batch overwrites its own
+  `batch_id=` partition, and the existing-signature read (a
+  `streaming/partials.py` store) EXCLUDES the current batch id, so a failed
   attempt's leftovers are both invisible to the retry and overwritten
   by it (the standard foreachBatch exactly-once recipe);
 - unlike `dropDuplicatesWithinWatermark` there is no state-store
@@ -28,41 +28,21 @@ outputs append as parquet partitions keyed by `batch_id`:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from blackroad_feature_store_spark.operators.dedup import (
     incremental_candidate_pairs,
 )
+from blackroad_feature_store_spark.streaming.partials import (
+    Monoid,
+    PartialStore,
+    write_batch_partition,
+)
 
-_SIG_SCHEMA = "band int, sig string, batch_id long"
-
-
-def _existing_sigs(
-    spark: SparkSession, sig_path: str, id_col: str, before_batch: int
-) -> DataFrame:
-    """All signatures from batches strictly before `before_batch`;
-    schema-stable empty frame when the store doesn't exist yet.
-
-    Only a missing store maps to "empty seen-set": the except is
-    limited to PATH_NOT_FOUND. A corrupt or transiently unreadable
-    signature store must FAIL the micro-batch (it would otherwise be
-    silently treated as empty and permanently miss every cross-batch
-    pair); foreachBatch replay then retries the batch against the
-    intact store.
-    """
-    try:
-        sigs = spark.read.parquet(sig_path)
-    except AnalysisException as exc:  # first batch: no store yet
-        msg = str(exc)
-        if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
-            raise
-        return spark.createDataFrame(
-            [], f"{id_col} long, {_SIG_SCHEMA}"
-        ).drop("batch_id")
-    return sigs.where(F.col("batch_id") < before_batch).drop("batch_id")
+# The signature store is a bag: its fold is union-all itself, so a
+# live read is the plain union of the batches before the current one.
+_SIGNATURES = Monoid(fold=lambda sigs: sigs, kind="signatures")
 
 
 def process_neardup_batch(
@@ -87,7 +67,17 @@ def process_neardup_batch(
     on every batch of every neardup stream."""
     spark = batch_df.sparkSession
     batch = batch_df.select(id_col, text_col)
-    existing = _existing_sigs(spark, sig_path, id_col, batch_id)
+    # Only a store that does not exist yet reads as the empty seen-set;
+    # an unreadable partial fails the micro-batch (silently reading it
+    # as empty would permanently miss every cross-batch pair), and
+    # foreachBatch replay retries against the intact store.
+    existing = PartialStore(
+        spark, sig_path, _SIGNATURES, batches=""
+    ).live(below=batch_id)
+    if existing is None:
+        existing = spark.createDataFrame(
+            [], f"{id_col} long, band int, sig string"
+        )
     # materialize_sigs: the batch is shingled/hashed ONCE (the pairs
     # plan references the signatures three times and the sig-store
     # write is a fourth action over the same lineage)
@@ -100,14 +90,10 @@ def process_neardup_batch(
         shingle_size=shingle_size,
         materialize_sigs=True,
     )
-    from blackroad_feature_store_spark.streaming.stats import (
-        _write_batch_partition,
-    )
-
     # sig write FIRST: it materializes the lazily-checkpointed batch
     # signatures, so the pairs write reads persisted blocks
-    _write_batch_partition(new_sigs, batch_id, sig_path)
-    _write_batch_partition(pairs, batch_id, pairs_path)
+    write_batch_partition(new_sigs, batch_id, sig_path)
+    write_batch_partition(pairs, batch_id, pairs_path)
 
 
 def start_neardup_stream(

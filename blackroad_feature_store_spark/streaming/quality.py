@@ -4,12 +4,13 @@ micro-batch lands its own (check, target, total, violations) partial
 in a batch_id partition, and the current verdict over everything
 ingested so far is a monoid fold, never a rescan of history.
 
-Shares the ENTIRE store machinery of `streaming/stats.py` — dynamic
-partition overwrite makes foreachBatch replay idempotent,
-:func:`~blackroad_feature_store_spark.streaming.stats.compact_stats`
-folds committed prefixes behind the atomic marker (the `_fold`
-dispatcher recognizes the expectation schema), and the same
-read-consistency caveat applies.
+Every gate here lands its partials in a `streaming/partials.py`
+store — per-batch partition overwrite makes foreachBatch replay
+idempotent, ``PartialStore(spark, out_path,
+EXPECTATION_COUNTS).compact(upto)`` folds committed prefixes behind
+the atomic marker, and the same read-consistency caveat applies. The
+unique gate's seen keys are a second store under ``<out_path>/seen``
+(``FIRST_SEEN``; :func:`compact_seen_keys`).
 
 MERGEABILITY is the contract, and it bounds the check catalog:
 
@@ -35,7 +36,6 @@ MERGEABILITY is the contract, and it bounds the check catalog:
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,9 +45,10 @@ from pyspark.sql.streaming import StreamingQuery
 from blackroad_feature_store_spark.operators.expectations import (
     check_expectations,
 )
-from blackroad_feature_store_spark.streaming.stats import (
-    _fold,
-    _live_partials,
+from blackroad_feature_store_spark.streaming.partials import (
+    Monoid,
+    PartialStore,
+    keyed_fold,
 )
 
 
@@ -64,33 +65,15 @@ def _validate_streaming_checks(checks: list[dict[str, Any]]) -> None:
             )
 
 
-def _overwrite_batch_partition(
-    df: DataFrame, batch_id: int, path: str
-) -> None:
-    """Write ``df`` into ``path``'s batch_id partition by overwriting
-    that DIRECTORY directly — a foreachBatch replay of the same
-    batch_id replaces rather than double-counts (the store-wide
-    idempotence contract of `streaming/stats.py`), every other
-    batch's partition is untouched, and readers see the identical
-    partition-discovered layout. r17: was a dynamic partition
-    overwrite, which paid a staging commit + partition resolution +
-    two conf round-trips per batch for a target partition that is
-    known statically."""
-    from blackroad_feature_store_spark.streaming.stats import (
-        _write_batch_partition,
-    )
-
-    _write_batch_partition(df, batch_id, path)
-
-
-def _land_partial(
-    partial: DataFrame, batch_id: int, out_path: str
-) -> None:
-    """Land one batch's (check, target, total, violations) partial in
-    its own replay-idempotent batch_id partition."""
-    _overwrite_batch_partition(
-        partial, batch_id, os.path.join(out_path, "batches")
-    )
+# Expectation counts, for every gate here: per (check, target), totals
+# and violations add.
+EXPECTATION_COUNTS = Monoid(
+    fold=keyed_fold(
+        total=lambda c: F.sum(c).cast("long"),
+        violations=lambda c: F.sum(c).cast("long"),
+    ),
+    kind="expectation_counts",
+)
 
 
 def process_expectations_batch(
@@ -108,11 +91,9 @@ def process_expectations_batch(
     coalesce, see ``check_expectations``), which fold to exactly the
     verdict the old skip produced."""
     _validate_streaming_checks(checks)
-    _land_partial(
-        check_expectations(batch_df, checks).drop("passed"),
-        batch_id,
-        out_path,
-    )
+    PartialStore(
+        batch_df.sparkSession, out_path, EXPECTATION_COUNTS
+    ).write(check_expectations(batch_df, checks).drop("passed"), batch_id)
 
 
 def merge_expectations(spark: SparkSession, out_path: str) -> DataFrame:
@@ -122,7 +103,7 @@ def merge_expectations(spark: SparkSession, out_path: str) -> DataFrame:
     check catalog this equals a batch `check_expectations` over the
     union of all batches, exactly (integer counts — hash-certified by
     the catalog query)."""
-    return _fold(_live_partials(spark, out_path)).select(
+    return PartialStore(spark, out_path, EXPECTATION_COUNTS).merged().select(
         "check",
         "target",
         "total",
@@ -147,8 +128,8 @@ def process_unique_gate_batch(
     count(distinct key)``. The batch's newly-seen keys then extend
     the store in their own batch_id partition.
 
-    Replay idempotence needs BOTH writes to be safe: the partial is a
-    dynamic partition overwrite as usual, and the seen-store read
+    Replay idempotence needs BOTH writes to be safe: the partial
+    overwrites its own partition as usual, and the seen-store read
     filters to ``batch_id < current`` — a crashed attempt's own
     partition (from either write order) is invisible to its replay,
     which therefore recomputes the identical partial. State is
@@ -177,9 +158,11 @@ def process_unique_gate_batch(
         .agg(F.count(F.lit(1)).alias("__n"))
         .localCheckpoint(eager=False)
     )
-    seen = _live_seen_keys(
-        spark, os.path.join(out_path, "seen"), below_batch=batch_id
-    )
+    seen_store = _seen_store(spark, out_path)
+    seen = seen_store.live(below=batch_id)
+    if seen is not None:
+        # strict bound on compacted keys too (see FIRST_SEEN)
+        seen = seen.where(F.col("first_batch") < batch_id).select("key")
     new_keys = (
         counts.join(seen, "key", "left_anti")
         if seen is not None
@@ -205,85 +188,46 @@ def process_unique_gate_batch(
             .alias("violations"),
         )
     )
-    _land_partial(partial, batch_id, out_path)
-    _overwrite_batch_partition(
-        new_keys.select("key"),
-        batch_id,
-        os.path.join(out_path, "seen", "batches"),
+    PartialStore(spark, out_path, EXPECTATION_COUNTS).write(
+        partial, batch_id
     )
+    seen_store.write(new_keys.select("key"), batch_id)
 
 
-def _read_compacted_fold(
-    spark: SparkSession, seen_path: str, floor: int
-) -> DataFrame:
-    """The compacted seen-key fold at ``floor``, normalized to
-    (key, first_batch). Folds written before the first-seen column
-    existed (pre-``first_batch`` stores) carry only ``key``; their
-    keys are treated as ``first_batch = -1`` — first seen before every
-    real batch — which reproduces the legacy fold's visible-to-every-
-    replay behavior instead of throwing AnalysisException on upgrade."""
-    # Read the live floor DIRECTORY directly, not the parent + filter:
-    # cleanup of retired floors is best-effort, so a stale fold with
-    # the other schema generation can coexist — parent-dir schema
-    # inference could then sample the WRONG generation's files and
-    # either drop the live fold's first_batch (keys read as legacy)
-    # or project NULL first_batch onto legacy files (keys silently
-    # filtered out by the strict replay bound). A direct path makes
-    # inference see only the live fold.
-    fold = spark.read.parquet(
-        os.path.join(seen_path, "compacted", f"floor={int(floor)}")
-    )
+def _restore_first_seen(fold: DataFrame) -> DataFrame:
+    """The compacted seen-key fold, normalized to (key, first_batch).
+    Folds written before the first-seen column existed
+    (pre-``first_batch`` stores) carry only ``key``; their keys are
+    treated as ``first_batch = -1`` — first seen before every real
+    batch — which reproduces the legacy fold's visible-to-every-replay
+    behavior instead of throwing AnalysisException on upgrade. The
+    store reads the live floor DIRECTORY, so a stale fold of the other
+    generation cannot leak into this inference."""
     if "first_batch" not in fold.columns:
-        fold = fold.withColumn(
-            "first_batch", F.lit(-1).cast("long")
-        )
+        fold = fold.withColumn("first_batch", F.lit(-1).cast("long"))
     return fold.select("key", "first_batch")
 
 
-def _live_seen_keys(
-    spark: SparkSession, seen_path: str, below_batch: int
-) -> DataFrame | None:
-    """Every key first seen in a batch STRICTLY BELOW ``below_batch``:
-    the compacted fold at the marker's floor (covers batch_id <=
-    floor) plus live batch partitions in (floor, below_batch). The
-    strict bound is the replay-idempotence contract — a crashed
-    attempt's own partition is invisible to its replay. Returns None
-    when no key has been landed yet (first batch)."""
-    from blackroad_feature_store_spark.streaming.stats import (
-        _compaction_floor,
-    )
+# First-seen, for the unique gate's seen keys: a batch partial's keys
+# were first seen in its batch_id; the fold is set-union on keys with
+# the earliest sighting winning (min first_batch). The compacted fold
+# thereby keeps each key's first-seen batch, so the gate's strict
+# ``first_batch < current`` replay bound survives compaction: even if
+# a crashed, checkpoint-uncommitted batch was folded (the clamp sees
+# committed writes, not the checkpoint), its keys stay invisible to that batch's
+# own replay.
+FIRST_SEEN = Monoid(
+    fold=keyed_fold(first_batch=F.min),
+    kind="first_seen",
+    lift=lambda keys: keys.select(
+        "key", F.col("batch_id").cast("long").alias("first_batch")
+    ),
+    restore=_restore_first_seen,
+)
 
-    floor = _compaction_floor(seen_path)
-    parts: list[DataFrame] = []
-    try:
-        parts.append(
-            spark.read.parquet(os.path.join(seen_path, "batches"))
-            .where(
-                (F.col("batch_id") > floor)
-                & (F.col("batch_id") < below_batch)
-            )
-            .select("key")
-        )
-    except Exception:  # noqa: BLE001 — no batch partition yet
-        pass
-    if floor >= 0:
-        # The compacted fold keeps each key's FIRST-SEEN batch_id, so
-        # the strict `< below_batch` replay bound survives compaction:
-        # even if a crashed, checkpoint-uncommitted batch was folded
-        # (the clamp in compact_seen_keys cannot distinguish landed
-        # from committed), its keys carry its batch_id and stay
-        # invisible to that batch's own replay.
-        parts.append(
-            _read_compacted_fold(spark, seen_path, floor)
-            .where(F.col("first_batch") < below_batch)
-            .select("key")
-        )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+def _seen_store(spark: SparkSession, out_path: str) -> PartialStore:
+    return PartialStore(spark, f"{out_path}/seen", FIRST_SEEN)
 
 
 def compact_seen_keys(
@@ -294,68 +238,13 @@ def compact_seen_keys(
     into ONE distinct-key partition and retire the originals — the
     maintenance valve that keeps the per-batch anti-join reading
     O(1 + recent batches) parquet partitions instead of one per batch
-    ever processed. Set-union is the fold monoid, so this is
-    `streaming/stats.py::compact_stats`' protocol verbatim: write the
-    new ``compacted/floor=<upto>`` directory, atomically flip the
-    marker (the single commit point), best-effort cleanup; a crash on
-    either side of the flip leaves a correct store. ``upto_batch`` is
-    clamped to the newest landed batch_id — which can include a
-    crashed, checkpoint-UNCOMMITTED batch, so the fold persists each
-    key's first-seen ``batch_id`` (min across occurrences): the
-    per-batch read keeps its strict ``batch_id < current`` replay
-    bound over compacted keys too, and folding an uncommitted batch
-    is harmless rather than a docstring-only contract."""
-    from blackroad_feature_store_spark.streaming.stats import (
-        _compaction_floor,
-        _write_compaction_floor,
-    )
-
-    seen_path = os.path.join(out_path, "seen")
-    floor = _compaction_floor(seen_path)
-    if upto_batch <= floor:
-        return
-    batches_dir = os.path.join(seen_path, "batches")
-    try:
-        batches = spark.read.parquet(batches_dir)
-        newest = batches.agg(F.max("batch_id")).first()[0]
-    except Exception:  # noqa: BLE001 — nothing landed above the floor
-        newest = None
-    if newest is None or newest <= floor:
-        return
-    upto_batch = min(int(upto_batch), int(newest))  # the clamp
-    to_fold = batches.where(
-        (F.col("batch_id") > floor) & (F.col("batch_id") <= upto_batch)
-    ).select("key", F.col("batch_id").cast("long").alias("first_batch"))
-    if floor >= 0:
-        to_fold = to_fold.unionByName(
-            _read_compacted_fold(spark, seen_path, floor)
-        )
-    # min(first_batch) is the fold monoid on the (key -> first batch)
-    # map: set-union on keys, earliest sighting wins — matches the
-    # live store's first-seen-wins semantics exactly.
-    to_fold.groupBy("key").agg(
-        F.min("first_batch").alias("first_batch")
-    ).write.mode("overwrite").parquet(
-        os.path.join(seen_path, "compacted", f"floor={int(upto_batch)}")
-    )
-    _write_compaction_floor(seen_path, upto_batch)  # the commit point
-    # -- best-effort cleanup; correctness never depends on it --
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    retired = [
-        os.path.join(batches_dir, f"batch_id={b}")
-        for b in range(floor + 1, upto_batch + 1)
-    ]
-    if floor >= 0:
-        retired.append(
-            os.path.join(seen_path, "compacted", f"floor={floor}")
-        )
-    for sub in retired:
-        try:
-            p = jvm.org.apache.hadoop.fs.Path(sub)
-            p.getFileSystem(conf).delete(p, True)
-        except Exception:  # noqa: BLE001
-            pass
+    ever processed. The `streaming/partials.py` protocol under the
+    ``FIRST_SEEN`` monoid: crash-safe on either side of the marker
+    flip, and ``upto_batch`` clamped to the newest committed batch
+    write — which can include a crashed, checkpoint-UNCOMMITTED batch; the
+    fold's per-key first-seen ``batch_id`` makes folding it harmless
+    rather than a docstring-only contract."""
+    _seen_store(spark, out_path).compact(upto_batch)
 
 
 def start_unique_gate_stream(
@@ -492,7 +381,9 @@ def process_decontamination_batch(
         )
         .select("check", "target", "total", "violations")
     )
-    _land_partial(partial, batch_id, out_path)
+    PartialStore(spark, out_path, EXPECTATION_COUNTS).write(
+        partial, batch_id
+    )
 
 
 def start_decontamination_stream(
@@ -654,7 +545,9 @@ def process_exact_substr_batch(
         )
         .select("check", "target", "total", "violations")
     )
-    _land_partial(partial, batch_id, out_path)
+    PartialStore(spark, out_path, EXPECTATION_COUNTS).write(
+        partial, batch_id
+    )
 
 
 def start_exact_substr_stream(

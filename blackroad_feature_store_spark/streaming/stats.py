@@ -8,11 +8,11 @@ Design (reference parity: the batch ``FeatureStore.statistics`` in
 O(history) per refresh at 100 TB):
 
 * each micro-batch writes its own MERGEABLE partial aggregate —
-  (group, n, n_null, sum, min, max) — into a parquet table
-  partitioned by ``batch_id``. Per-batch cost is O(batch), never
-  O(history), and the write is a dynamic partition overwrite of the
-  batch's own partition, so foreachBatch's replay-after-crash
-  re-delivers bit-identical partials instead of double counting;
+  (group, n, n_null, sum, min, max) — into its own ``batch_id``
+  partition. Per-batch cost is O(batch), never O(history), and the
+  write overwrites only the batch's own partition, so foreachBatch's
+  replay-after-crash re-delivers bit-identical partials instead of
+  double counting;
 * the CURRENT stats are the fold of all live partials (sum of n/sum,
   min of min, max of max — the classic commutative-monoid shape),
   an O(groups × live batches) read-side merge;
@@ -20,11 +20,14 @@ O(history) per refresh at 100 TB):
   behind an atomically-flipped marker file — crash-safe without a
   distributed transaction — keeping the merge O(groups + recent).
 
-Store layout under ``stats_path``::
-
-    batches/batch_id=<k>/   one mergeable partial per micro-batch
-    compacted/floor=<k>/    fold of every batch <= k (newest only live)
-    _compaction.json        the marker naming the live floor
+The store protocol (layout ``batches/batch_id=<k>``,
+``compacted/floor=<k>``, ``_compaction.json``; listing, live reads,
+the clamp, the marker flip) is `streaming/partials.py`'s, shared by
+every store kind. This module names the monoids of its store kinds —
+``MOMENTS``, ``COUNTS`` (histograms and count-min sketches) and
+``SKETCH_UNION`` (HLL) — next to their ``process_*``/``merge_*``
+pairs. Every store path may be a plain path or a scheme'd URI
+(``s3a://``, ``hdfs://``, ``file://``…).
 
 * min/max/count/null-count are exactly associative; ``sum`` over
   doubles reassociates (IEEE), so consumers comparing against a
@@ -34,13 +37,15 @@ Store layout under ``stats_path``::
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from blackroad_feature_store_spark.streaming.partials import (
+    Monoid,
+    PartialStore,
+    keyed_fold,
+)
 
 
 def partial_stats(
@@ -115,168 +120,48 @@ def process_stats_batch(
     if not group_cols and batch_df.isEmpty():
         return
     partial = partial_stats(batch_df, group_cols, value_col)
-    _write_batch_partition(
-        partial, batch_id, os.path.join(stats_path, "batches")
+    PartialStore(batch_df.sparkSession, stats_path, MOMENTS).write(
+        partial, batch_id
     )
 
 
-def _write_batch_partition(
-    df: DataFrame, batch_id: int, base_path: str
-) -> None:
-    """Land one batch's partial by writing DIRECTLY into its own
-    ``batch_id=<k>`` directory (plain ``mode("overwrite")`` on that
-    directory). Replay-idempotent exactly like the dynamic
-    partition-overwrite form this replaces (r17): a foreachBatch
-    replay overwrites only its own directory, every other batch's
-    partition is untouched, and readers see the identical
-    partition-discovered layout (``batch_id`` inferred from the
-    directory name, same as a ``partitionBy`` write). The dynamic
-    form paid ~30-45 ms extra per batch for the staging
-    commit + partition resolution plus two conf round-trips — pure
-    overhead when the target partition is known statically."""
-    df.write.mode("overwrite").parquet(
-        os.path.join(base_path, f"batch_id={int(batch_id)}")
-    )
-
-
-_MARKER = "_compaction.json"
-
-
-def _compaction_floor(stats_path: str) -> int:
-    """Highest batch_id folded into the compacted store, or -1."""
-    try:
-        with open(os.path.join(stats_path, _MARKER)) as f:
-            return int(json.load(f)["floor"])
-    except (OSError, ValueError, KeyError):
-        return -1
-
-
-def _write_compaction_floor(stats_path: str, floor: int) -> None:
-    tmp = os.path.join(stats_path, _MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"floor": int(floor)}, f)
-    os.replace(tmp, os.path.join(stats_path, _MARKER))  # atomic flip
-
-
-def _fold(partials: DataFrame) -> DataFrame:
-    """Schema-dispatched monoid fold: moment partials (have
-    ``sum_value``) fold component-wise; expectation partials (the FULL
-    `streaming/quality.py` column set ``check/target/total/
-    violations`` — dispatching on a single column name would
-    mis-route a stats store whose user-chosen group columns include
-    one literally named ``total`` or ``violations``, ADVICE r10 #2)
-    and histogram partials (key…, bin, n) fold by summing counts.
-    Lets one compaction/merge machinery serve every store kind."""
-    cols = set(partials.columns)
-    if any(
-        f.name == "sketch" and f.dataType.typeName() == "binary"
-        for f in partials.schema.fields
-    ):
-        # HLL sketch partials: fold = sketch union (associative AND
-        # idempotent — even a double-counted replay cannot skew it).
-        # Dispatch requires the BINARY type, not just the name, so a
-        # stats store grouping by a string column called "sketch"
-        # cannot be mis-routed (same doctrine as the expectation
-        # branch below).
-        group_cols = [
-            c
-            for c in partials.columns
-            if c not in ("sketch", "batch_id", "floor")
-        ]
-        return partials.groupBy(*group_cols).agg(
-            F.hll_union_agg("sketch").alias("sketch")
+def _reject_mixed_generations(live: DataFrame) -> None:
+    """The moment store's guard against two partial schemas in one
+    store. Read with schema merging (see ``MOMENTS``), partials of the
+    scalar shape (no ``feature`` column — written by a pre-r11
+    single-element-list shortcut) surface next to long-form ones as
+    feature=NULL rows; folding them would mis-merge across features,
+    so they raise instead (ADVICE r10 #3). Migration: rewrite
+    pre-upgrade scalar partials into long form (add the constant
+    ``feature`` column) or compact the old store before pointing the
+    new writer at it."""
+    if "feature" in live.columns and not live.where(
+        F.col("feature").isNull()
+    ).isEmpty():
+        raise ValueError(
+            "stats store mixes the scalar partial schema (no 'feature' "
+            "column — written by a pre-r11 version's single-element "
+            "value_col list) with the long-form schema; folding them "
+            "would mis-merge across features. Migrate the old batch "
+            "partitions to long form (add the constant 'feature' "
+            "column) before merging."
         )
-    if {"check", "target", "total", "violations"} <= cols:
-        group_cols = [
-            c
-            for c in partials.columns
-            if c not in ("total", "violations", "batch_id", "floor")
-        ]
-        return partials.groupBy(*group_cols).agg(
-            F.sum("total").cast("long").alias("total"),
-            F.sum("violations").cast("long").alias("violations"),
-        )
-    group_cols = [
-        c
-        for c in partials.columns
-        if c
-        not in ("n", "n_null", "sum_value", "min_value", "max_value",
-                "batch_id", "floor")
-    ]
-    if "sum_value" not in cols:
-        return partials.groupBy(*group_cols).agg(F.sum("n").alias("n"))
-    return partials.groupBy(*group_cols).agg(
-        F.sum("n").alias("n"),
-        F.sum("n_null").alias("n_null"),
-        F.sum("sum_value").alias("sum_value"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
-    )
 
 
-def _live_partials(spark: SparkSession, stats_path: str) -> DataFrame:
-    """Everything that currently COUNTS: the compacted fold at the
-    marker's floor (if any) plus batch partials with batch_id > floor.
-    Stale artifacts a crashed compaction may have left — a ``floor=``
-    directory never flipped live, or batch partitions at/below the
-    live floor not yet deleted — are EXCLUDED by construction, which
-    is what makes :func:`compact_stats` crash-safe at every step."""
-    floor = _compaction_floor(stats_path)
-    try:
-        # mergeSchema: without it the scan picks ONE file's schema, so
-        # a store holding both the scalar shape (no ``feature`` column
-        # — written by a pre-r11 single-element-list shortcut) and the
-        # long shape would silently drop or misalign columns. Merged,
-        # the scalar files surface as feature=NULL rows, which the
-        # guard below turns into a hard error (ADVICE r10 #3): folding
-        # a scalar partial into long-form partials would mis-merge
-        # across features. Migration: rewrite pre-upgrade scalar
-        # partials into long form (add the constant ``feature`` column)
-        # or compact the old store before pointing the new writer at it.
-        partials = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(stats_path, "batches")
-        )
-        if "feature" in partials.columns and not partials.where(
-            F.col("feature").isNull()
-        ).isEmpty():
-            raise ValueError(
-                f"stats store {stats_path} mixes the scalar partial "
-                "schema (no 'feature' column — written by a pre-r11 "
-                "version's single-element value_col list) with the "
-                "long-form schema; folding them would mis-merge "
-                "across features. Migrate the old batch partitions to "
-                "long form (add the constant 'feature' column) before "
-                "merging."
-            )
-        live = partials.where(F.col("batch_id") > floor).drop("batch_id")
-    except AnalysisException as exc:
-        msg = str(exc)
-        benign = (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            # compaction can retire EVERY batch partition, leaving
-            # batches/ with no files — an empty dir fails schema
-            # inference but is a normal state once a floor is live
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        )
-        if not benign:
-            raise
-        if floor < 0:
-            raise AnalysisException(
-                f"stats store {stats_path} does not exist yet "
-                "(no batch has been processed)"
-            ) from exc
-        live = None
-    if floor >= 0:
-        compacted = (
-            spark.read.parquet(os.path.join(stats_path, "compacted"))
-            .where(F.col("floor") == floor)
-            .drop("floor")
-        )
-        live = (
-            compacted if live is None else live.unionByName(compacted)
-        )
-    return live
+# Moment fold: counts and sums add, extrema take min/max — every
+# column that is not one of these is a group key.
+MOMENTS = Monoid(
+    fold=keyed_fold(
+        n=F.sum,
+        n_null=F.sum,
+        sum_value=F.sum,
+        min_value=F.min,
+        max_value=F.max,
+    ),
+    kind="moments",
+    merge_schema=True,
+    check=_reject_mixed_generations,
+)
 
 
 def merge_stats(spark: SparkSession, stats_path: str) -> DataFrame:
@@ -286,7 +171,7 @@ def merge_stats(spark: SparkSession, stats_path: str) -> DataFrame:
     result. Missing store raises (there is nothing meaningful to
     report before the first batch; callers wanting empty-on-missing
     can catch AnalysisException)."""
-    return _fold(_live_partials(spark, stats_path)).withColumn(
+    return PartialStore(spark, stats_path, MOMENTS).merged().withColumn(
         "mean_value",
         F.when(
             F.col("n") - F.col("n_null") > 0,
@@ -298,94 +183,23 @@ def merge_stats(spark: SparkSession, stats_path: str) -> DataFrame:
 def compact_stats(
     spark: SparkSession, stats_path: str, upto_batch: int
 ) -> None:
-    """Fold all live partials with ``batch_id <= upto_batch`` (plus
-    the previous compacted fold) into ONE compacted partition and
-    retire the originals — the maintenance valve that keeps
-    :func:`merge_stats` O(groups + recent batches) instead of
-    O(groups × all batches ever).
+    """Fold the moment store's live partials with ``batch_id <=
+    upto_batch`` (plus the previous compacted fold) into ONE compacted
+    partition and retire the originals — the maintenance valve that
+    keeps :func:`merge_stats` O(groups + recent batches) instead of
+    O(groups × all batches ever). Crash-safe behind the marker flip;
+    ``upto_batch`` is clamped to the newest committed batch write, so
+    a future batch id compacts everything written and nothing more, and with
+    nothing above the floor the call is a no-op (the protocol:
+    `streaming/partials.py`). Only compact checkpoint-committed
+    batches. Other store kinds compact through their own monoid:
+    ``PartialStore(spark, path, COUNTS).compact(upto)`` for histograms
+    and CMS, ``SKETCH_UNION`` for HLL."""
+    PartialStore(spark, stats_path, MOMENTS).compact(upto_batch)
 
-    Crash-safe by ordering, no distributed transaction needed:
 
-    1. write ``compacted/floor=<upto>`` (a NEW partition — the live
-       fold at the old floor is untouched; a retried write simply
-       overwrites the not-yet-live directory);
-    2. atomically flip the marker file to ``floor=<upto>`` — the
-       single commit point (POSIX rename);
-    3. best-effort delete of retired batch partitions and older
-       ``floor=`` directories.
-
-    A crash before (2) leaves the store exactly as it was (the new
-    directory is not referenced); a crash after (2) leaves stale
-    directories that :func:`_live_partials` ignores and the next
-    compaction removes. Only compact batches the stream's CHECKPOINT
-    has committed: the one batch foreachBatch may ever replay is the
-    last uncommitted one, which by definition is above any committed
-    ``upto_batch`` is CLAMPED to the newest batch_id actually present
-    in ``batches/``: flipping the floor past batches that have not
-    been written yet would permanently exclude them from
-    :func:`_live_partials` when they later land with
-    ``batch_id <= floor`` — silent data loss. A caller passing a
-    future batch id therefore compacts everything currently written
-    and nothing more; if nothing above the current floor is written
-    yet, the call is a no-op and the floor does not move."""
-    floor = _compaction_floor(stats_path)
-    if upto_batch <= floor:
-        return
-    batches_dir = os.path.join(stats_path, "batches")
-    try:
-        partials = spark.read.parquet(batches_dir)
-        newest = partials.agg(F.max("batch_id")).first()[0]
-    except AnalysisException as exc:
-        # A previous compaction can retire EVERY batch partition and
-        # only empty batches (which write nothing) may have arrived
-        # since — the batches dir is then missing or file-less, the
-        # same benign state _live_partials handles. Nothing above the
-        # floor exists, so there is nothing to compact and the floor
-        # MUST NOT advance (see the clamp contract above).
-        msg = str(exc)
-        benign = (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        )
-        if not benign:
-            raise
-        newest = None
-    if newest is None or newest <= floor:
-        return  # nothing written above the floor yet — no-op
-    upto_batch = min(int(upto_batch), int(newest))  # the clamp
-    to_fold = partials.where(
-        (F.col("batch_id") > floor) & (F.col("batch_id") <= upto_batch)
-    ).drop("batch_id")
-    if floor >= 0:
-        prev = (
-            spark.read.parquet(os.path.join(stats_path, "compacted"))
-            .where(F.col("floor") == floor)
-            .drop("floor")
-        )
-        to_fold = to_fold.unionByName(prev)
-    _fold(to_fold).write.mode("overwrite").parquet(
-        os.path.join(stats_path, "compacted", f"floor={int(upto_batch)}")
-    )
-    _write_compaction_floor(stats_path, upto_batch)  # the commit point
-    # -- best-effort cleanup; correctness never depends on it --
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    for sub in [
-        os.path.join(batches_dir, f"batch_id={b}")
-        for b in range(floor + 1, upto_batch + 1)
-    ] + [
-        os.path.join(stats_path, "compacted", f"floor={floor}")
-        if floor >= 0
-        else None
-    ]:
-        if sub is None:
-            continue
-        try:
-            p = jvm.org.apache.hadoop.fs.Path(sub)
-            p.getFileSystem(conf).delete(p, True)
-        except Exception:
-            pass
+# Histogram and count-min cells: counts add per (key…, bin) / (row, col).
+COUNTS = Monoid(fold=keyed_fold(n=F.sum), kind="counts")
 
 
 def partial_histogram(
@@ -436,16 +250,16 @@ def process_hist_batch(
     partial = partial_histogram(
         batch_df, group_cols, value_col, lo, hi, n_bins
     )
-    _write_batch_partition(
-        partial, batch_id, os.path.join(hist_path, "batches")
+    PartialStore(batch_df.sparkSession, hist_path, COUNTS).write(
+        partial, batch_id
     )
 
 
 def merge_histogram(spark: SparkSession, hist_path: str) -> DataFrame:
-    """Fold live histogram partials: (group…, bin, n). Shares the
-    marker/compaction layout AND :func:`compact_stats` with the
-    moment stats (the fold dispatches on schema)."""
-    return _fold(_live_partials(spark, hist_path))
+    """Fold live histogram partials: (group…, bin, n) — the ``COUNTS``
+    store; compact it with ``PartialStore(spark, hist_path,
+    COUNTS).compact(upto)``."""
+    return PartialStore(spark, hist_path, COUNTS).merged()
 
 
 def psi_vs_baseline(
@@ -534,8 +348,8 @@ def start_stats_stream(
     transiently-stale merge and re-read, or snapshot between
     micro-batches (e.g. after an ``availableNow`` drain returns, as
     the catalog queries do). Crash-recovery correctness is unaffected:
-    replay rewrites the same partition and :func:`_live_partials`
-    ignores anything not referenced by the marker."""
+    replay rewrites the same partition and live reads ignore
+    anything not referenced by the marker."""
     writer = (
         records.writeStream.foreachBatch(
             lambda batch_df, batch_id: process_stats_batch(
@@ -566,10 +380,9 @@ def process_cms_batch(
     """One micro-batch of incremental count-min maintenance
     (`operators/stats.py::cms_sketch`): the batch's (row, col, n)
     partial lands in its own batch_id partition — cell counts are a
-    commutative monoid, so :func:`merge_stats`'s machinery
-    (:func:`_fold` dispatches on the schema) and
-    :func:`compact_stats` serve this store unchanged. Replay
-    idempotence by dynamic partition overwrite, as everywhere.
+    commutative monoid, the ``COUNTS`` store (compact it with
+    ``PartialStore(spark, cms_path, COUNTS).compact(upto)``). Replay
+    idempotence by per-batch partition overwrite, as everywhere.
     No emptiness probe (r17): the sketch groups by (row, col), so an
     empty batch yields zero cells and the dynamic overwrite writes
     nothing — one job per batch instead of two."""
@@ -579,15 +392,21 @@ def process_cms_batch(
         batch_df, key_col, depth=depth, width=width,
         weight_col=weight_col,
     )
-    _write_batch_partition(
-        partial, batch_id, os.path.join(cms_path, "batches")
+    PartialStore(batch_df.sparkSession, cms_path, COUNTS).write(
+        partial, batch_id
     )
 
 
 def merge_cms(spark: SparkSession, cms_path: str) -> DataFrame:
     """Fold the live CMS partials into one sketch (row, col, n);
     query it with `operators/stats.py::cms_estimate`."""
-    return _fold(_live_partials(spark, cms_path))
+    return PartialStore(spark, cms_path, COUNTS).merged()
+
+
+# HLL sketches: union per key — associative AND idempotent.
+SKETCH_UNION = Monoid(
+    fold=keyed_fold(sketch=F.hll_union_agg), kind="sketch_union"
+)
 
 
 def process_hll_batch(
@@ -603,8 +422,9 @@ def process_hll_batch(
     sketches land in their own batch_id partition. Sketch union is
     associative and IDEMPOTENT, so this store is the best-behaved of
     the family: replay cannot double count even in principle, and
-    :func:`compact_stats` folds sketch partials through the same
-    `_fold` dispatch (binary ``sketch`` column). The emptiness probe
+    the ``SKETCH_UNION`` store compacts with
+    ``PartialStore(spark, hll_path, SKETCH_UNION).compact(upto)``.
+    The emptiness probe
     (r17) survives only for the keyless corpus-wide shape — with
     grouping keys an empty batch's partial has zero rows and the
     dynamic overwrite writes nothing, so the probe was a pure extra
@@ -614,8 +434,8 @@ def process_hll_batch(
     if not keys and batch_df.isEmpty():
         return
     partial = hll_sketches(batch_df, keys, col, lgk=lgk)
-    _write_batch_partition(
-        partial, batch_id, os.path.join(hll_path, "batches")
+    PartialStore(batch_df.sparkSession, hll_path, SKETCH_UNION).write(
+        partial, batch_id
     )
 
 
@@ -623,4 +443,4 @@ def merge_hll(spark: SparkSession, hll_path: str) -> DataFrame:
     """Fold the live sketch partials into one sketch per key; estimate
     with ``F.hll_sketch_estimate`` or roll up further with
     `operators/stats.py::hll_rollup`."""
-    return _fold(_live_partials(spark, hll_path))
+    return PartialStore(spark, hll_path, SKETCH_UNION).merged()

@@ -353,11 +353,11 @@ def test_compacted_ingest_output_matches_uncompacted(
         assert _out_rows(spark, out) == want
         # compaction actually happened: a floor marker exists and
         # the folded-away partials are retired
-        from blackroad_feature_store_spark.streaming.stats import (
-            _compaction_floor,
+        from blackroad_feature_store_spark.streaming.ingest import (
+            _index_store,
         )
 
-        assert _compaction_floor(idx) >= 1
+        assert _index_store(spark, idx).floor() >= 1
         assert not glob.glob(f"{idx}/batch_id=0")
     finally:
         shutil.rmtree(plain_base, ignore_errors=True)

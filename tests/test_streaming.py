@@ -924,28 +924,37 @@ def test_streaming_neardup_replay_idempotent(spark, tmp_path):
 def test_neardup_missing_store_is_empty_but_corrupt_store_raises(
     spark, tmp_path
 ):
-    """_existing_sigs maps ONLY path-not-found to "empty seen-set".
+    """Only a store that does not exist yet reads as "empty seen-set".
     A corrupt signature store must fail the micro-batch loudly —
     silently treating it as empty would permanently miss every
     cross-batch pair (VERDICT r8 / ADVICE r8)."""
     import pytest as _pytest
 
     from blackroad_feature_store_spark.streaming.neardup import (
-        _existing_sigs,
+        process_neardup_batch,
     )
 
-    # missing store: schema-stable empty frame
+    batch = spark.createDataFrame(
+        [(7, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    # missing store: the batch runs against an empty seen-set
     missing = str(tmp_path / "never_written")
-    out = _existing_sigs(spark, missing, "doc_id", before_batch=5)
-    assert out.count() == 0
-    assert out.columns == ["doc_id", "band", "sig"]
+    process_neardup_batch(batch, 5, missing, str(tmp_path / "pairs0"))
+    assert spark.read.parquet(str(tmp_path / "pairs0")).count() == 0
+    assert spark.read.parquet(missing).columns == [
+        "doc_id", "band", "sig", "batch_id"
+    ]
 
-    # corrupt store: directory exists but holds a non-parquet file
-    corrupt = tmp_path / "corrupt_sigs"
-    corrupt.mkdir()
+    # corrupt store: an earlier batch's partial is not parquet
+    corrupt = tmp_path / "corrupt_sigs" / "batch_id=0"
+    corrupt.mkdir(parents=True)
     (corrupt / "part-00000.parquet").write_bytes(b"this is not parquet")
     with _pytest.raises(Exception) as exc_info:
-        _existing_sigs(spark, str(corrupt), "doc_id", before_batch=5)
+        process_neardup_batch(
+            batch, 5, str(tmp_path / "corrupt_sigs"),
+            str(tmp_path / "pairs1"),
+        )
     # must NOT have been swallowed into the empty-frame path
     assert "PATH_NOT_FOUND" not in str(exc_info.value)
 
@@ -1329,8 +1338,11 @@ def test_histogram_partials_merge_compact_and_psi(spark, tmp_path):
     completed-bin smoothing for bins and keys missing on one side)."""
     import math
 
+    from blackroad_feature_store_spark.streaming.partials import (
+        PartialStore,
+    )
     from blackroad_feature_store_spark.streaming.stats import (
-        compact_stats,
+        COUNTS,
         merge_histogram,
         partial_histogram,
         process_hist_batch,
@@ -1357,7 +1369,7 @@ def test_histogram_partials_merge_compact_and_psi(spark, tmp_path):
     assert got == {("a", 0): 2, ("a", 1): 2, ("b", 0): 1}
 
     before = dict(got)
-    compact_stats(spark, store, upto_batch=0)  # shared machinery
+    PartialStore(spark, store, COUNTS).compact(0)  # its own store
     after = {
         (r["k"], r["bin"]): r["n"]
         for r in merge_histogram(spark, store).collect()
@@ -1462,14 +1474,21 @@ def test_compact_stats_clamps_future_upto_batch(spark, tmp_path):
     permanently excluded from the fold (silent data loss). The call
     clamps to what exists; with nothing above the floor it is a
     no-op."""
+    from blackroad_feature_store_spark.streaming.partials import (
+        PartialStore,
+    )
     from blackroad_feature_store_spark.streaming.stats import (
-        _compaction_floor,
+        MOMENTS,
         compact_stats,
         merge_stats,
         process_stats_batch,
     )
 
     store = str(tmp_path / "stats")
+
+    def _compaction_floor(path):
+        return PartialStore(spark, path, MOMENTS).floor()
+
     mk = lambda rows: spark.createDataFrame(  # noqa: E731
         rows, "k string, v double"
     )
@@ -1517,27 +1536,39 @@ def test_partial_stats_single_element_list_keeps_feature_column(spark):
     assert "feature" not in partial_stats(df, ["k"], "x").columns
 
 
-def test_fold_dispatch_requires_full_expectation_schema(spark):
-    """ADVICE r10 #2: `_fold` dispatches into the expectations monoid
-    only when the FULL quality-store column set (check, target, total,
-    violations) is present — a moment store whose user-chosen group
-    columns happen to include one named ``total`` or ``violations``
+def test_fold_dispatch_requires_full_expectation_schema(spark, tmp_path):
+    """ADVICE r10 #2: a moment store whose user-chosen group columns
+    include one named ``total`` (an expectation-store metric name)
     must fold as moments, keeping that column as a group key instead
-    of silently consuming it as a summed metric."""
-    from blackroad_feature_store_spark.streaming.stats import _fold
-
-    partials = spark.createDataFrame(
-        [("a", 10, 3, 0, 5.0, 1.0, 4.0), ("a", 10, 2, 1, 7.0, 2.0, 5.0)],
-        "k string, total int, n long, n_null long, "
-        "sum_value double, min_value double, max_value double",
+    of silently consuming it as a summed metric — through compaction
+    (whose snapshot is the bare fold) and through merge."""
+    from blackroad_feature_store_spark.streaming.stats import (
+        compact_stats,
+        merge_stats,
+        process_stats_batch,
     )
-    out = _fold(partials)
-    assert set(out.columns) == {
-        "k", "total", "n", "n_null", "sum_value", "min_value", "max_value"
-    }
-    row = out.collect()
-    assert len(row) == 1 and row[0]["total"] == 10 and row[0]["n"] == 5
-    assert row[0]["sum_value"] == 12.0
+
+    store = str(tmp_path / "stats")
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "k string, total int, v double"
+    )
+    # batch 0: n=3, sum 5.0; batch 1: n=2 (one NULL), sum 7.0
+    process_stats_batch(mk([("a", 10, 1.0), ("a", 10, 2.0),
+                            ("a", 10, 2.0)]), 0, store, ["k", "total"], "v")
+    process_stats_batch(mk([("a", 10, 7.0), ("a", 10, None)]), 1, store,
+                        ["k", "total"], "v")
+    compact_stats(spark, store, upto_batch=1)
+    for out in (
+        spark.read.parquet(f"{store}/compacted/floor=1"),
+        merge_stats(spark, store).drop("mean_value"),
+    ):
+        assert set(out.columns) == {
+            "k", "total", "n", "n_null", "sum_value", "min_value",
+            "max_value",
+        }
+        row = out.collect()
+        assert len(row) == 1 and row[0]["total"] == 10 and row[0]["n"] == 5
+        assert row[0]["sum_value"] == 12.0
 
 
 def test_mixed_scalar_long_schema_store_raises(spark, tmp_path):
@@ -1804,18 +1835,21 @@ def test_streaming_decontamination_gate_matches_batch(spark, tmp_path):
 def test_streaming_expectations_store(spark, tmp_path):
     """streaming/quality.py: per-batch expectation partials are
     replay-idempotent, fold to EXACTLY the batch check_expectations
-    verdict over the union, compact through the shared store
-    machinery (the _fold dispatcher's third monoid), and 'unique' is
+    verdict over the union, compact through their own store
+    (the EXPECTATION_COUNTS monoid), and 'unique' is
     rejected as non-mergeable."""
     from blackroad_feature_store_spark.operators.expectations import (
         check_expectations,
     )
+    from blackroad_feature_store_spark.streaming.partials import (
+        PartialStore,
+    )
     from blackroad_feature_store_spark.streaming.quality import (
+        EXPECTATION_COUNTS,
         merge_expectations,
         process_expectations_batch,
         start_expectations_stream,
     )
-    from blackroad_feature_store_spark.streaming.stats import compact_stats
 
     store = str(tmp_path / "exp")
     checks = [
@@ -1843,7 +1877,7 @@ def test_streaming_expectations_store(spark, tmp_path):
     assert got[("not_null", "v")] == (4, 1, False)
     assert got[("in_range", "v")] == (4, 1, False)
 
-    compact_stats(spark, store, upto_batch=1)  # shared machinery
+    PartialStore(spark, store, EXPECTATION_COUNTS).compact(1)
     after = {
         (r["check"], r["target"]): (r["total"], r["violations"], r["passed"])
         for r in merge_expectations(spark, store).collect()
@@ -1870,8 +1904,11 @@ def test_streaming_cms_maintenance_matches_batch_sketch(spark, tmp_path):
         cms_estimate,
         cms_sketch,
     )
+    from blackroad_feature_store_spark.streaming.partials import (
+        PartialStore,
+    )
     from blackroad_feature_store_spark.streaming.stats import (
-        compact_stats,
+        COUNTS,
         merge_cms,
         process_cms_batch,
     )
@@ -1889,7 +1926,7 @@ def test_streaming_cms_maintenance_matches_batch_sketch(spark, tmp_path):
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, batch.collect())
     )
-    compact_stats(spark, store, upto_batch=0)
+    PartialStore(spark, store, COUNTS).compact(0)
     assert sorted(map(tuple, merge_cms(spark, store).collect())) == sorted(
         map(tuple, batch.collect())
     )
@@ -1956,12 +1993,15 @@ def test_cluster_drift_partials_fold_equals_recompute(spark, tmp_path):
 
 def test_hll_store_fold_replay_and_compaction(spark, tmp_path):
     """Sketch partials: fold estimate tracks the exact distinct of the
-    union, replay is a no-op (union idempotence), and compact_stats
-    serves the binary-sketch store through the same _fold dispatch."""
+    union, replay is a no-op (union idempotence), and the sketch
+    store compacts through its own SKETCH_UNION monoid."""
     from pyspark.sql import functions as F
 
+    from blackroad_feature_store_spark.streaming.partials import (
+        PartialStore,
+    )
     from blackroad_feature_store_spark.streaming.stats import (
-        compact_stats,
+        SKETCH_UNION,
         merge_hll,
         process_hll_batch,
     )
@@ -1990,7 +2030,7 @@ def test_hll_store_fold_replay_and_compaction(spark, tmp_path):
     est = estimates()
     assert abs(est["a"] - 450) / 450 <= 0.03  # overlap deduped
     assert abs(est["b"] - 100) / 100 <= 0.03
-    compact_stats(spark, store, upto_batch=1)
+    PartialStore(spark, store, SKETCH_UNION).compact(1)
     assert estimates() == est  # compaction folds sketches losslessly
 
 
@@ -2171,6 +2211,31 @@ def test_unique_gate_reads_legacy_key_only_compacted_fold(spark, tmp_path):
     process_unique_gate_batch(mk([4, 5]), 3, store, "k")
     r2 = merge_expectations(spark, store).collect()[0]
     assert r2["total"] == 9 and r2["violations"] == 4
+
+
+def test_unique_gate_unreadable_seen_partial_fails_the_batch(
+    spark, tmp_path
+):
+    """An unreadable seen-key partial must fail the micro-batch (the
+    neardup signature store's contract), never read as "no key seen
+    yet": that would land violations=0 for keys that repeat batch 0's
+    and pass the gate with a wrong verdict."""
+    import glob
+
+    from blackroad_feature_store_spark.streaming.quality import (
+        process_unique_gate_batch,
+    )
+
+    store = str(tmp_path / "gate")
+    keys = spark.createDataFrame([("x",), ("y",)], "k string")
+    process_unique_gate_batch(keys, 0, store, "k")
+    files = glob.glob(f"{store}/seen/batches/batch_id=0/*.parquet")
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"this is not parquet")
+    with pytest.raises(Exception):
+        process_unique_gate_batch(keys, 1, store, "k")
 
 
 def test_drain_and_stop_expected_rows_survives_progress_ring_buffer():
