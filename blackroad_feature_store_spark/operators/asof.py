@@ -12,6 +12,11 @@ Global cutoff (``as_of`` a literal)::
     window row_number over (key, ts desc) == 1   -- top-1 per key
     left join onto the spine             -- broadcast if spine is small
 
+One key fixed by the filters (``keys=()``, the point read)::
+
+    filter(ts <= t, key = k)             -- pruned scan
+    order by ts desc limit 1             -- TakeOrderedAndProject, no shuffle
+
 Per-row cutoff (``as_of`` a spine column)::
 
     records left-semi spine keys         -- broadcast if spine is small
@@ -62,7 +67,16 @@ def latest_as_of(
 
     Deterministic under timestamp ties via ``tiebreakers`` (the
     reference's ``ORDER BY timestamp DESC LIMIT 1`` leaves ties
-    unspecified — SURVEY.md §2.3 pins them down with the record id).
+    unspecified — SURVEY.md §2.3 pins them down with the record id):
+    ts desc, then each tiebreaker desc, NULLs last (``"forward"``:
+    all ascending, as Spark's ``asc()`` orders, NULLs first).
+
+    With ``keys`` the pick is a window ``row_number`` per key (one
+    shuffle on the key). ``keys=()`` is the single-key point read
+    whose filters already fix the key: a global ordered top-1,
+    ``orderBy(...).limit(1)``, which plans as ``TakeOrderedAndProject``
+    — each scan partition keeps its best row and the driver merges
+    them, one job, no shuffle at any size.
 
     ``tolerance`` (an interval string like ``"90 days"``, requires
     ``as_of``) additionally excludes snapshots older than
@@ -110,6 +124,8 @@ def latest_as_of(
         order = [F.col(ts_col).asc()] + [
             F.col(c).asc() for c in tiebreakers if c in df.columns
         ]
+    if not keys:
+        return df.orderBy(*order).limit(1)
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -514,8 +530,10 @@ def as_of_join_pandas(
             for c in payload:
                 out[c] = None
             return out[spine_cols + payload]
+        # merge_asof takes the LAST row of a ts tie, so NULL tiebreakers
+        # sort first: they lose, as under the sorted form's desc NULLS LAST.
         right = right.drop(columns="__bkt").sort_values(
-            sort_rec, kind="mergesort"
+            sort_rec, kind="mergesort", na_position="first"
         )
         timed = left[as_of_col].notna()
         merged = pd.merge_asof(

@@ -1847,23 +1847,26 @@ class FeatureStore:
         last Tuesday's table?" is ``table_version=`` + ``as_of=``
         together; an audit can distinguish late-arriving data from
         data present all along.
+
+        The records_df filters already fix (group, entity), so the pick
+        is :func:`latest_as_of` with ``keys=()``: an ordered top-1 over
+        the pruned scan (``TakeOrderedAndProject``) — one Spark job, one
+        stage, no shuffle.
         """
         self._require_group(group_id)
         as_of_dt = _coerce_ts(as_of)
         # ts_lte and entity_id prune whole files from the manifest
-        # stats/bloom before the scan even starts; the row-level
-        # predicates still apply inside records_df.
+        # stats/bloom before the scan even starts; the row-level key
+        # predicates apply inside records_df, the ts one in latest_as_of.
         df = self.records_df(
             group_id,
             version=table_version,
             ts_lte=as_of_dt,
             entity_id=str(entity_id),
         )
-        if as_of_dt is not None:
-            df = df.where(F.col("timestamp") <= F.lit(as_of_dt))
-        top = latest_as_of(df, keys=["group_id", "entity_id"]).select(
+        top = latest_as_of(df, keys=(), as_of=as_of_dt).select(
             "feature_values"
-        ).take(1)
+        ).collect()
         if not top:
             return None
         return {k: decode_value(v) for k, v in top[0]["feature_values"].items()}
@@ -1890,10 +1893,13 @@ class FeatureStore:
           (feature_store.py:433-442);
         * entities with no data still get a row with group features None.
 
-        Unlike the reference's E×G nested loop of point queries, this is
-        ONE Spark job: filter (partition-pruned) → window top-1 →
-        explode → precedence resolve → collect. The driver-side part is
-        only the final dict shaping, which is O(output).
+        Unlike the reference's E×G nested loop of point queries, the
+        reads are one Spark plan — filter (partition-pruned) → window
+        top-1 per (group, entity) → collect, two jobs under AQE (the
+        shuffle map stage, then the result) — returning at most E×G
+        ``(group_id, entity_id, feature_values)`` rows. Precedence and
+        null-fill then run on the driver as the reference's own loop,
+        O(E×G×F).
         """
         groups = [self._require_group(gid) for gid in feature_groups]
         as_of_dt = _coerce_ts(timestamp) or _utcnow()
@@ -1902,53 +1908,24 @@ class FeatureStore:
         recs = self.records_df(ts_lte=as_of_dt).where(
             F.col("group_id").isin(feature_groups)
             & F.col("entity_id").isin(ents)
-            & (F.col("timestamp") <= F.lit(as_of_dt))
         )
-        latest = latest_as_of(recs, keys=["group_id", "entity_id"])
-        # Precedence: later group in the request list wins per feature.
-        order_map = {gid: i for i, gid in enumerate(feature_groups)}
-        order_df = self.spark.createDataFrame(
-            list(order_map.items()), "group_id string, group_order int"
-        )
-        exploded = (
-            latest.join(F.broadcast(order_df), "group_id")
-            .select("entity_id", "group_id", "group_order",
-                    F.explode("feature_values").alias("feature", "value"))
-        )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("entity_id", "feature").orderBy(
-            F.col("group_order").desc()
-        )
-        # One collect: the precedence-resolved value map plus the set of
-        # groups that actually produced a (non-empty) snapshot — the
-        # reference's `if values:` truthiness (an all-empty snapshot
-        # never reaches `exploded`, so it correctly counts as a miss).
-        winners = (
-            exploded.withColumn("rn", F.row_number().over(w))
-            .groupBy("entity_id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(
-                        F.when(F.col("rn") == 1,
-                               F.struct("feature", "value"))
-                    )
-                ).alias("fv"),
-                F.collect_set("group_id").alias("hit_groups"),
-            )
-        )
-        rows = winners.collect()
-        got = {r["entity_id"]: r["fv"] for r in rows}
-        hits = {r["entity_id"]: set(r["hit_groups"]) for r in rows}
-
+        latest = latest_as_of(
+            recs, keys=["group_id", "entity_id"], as_of=as_of_dt
+        ).select("group_id", "entity_id", "feature_values")
+        snaps = {
+            (r["group_id"], r["entity_id"]): {
+                k: decode_value(v) for k, v in r["feature_values"].items()
+            }
+            for r in latest.collect()
+        }
         out: list[dict[str, Any]] = []
         for e in ents:
             row: dict[str, Any] = {"entity_id": e}
-            fv = got.get(e)
-            if fv:
-                row.update({k: decode_value(v) for k, v in fv.items()})
             for g in groups:
-                if g.id not in hits.get(e, ()):  # miss → null-fill
+                values = snaps.get((g.id, e))
+                if values:
+                    row.update(values)
+                else:  # miss or an all-empty snapshot → null-fill
                     for fname in g.features:
                         row.setdefault(fname, None)
             out.append(row)

@@ -135,9 +135,9 @@ def process_pit_enrich_batch(
     dynamic overwrite — foreachBatch replay after a crash between
     write and checkpoint commit rewrites identical rows, the same
     exactly-once recipe as the neardup/stats stores. No emptiness
-    probe (r17): an empty spine enriches to zero rows and the dynamic
-    overwrite then writes nothing — one job per batch instead of
-    two."""
+    probe (r17): an empty spine enriches to zero rows, whose write
+    still lands a schema-only part file and ``_SUCCESS`` in its
+    ``batch_id=`` directory — one job per batch instead of two."""
     from blackroad_feature_store_spark.operators.asof import as_of_join
 
     from blackroad_feature_store_spark.streaming.partials import (

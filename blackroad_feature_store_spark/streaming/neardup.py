@@ -63,8 +63,9 @@ def process_neardup_batch(
     read excludes the current batch and both writes dynamically
     overwrite only their own ``batch_id=`` partition. No emptiness
     probe (r17): an empty batch yields zero signatures and zero
-    pairs, so both dynamic overwrites write nothing — one fewer job
-    on every batch of every neardup stream."""
+    pairs; both writes still land a schema-only part file and
+    ``_SUCCESS`` in their ``batch_id=`` directory, which later reads
+    list — one fewer job on every batch of every neardup stream."""
     spark = batch_df.sparkSession
     batch = batch_df.select(id_col, text_col)
     # Only a store that does not exist yet reads as the empty seen-set;

@@ -148,9 +148,10 @@ def process_unique_gate_batch(
     reads the persisted blocks instead of re-scanning the batch and
     re-running the anti-join. The old up-front ``isEmpty`` probe is
     gone too: an empty batch lands an all-zero partial (``total``
-    coalesces to 0 over zero rows) and zero seen keys (dynamic
-    overwrite of nothing), folding to exactly the verdict the skip
-    produced — two jobs per batch total, down from four."""
+    coalesces to 0 over zero rows) and zero seen keys (a schema-only
+    part file plus ``_SUCCESS`` in its ``batch_id=`` directory),
+    folding to exactly the verdict the skip produced — two jobs per
+    batch total, down from four."""
     spark = batch_df.sparkSession
     counts = (
         batch_df.select(F.col(key_col).cast("string").alias("key"))

@@ -111,12 +111,14 @@ def process_stats_batch(
     No up-front emptiness probe (r17 — VERDICT r16 ask #1: every
     extra per-batch action is a scheduler round-trip on every batch
     of every stream): with grouping columns, an empty batch's partial
-    has ZERO rows and the dynamic partition overwrite then writes
-    (and overwrites) nothing — exactly what the old ``isEmpty``
-    short-circuit did, minus one Spark job per micro-batch. Only the
-    degenerate corpus-wide shape (``group_cols == []``, a global
-    aggregate that emits one row even over nothing) still needs the
-    probe to keep empty batches out of the store."""
+    has ZERO rows, so it adds nothing to any fold. Its write still
+    lands ``batch_id=<k>/`` with a schema-only part file and
+    ``_SUCCESS`` (``write_batch_partition`` is a plain overwrite of
+    that directory), which counts as a committed batch and is listed
+    by every live read until compaction. Only the degenerate
+    corpus-wide shape (``group_cols == []``, a global aggregate that
+    emits one row even over nothing) still needs the probe to keep a
+    zero-count row out of the store."""
     if not group_cols and batch_df.isEmpty():
         return
     partial = partial_stats(batch_df, group_cols, value_col)
@@ -245,7 +247,8 @@ def process_hist_batch(
     batch_id-partition dynamic overwrite as the moment stats, so
     foreachBatch replay is idempotent. No emptiness probe (r17): the
     ``bin`` grouping key means an empty batch's partial is zero rows
-    and the dynamic overwrite writes nothing — one job per batch
+    (its write still lands a schema-only part file and ``_SUCCESS``,
+    a committed batch every live read lists) — one job per batch
     instead of two."""
     partial = partial_histogram(
         batch_df, group_cols, value_col, lo, hi, n_bins
@@ -384,8 +387,9 @@ def process_cms_batch(
     ``PartialStore(spark, cms_path, COUNTS).compact(upto)``). Replay
     idempotence by per-batch partition overwrite, as everywhere.
     No emptiness probe (r17): the sketch groups by (row, col), so an
-    empty batch yields zero cells and the dynamic overwrite writes
-    nothing — one job per batch instead of two."""
+    empty batch yields zero cells (its write still lands a schema-only
+    part file and ``_SUCCESS``, a committed batch every live read
+    lists) — one job per batch instead of two."""
     from blackroad_feature_store_spark.operators.stats import cms_sketch
 
     partial = cms_sketch(
@@ -426,9 +430,10 @@ def process_hll_batch(
     ``PartialStore(spark, hll_path, SKETCH_UNION).compact(upto)``.
     The emptiness probe
     (r17) survives only for the keyless corpus-wide shape — with
-    grouping keys an empty batch's partial has zero rows and the
-    dynamic overwrite writes nothing, so the probe was a pure extra
-    job per batch."""
+    grouping keys an empty batch's partial has zero rows, which adds
+    nothing to the union (its write still lands a schema-only part
+    file and ``_SUCCESS``, a committed batch every live read lists),
+    so the probe was a pure extra job per batch."""
     from blackroad_feature_store_spark.operators.stats import hll_sketches
 
     if not keys and batch_df.isEmpty():

@@ -90,6 +90,92 @@ def test_pit_join_matches_brute_force(random_store):
             assert row == {"entity_id": row["entity_id"], **expected}
 
 
+def brute_force_pit(histories, groups, entities, as_of):
+    """The reference's E×G loop (feature_store.py:411-448) over
+    brute-force as-of reads: ``row.update`` for each non-empty
+    snapshot, ``setdefault(None)`` for each group that missed, groups
+    in request order."""
+    out = []
+    for e in entities:
+        row = {"entity_id": e}
+        for gid, features in groups:
+            values = brute_force_asof(histories[gid], e, as_of)
+            if values:
+                row.update(values)
+            else:
+                for f in features:
+                    row.setdefault(f, None)
+        out.append(row)
+    return out
+
+
+@pytest.fixture(scope="module")
+def two_group_store(spark, tmp_path_factory):
+    """Two groups with overlapping features (b, c) over one entity
+    set, random histories plus pinned cases: an all-empty snapshot
+    that hides an older non-empty one, and a later group's explicit
+    ``None`` over an earlier group's value."""
+    rng = random.Random(20261019)
+    fs = FeatureStore(spark, str(tmp_path_factory.mktemp("pit2g") / "fs"))
+    for name in ["a", "b", "c", "d"]:
+        fs.register_feature(name, "user", "int")
+    g1 = fs.create_group("left", ["a", "b", "c"], "user_id")
+    g2 = fs.create_group("right", ["b", "c", "d"], "user_id")
+    histories = {g1.id: [], g2.id: []}
+    recs = []
+
+    def add(g, entity, ts, values):
+        rec = EntityRecord(g.id, entity, values, ts)
+        recs.append(rec)
+        histories[g.id].append(
+            {"entity_id": entity, "ts": ts, "rid": rec.id, "values": values}
+        )
+
+    for _ in range(160):
+        g = rng.choice([g1, g2])
+        pool = g.features + ["x"]  # "x": an undeclared, open-schema key
+        values = {
+            k: rng.choice([rng.randrange(100), None])
+            for k in rng.sample(pool, rng.randrange(0, len(pool) + 1))
+        }
+        ts = f"2026-{rng.randrange(2, 12):02d}-{rng.randrange(1, 28):02d}T00:00:00"
+        add(g, f"u{rng.randrange(8)}", ts, values)
+    # pinned: u8's newest right snapshot is empty (a miss that must
+    # null-fill, hiding its older value); u9's right snapshot sets b to
+    # None over left's b=5
+    add(g1, "u8", "2026-03-01T00:00:00", {"a": 1, "b": 2})
+    add(g2, "u8", "2026-03-01T00:00:00", {"d": 7})
+    add(g2, "u8", "2026-04-01T00:00:00", {})
+    add(g1, "u9", "2026-03-01T00:00:00", {"a": 4, "b": 5})
+    add(g2, "u9", "2026-03-02T00:00:00", {"b": None, "d": 6})
+    fs.write_features_batch(recs)
+    return fs, (g1, g2), histories
+
+
+@pytest.mark.parametrize(
+    "as_of",
+    ["2026-01-01T00:00:00",  # before every record: all null-filled
+     "2026-05-01T00:00:00", "2026-08-15T00:00:00", "2026-12-31T00:00:00"],
+)
+def test_two_group_pit_matches_brute_force(two_group_store, as_of):
+    fs, (g1, g2), histories = two_group_store
+    rng = random.Random(as_of)
+    pool = [f"u{i}" for i in range(10)] + ["missing"]
+    entities = rng.sample(pool, 6) + ["u8", "u9", "u8"]  # u8 twice
+    for order in ([g1, g2], [g2, g1], [g1, g2, g1]):  # left twice
+        want = brute_force_pit(
+            histories, [(g.id, g.features) for g in order], entities, as_of
+        )
+        got = fs.point_in_time_join(entities, [g.id for g in order], as_of)
+        assert got == want, ([g.name for g in order], as_of)
+        if order == [g1, g2] and as_of == "2026-05-01T00:00:00":
+            # the pinned cases are live at this cutoff
+            assert got[-3] == {
+                "entity_id": "u8", "a": 1, "b": 2, "c": None, "d": None
+            }
+            assert got[-2] == {"entity_id": "u9", "a": 4, "b": None, "d": 6}
+
+
 def test_statistics_match_brute_force(random_store):
     fs, g, history = random_store
     st = fs.statistics(g.id)
@@ -494,7 +580,7 @@ def test_as_of_join_auto_picks_and_matches(spark):
 
 
 try:
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     _HAVE_HYPOTHESIS = True
@@ -502,6 +588,7 @@ except ImportError:  # pragma: no cover
     _HAVE_HYPOTHESIS = False
 
 if _HAVE_HYPOTHESIS:
+    from datetime import datetime
 
     @st.composite
     def _pit_workload(draw):
@@ -541,6 +628,15 @@ if _HAVE_HYPOTHESIS:
         suppress_health_check=[HealthCheck.too_slow],
     )
     @given(_pit_workload())
+    @example(  # a NULL-id record tied on ts with an id'd one: NULL loses
+        case=(
+            [(None, "e1", 0, datetime(2026, 1, 1)),
+             ("r001", "e1", 0, datetime(2026, 1, 1))],
+            [("e1", datetime(2026, 1, 1))],
+            None,
+            "left",
+        )
+    )
     def test_asof_strategies_agree_hypothesis(spark, case):
         """Shrinking fuzz: the sorted form, the pandas merge_asof form
         and a brute-force scan emit identical rows on arbitrary

@@ -217,6 +217,68 @@ def test_pit_join_group_precedence(store_with_features):
     assert rows[0]["income"] == 10.0    # g2's null-fill didn't clobber g1
 
 
+def test_serving_reads_job_counts(store_with_features, monkeypatch):
+    """``get_features`` is an ordered top-1 over the pruned scan: one
+    Spark job, and a plan with no Exchange and no Window.
+    ``point_in_time_join`` runs at most two jobs: its window's shuffle
+    map stage, then the result."""
+    import blackroad_feature_store_spark.store as store_mod
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    s = store_with_features
+    g1 = s.create_group("g1", ["age", "income"], "user_id")
+    g2 = s.create_group("g2", ["age", "city"], "user_id")
+    for day in range(1, 4):  # three commits: several files to scan
+        s.write_features_batch(
+            [
+                EntityRecord(g.id, f"u{i}", {"age": i + day},
+                             f"2024-01-0{day}T00:00:00")
+                for g in (g1, g2)
+                for i in range(6)
+            ]
+        )
+    picked = []
+    real = store_mod.latest_as_of
+
+    def spy(*args, **kwargs):
+        df = real(*args, **kwargs)
+        picked.append(df)
+        return df
+
+    monkeypatch.setattr(store_mod, "latest_as_of", spy)
+    sc = s.spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got, n = jobs_of(
+        "serving_get_features",
+        lambda: s.get_features(g1.id, "u2", as_of="2024-01-02T12:00:00"),
+    )
+    assert got == {"age": 4}
+    assert n == 1
+    plan = picked[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "Exchange" not in plan and "Window" not in plan
+
+    rows, n = jobs_of(
+        "serving_pit",
+        lambda: s.point_in_time_join(
+            ["u2", "nobody"], [g1.id, g2.id], "2024-01-02T12:00:00"
+        ),
+    )
+    assert rows == [
+        {"entity_id": "u2", "age": 4},
+        {"entity_id": "nobody", "age": None, "income": None, "city": None},
+    ]
+    assert n <= 2
+
+
 # -- statistics (test_feature_store.py:136-152) ------------------------------
 
 def test_stats_empty_group(store_with_group):
