@@ -3,6 +3,8 @@ for-assertion (reference tests/test_feature_store.py:33-152; inventory
 in SURVEY.md §5.1), plus a few extras the Spark engine adds (batch
 writes, deterministic tie-breaks, open schema round-trip)."""
 
+from datetime import datetime
+
 import pytest
 
 from blackroad_feature_store_spark import (
@@ -277,6 +279,129 @@ def test_serving_reads_job_counts(store_with_features, monkeypatch):
         {"entity_id": "nobody", "age": None, "income": None, "city": None},
     ]
     assert n <= 2
+
+
+# -- append path (Arrow local relation) --------------------------------------
+
+def test_append_is_one_task_one_file_per_group(store_with_features, monkeypatch):
+    """A batch append is one write job with one task, lands one file per
+    group, and stages a LocalTableScan — never the Python-worker
+    ``Scan ExistingRDD`` of a plain-list ``createDataFrame``."""
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    s = store_with_features
+    g1 = s.create_group("g1", ["age"], "user_id")
+    g2 = s.create_group("g2", ["age"], "user_id")
+    plans = []
+    real = s._stage_and_commit
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(s, "_stage_and_commit", spy)
+    sc = s.spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("append_batch", "append_batch")
+    try:
+        n = s.write_features_batch(
+            [
+                EntityRecord(g.id, f"u{i}", {"age": i}, "2024-01-01T00:00:00")
+                for g in (g1, g2)
+                for i in range(100)
+            ]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 200
+    jobs = tracker.getJobIdsForGroup("append_batch")
+    assert len(jobs) == 1
+    tasks = sum(
+        tracker.getStageInfo(st).numTasks
+        for j in jobs
+        for st in tracker.getJobInfo(j).stageIds
+    )
+    assert tasks == 1
+    added = s._log.read(s._log.latest_version())["add"]
+    assert sorted(e["path"].split("/")[0] for e in added) == sorted(
+        f"group_id={g.id}" for g in (g1, g2)
+    )
+    assert len(plans) == 1
+    assert "LocalTableScan" in plans[0]
+    assert "ExistingRDD" not in plans[0]
+
+
+def test_append_roundtrip_matches_decoded_rows(store_with_group):
+    """Every value and timestamp shape an append accepts reads back as
+    the plain-list write path stored it: naive, aware (converted to
+    naive UTC), ISO-string and absent timestamps, an empty map, JSON
+    ``None``/bool/list/unicode values and an explicit version."""
+    from datetime import timedelta, timezone
+
+    from blackroad_feature_store_spark.store import EntityRecord, decode_value
+
+    s, g = store_with_group
+    s.write_features_batch(
+        [
+            EntityRecord(g.id, "naive", {"age": 30, "city": "Zürich"},
+                         datetime(2024, 1, 1, 12, 0, 0, 123456), id="r1"),
+            EntityRecord(g.id, "aware", {"flag": True, "tags": ["a", "日本"]},
+                         datetime(2024, 1, 1, 12,
+                                  tzinfo=timezone(timedelta(hours=2))),
+                         id="r2"),
+            EntityRecord(g.id, "iso", {"income": None, "ratio": 0.25},
+                         "2024-01-02T03:04:05", id="r3"),
+            EntityRecord(g.id, "no_ts", {"age": 1}, None, id="r4"),
+            EntityRecord(g.id, "empty", {}, datetime(2024, 1, 3),
+                         version=3, id="r5"),
+        ]
+    )
+    rows = sorted(
+        (r["id"], r["group_id"], r["entity_id"],
+         {k: decode_value(v) for k, v in r["feature_values"].items()},
+         r["timestamp"], r["version"])
+        for r in s.records_df(g.id).collect()
+    )
+    assert rows == [
+        ("r1", g.id, "naive", {"age": 30, "city": "Zürich"},
+         datetime(2024, 1, 1, 12, 0, 0, 123456), 1),
+        ("r2", g.id, "aware", {"flag": True, "tags": ["a", "日本"]},
+         datetime(2024, 1, 1, 10, 0), 1),
+        ("r3", g.id, "iso", {"income": None, "ratio": 0.25},
+         datetime(2024, 1, 2, 3, 4, 5), 1),
+        ("r4", g.id, "no_ts", {"age": 1}, None, 1),
+        ("r5", g.id, "empty", {}, datetime(2024, 1, 3), 3),
+    ]
+
+
+def test_naive_timestamp_is_utc_under_non_utc_driver_tz(store_with_group):
+    """A naive timestamp is naive UTC whatever the driver's zone: the
+    stored instant (rendered by Spark in the UTC session zone) and the
+    manifest's ``min_ts`` both read 12:00, not 12:00 shifted by the
+    local offset."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    s, g = store_with_group
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        s.write_features(g.id, "u1", {"age": 1}, datetime(2024, 1, 1, 12))
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    stored = s.records_df(g.id).select(
+        F.date_format("timestamp", "yyyy-MM-dd'T'HH:mm:ss").alias("ts")
+    ).collect()
+    assert [r["ts"] for r in stored] == ["2024-01-01T12:00:00"]
+    (entry,) = s._log.read(s._log.latest_version())["add"]
+    assert entry["min_ts"] == "2024-01-01T12:00:00"
 
 
 # -- statistics (test_feature_store.py:136-152) ------------------------------
