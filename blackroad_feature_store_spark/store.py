@@ -51,6 +51,7 @@ from datetime import datetime, timezone
 from typing import Any, Iterable, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -190,15 +191,19 @@ _GROUPS_PA_SCHEMA = pa.schema(
     ]
 )
 
-# Arrow twin of RECORDS_SCHEMA: appends build a pa.Table against it so
-# createDataFrame plans a LocalTableScan (see _append_records).
+# Arrow twin of RECORDS_SCHEMA: appends build a pa.Table against it and
+# write each group's rows straight to parquet, without ``group_id`` (the
+# partition directory carries it; see _append_records). ``timestamp`` is
+# UTC-adjusted, so the file holds TIMESTAMP_MICROS with
+# isAdjustedToUTC=true — Spark reads it as TimestampType — and its
+# footer carries the min/max stats the manifest entry takes.
 _RECORDS_PA_SCHEMA = pa.schema(
     [
         ("id", pa.string()),
         ("group_id", pa.string()),
         ("entity_id", pa.string()),
         ("feature_values", pa.map_(pa.string(), pa.string())),
-        ("timestamp", pa.timestamp("us")),
+        ("timestamp", pa.timestamp("us", tz="UTC")),
         ("version", pa.int32()),
     ]
 )
@@ -220,11 +225,11 @@ def _file_ts_stats(path: str) -> tuple[Optional[str], Optional[str]]:
     strings (None, None when indeterminable — empty file, stats absent
     for the physical type). Footer statistics first (metadata-only
     read); falls back to scanning just the timestamp column, which is
-    a single narrow column of the file."""
-    import pyarrow.parquet as pq
-
+    a single narrow column of the file. Spark writes ``timestamp`` as
+    INT96, which has no footer stats; it is decoded at microsecond
+    precision, since nanoseconds overflow outside 1677–2262."""
     try:
-        pf = pq.ParquetFile(path)
+        pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
         md = pf.metadata
         idx = next(
             (
@@ -248,8 +253,6 @@ def _file_ts_stats(path: str) -> tuple[Optional[str], Optional[str]]:
             col = pf.read(columns=["timestamp"])["timestamp"]
             if col.null_count == len(col):
                 return None, None
-            import pyarrow.compute as pc
-
             mm = pc.min_max(col).as_py()
             mins, maxs = [mm["min"]], [mm["max"]]
 
@@ -673,10 +676,9 @@ class FeatureStore:
         defaultParallelism slices, so a 9-row control-plane query
         schedules ~100 tasks, and a coalesce(1) over those plain-list
         slices is even slower (one task relaunching the Python runner
-        per parent slice). Over a LocalTableScan coalesce(1) is cheap —
-        no Python runner — which is how _append_records writes one
-        task. Measured: 0.12s vs 0.54s (plain) vs 4.4s (plain +
-        coalesce)."""
+        per parent slice). Record appends need no frame at all:
+        _append_records writes its pa.Table with pyarrow. Measured:
+        0.12s vs 0.54s (plain) vs 4.4s (plain + coalesce)."""
         import pandas as pd
 
         from pyspark.sql.types import StructType
@@ -722,8 +724,8 @@ class FeatureStore:
         return rec
 
     def write_features_batch(self, records: Iterable[EntityRecord]) -> int:
-        """Append many snapshots in one job, one task, one file per
-        group (the scale write path; the reference only has the one-row
+        """Append many snapshots with no Spark job, one file per group
+        (the scale write path; the reference only has the one-row
         form)."""
         recs = list(records)
         for r in recs:
@@ -743,16 +745,17 @@ class FeatureStore:
         )
 
     def _append_records(self, recs: list[EntityRecord]) -> None:
-        """Append as a pa.Table: createDataFrame takes the Arrow-table
-        route, which plans a LocalTableScan decoded in the JVM (no
-        Python worker, independent of the arrow.pyspark conf), and
-        coalesce(1) makes the write one task — one file per group. A
-        plain-list createDataFrame would run one Python worker and land
-        one file per defaultParallelism slice, and would read naive
-        datetimes in the host's local zone, not UTC."""
+        """Append driver-held records with no Spark job: the batch is
+        already a pa.Table, so pyarrow writes one file per group
+        straight into the live tree under a final unique name, fsyncs
+        it, and one manifest commit makes the files visible (the same
+        data-files-then-log contract as :meth:`_stage_and_commit`). A
+        crash before the commit leaves unreferenced files, which
+        :meth:`vacuum`'s orphan grace reclaims."""
         # Coerce here, not just in write_features: batch callers build
         # EntityRecord directly and may pass ISO strings (the reference
-        # accepted either — feature_store.py:351).
+        # accepted either — feature_store.py:351). pyarrow would take an
+        # aware datetime's wall clock as UTC, hence _naive_utc first.
         tbl = pa.Table.from_pylist(
             [
                 {
@@ -769,8 +772,20 @@ class FeatureStore:
             ],
             schema=_RECORDS_PA_SCHEMA,
         )
-        df = self.spark.createDataFrame(tbl, RECORDS_SCHEMA).coalesce(1)
-        self._stage_and_commit(df, op="append")
+        self._enforce_constraints(tbl)
+        added: list[dict[str, Any]] = []
+        for gid in sorted(tbl["group_id"].unique().to_pylist()):
+            rows = tbl.filter(pc.equal(tbl["group_id"], gid))
+            rel = os.path.join(f"group_id={gid}", f"part-{uuid.uuid4().hex}.parquet")
+            dst = os.path.join(self._records_path, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            with open(dst, "wb") as fh:
+                pq.write_table(rows.drop_columns("group_id"), fh)
+                fh.flush()
+                os.fsync(fh.fileno())
+            added.append(self._add_entry(rel))
+        if added:
+            self._log.commit("append", add=added, remove=[])
 
     # ------------------------------------------------------------------
     # data plane: commit-log plumbing (versioning.py)
@@ -853,10 +868,12 @@ class FeatureStore:
             json.dump(current, fh)
         os.replace(tmp, path)
 
-    def _enforce_constraints(self, df: DataFrame) -> None:
+    def _enforce_constraints(self, batch: DataFrame | pa.Table) -> None:
         """One aggregation pass over the batch counting violations of
         every constrained group's checks; raises listing each violated
-        constraint and its row count."""
+        constraint and its row count. A ``pa.Table`` batch (a direct
+        append) becomes a DataFrame only when some check exists, so an
+        unconstrained append runs no Spark job."""
         cons_dir = os.path.join(self.base_path, "_constraints")
         try:
             gids = [f[:-5] for f in os.listdir(cons_dir) if f.endswith(".json")]
@@ -877,7 +894,9 @@ class FeatureStore:
                 labels.append((gid, name))
         if not aggs:
             return
-        row = df.agg(*aggs).collect()[0]
+        if isinstance(batch, pa.Table):
+            batch = self.spark.createDataFrame(batch, RECORDS_SCHEMA)
+        row = batch.agg(*aggs).collect()[0]
         bad = [
             (gid, name, row[i])
             for i, (gid, name) in enumerate(labels)
@@ -927,15 +946,26 @@ class FeatureStore:
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
+    def _add_entry(self, rel: str) -> dict[str, Any]:
+        """The manifest add-entry of one live data file: its path plus
+        min/max ``timestamp`` statistics, so versioned reads can skip
+        files wholesale (Delta's per-file stats pattern), and the
+        entity-id bloom when the file is small enough for one. Stats
+        come from the parquet footer when present; locally the footer
+        read is metadata-only. On a real cluster this collection runs
+        where the files are written (executors), exactly as Delta
+        gathers stats at write time."""
+        path = os.path.join(self._records_path, rel)
+        lo, hi = _file_ts_stats(path)
+        entry: dict[str, Any] = {"path": rel, "min_ts": lo, "max_ts": hi}
+        bloom = _file_entity_bloom(path)
+        if bloom is not None:
+            entry["entity_bloom"] = bloom
+        return entry
+
     def _absorb_stage(self, stage: str) -> list[dict[str, Any]]:
         """Move staged parquet files into the live record tree under
-        collision-free names; returns one manifest add-entry per file —
-        path plus min/max ``timestamp`` statistics, so versioned reads
-        can skip files wholesale (Delta's per-file stats pattern).
-        Stats come from the parquet footer when present; locally the
-        footer read is metadata-only. On a real cluster this collection
-        runs where the files are written (executors), exactly as Delta
-        gathers stats at write time."""
+        collision-free names; returns one manifest add-entry per file."""
         added: list[dict[str, Any]] = []
         for part in sorted(os.listdir(stage)):
             src_dir = os.path.join(stage, part)
@@ -949,12 +979,7 @@ class FeatureStore:
                 rel = os.path.join(part, f"part-{uuid.uuid4().hex}.parquet")
                 dst = os.path.join(self._records_path, rel)
                 os.rename(os.path.join(src_dir, f), dst)
-                lo, hi = _file_ts_stats(dst)
-                entry: dict[str, Any] = {"path": rel, "min_ts": lo, "max_ts": hi}
-                bloom = _file_entity_bloom(dst)
-                if bloom is not None:
-                    entry["entity_bloom"] = bloom
-                added.append(entry)
+                added.append(self._add_entry(rel))
         return added
 
     def _migrate_unversioned(self) -> None:
@@ -966,10 +991,18 @@ class FeatureStore:
         for root, _dirs, files in os.walk(self._records_path):
             rel_root = os.path.relpath(root, self._records_path)
             for f in files:
-                if f.endswith(".parquet"):
-                    found.append(
-                        f if rel_root == "." else os.path.join(rel_root, f)
-                    )
+                if not f.endswith(".parquet"):
+                    continue
+                try:
+                    pq.read_metadata(os.path.join(root, f))
+                except (OSError, pa.ArrowInvalid):
+                    # A torn direct append (a crash inside a store's
+                    # first write) has no footer: leave it unreferenced
+                    # for vacuum rather than adopt an unreadable file.
+                    continue
+                found.append(
+                    f if rel_root == "." else os.path.join(rel_root, f)
+                )
         if found:
             self._log.commit("migrate", add=sorted(found), remove=[])
 
@@ -1381,8 +1414,9 @@ class FeatureStore:
         number of files deleted.
 
         Files no manifest has EVER referenced get a grace period:
-        :meth:`_stage_and_commit` moves data files into the live tree
-        *before* its manifest commits, so a zero-grace vacuum racing an
+        :meth:`_stage_and_commit` moves data files into the live tree,
+        and :meth:`_append_records` writes them there directly, both
+        *before* the manifest commits, so a zero-grace vacuum racing an
         in-flight writer would delete files its imminent commit is
         about to reference. An unreferenced file younger (by mtime)
         than ``orphan_grace_seconds`` is therefore skipped — Delta's
@@ -1499,10 +1533,15 @@ class FeatureStore:
         if group_id is not None:
             prefix = f"group_id={group_id}/"
             old_files = [f for f in old_files if f.startswith(prefix)]
-        df = self.records_df(group_id, version=snapshot)
-        n = df.count()
+        # Footer row counts size the rewrite with no count job; exact,
+        # since every row under group_id=<g>/ belongs to <g>.
+        n = sum(
+            pq.read_metadata(os.path.join(self._records_path, f)).num_rows
+            for f in old_files
+        )
         if n == 0:
             return 0
+        df = self.records_df(group_id, version=snapshot)
         files = max(1, math.ceil(n / target_rows_per_file))
         if cluster_by and zorder and len(cluster_by) > 1:
             from blackroad_feature_store_spark.operators.util import (
@@ -1519,6 +1558,10 @@ class FeatureStore:
             rewritten = df.repartitionByRange(
                 files, *cluster_by
             ).sortWithinPartitions(*cluster_by)
+        elif files == 1:
+            # One output file needs no shuffle: one task reads and
+            # writes, and the rewrite is a single job.
+            rewritten = df.coalesce(1)
         else:
             rewritten = df.repartition(files)
         self._stage_and_commit(rewritten, op="compact", remove=old_files)

@@ -219,6 +219,17 @@ def test_pit_join_group_precedence(store_with_features):
     assert rows[0]["income"] == 10.0    # g2's null-fill didn't clobber g1
 
 
+def _jobs_under(sc, group, fn):
+    """Run ``fn`` under a Spark job group; return its result and the
+    ids of the jobs it started."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_serving_reads_job_counts(store_with_features, monkeypatch):
     """``get_features`` is an ordered top-1 over the pruned scan: one
     Spark job, and a plan with no Exchange and no Window.
@@ -250,25 +261,19 @@ def test_serving_reads_job_counts(store_with_features, monkeypatch):
     monkeypatch.setattr(store_mod, "latest_as_of", spy)
     sc = s.spark.sparkContext
 
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    got, n = jobs_of(
+    got, jobs = _jobs_under(
+        sc,
         "serving_get_features",
         lambda: s.get_features(g1.id, "u2", as_of="2024-01-02T12:00:00"),
     )
     assert got == {"age": 4}
-    assert n == 1
+    assert len(jobs) == 1
     plan = picked[-1]._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan and "Window" not in plan
 
-    rows, n = jobs_of(
+    rows, jobs = _jobs_under(
+        sc,
         "serving_pit",
         lambda: s.point_in_time_join(
             ["u2", "nobody"], [g1.id, g2.id], "2024-01-02T12:00:00"
@@ -278,57 +283,260 @@ def test_serving_reads_job_counts(store_with_features, monkeypatch):
         {"entity_id": "u2", "age": 4},
         {"entity_id": "nobody", "age": None, "income": None, "city": None},
     ]
-    assert n <= 2
+    assert len(jobs) <= 2
 
 
-# -- append path (Arrow local relation) --------------------------------------
+# -- append path (pyarrow straight to parquet) -------------------------------
 
-def test_append_is_one_task_one_file_per_group(store_with_features, monkeypatch):
-    """A batch append is one write job with one task, lands one file per
-    group, and stages a LocalTableScan — never the Python-worker
-    ``Scan ExistingRDD`` of a plain-list ``createDataFrame``."""
+def test_append_is_job_free_one_file_per_group(store_with_features):
+    """A batch append starts no Spark job and lands one file per group,
+    written by pyarrow: no ``group_id`` column (the partition directory
+    carries it) and ``timestamp`` as INT64 TIMESTAMP_MICROS adjusted to
+    UTC, whose footer stats fill the manifest entry."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
     from blackroad_feature_store_spark.store import EntityRecord
 
     s = store_with_features
     g1 = s.create_group("g1", ["age"], "user_id")
     g2 = s.create_group("g2", ["age"], "user_id")
-    plans = []
-    real = s._stage_and_commit
-
-    def spy(df, *args, **kwargs):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return real(df, *args, **kwargs)
-
-    monkeypatch.setattr(s, "_stage_and_commit", spy)
-    sc = s.spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup("append_batch", "append_batch")
-    try:
-        n = s.write_features_batch(
+    n, jobs = _jobs_under(
+        s.spark.sparkContext,
+        "append_batch",
+        lambda: s.write_features_batch(
             [
-                EntityRecord(g.id, f"u{i}", {"age": i}, "2024-01-01T00:00:00")
+                EntityRecord(g.id, f"u{i}", {"age": i},
+                             f"2024-01-01T00:{i % 60:02d}:00")
                 for g in (g1, g2)
                 for i in range(100)
             ]
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert n == 200
-    jobs = tracker.getJobIdsForGroup("append_batch")
-    assert len(jobs) == 1
-    tasks = sum(
-        tracker.getStageInfo(st).numTasks
-        for j in jobs
-        for st in tracker.getJobInfo(j).stageIds
+        ),
     )
-    assert tasks == 1
+    assert n == 200
+    assert jobs == []
     added = s._log.read(s._log.latest_version())["add"]
     assert sorted(e["path"].split("/")[0] for e in added) == sorted(
         f"group_id={g.id}" for g in (g1, g2)
     )
-    assert len(plans) == 1
-    assert "LocalTableScan" in plans[0]
-    assert "ExistingRDD" not in plans[0]
+    for e in added:
+        md = pq.read_metadata(os.path.join(s._records_path, e["path"]))
+        assert md.num_rows == 100
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        assert "group_id" not in names
+        col = md.schema.column(names.index("timestamp"))
+        assert col.physical_type == "INT64"
+        lt = json.loads(col.logical_type.to_json())
+        assert (lt["Type"], lt["isAdjustedToUTC"], lt["timeUnit"]) == (
+            "Timestamp", True, "microseconds"
+        )
+        assert (e["min_ts"], e["max_ts"]) == (
+            "2024-01-01T00:00:00", "2024-01-01T00:59:00"
+        )
+        assert "entity_bloom" in e
+
+
+def test_fired_maybe_compact_is_one_spark_job(store_with_group):
+    """A compaction sizes its rewrite from the live files' footers, so
+    a fired ``maybe_compact`` runs exactly one Spark job: the rewrite."""
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    s, g = store_with_group
+    for day in range(1, 4):
+        s.write_features_batch(
+            [EntityRecord(g.id, f"u{i}", {"age": i + day},
+                          datetime(2024, 1, day)) for i in range(20)]
+        )
+    n, jobs = _jobs_under(
+        s.spark.sparkContext,
+        "fired_compaction",
+        lambda: s.maybe_compact(g.id, max_files=2),
+    )
+    assert n == 60
+    assert len(jobs) == 1
+    assert len(s._log.live_files()) == 1
+    assert s.get_features(g.id, "u7") == {"age": 10}
+
+
+def test_mixed_writers_read_identically_before_and_after_compaction(
+    store_with_features,
+):
+    """One store fed by both writers — a Spark-written bulk load
+    (``write_records_df``, INT96 timestamps) and direct pyarrow appends
+    (TIMESTAMP_MICROS) — answers every read the same way as a
+    pure-Python model of its records, before and after compaction."""
+    from blackroad_feature_store_spark.store import (
+        RECORDS_SCHEMA,
+        EntityRecord,
+        encode_value,
+    )
+
+    s = store_with_features
+    g1 = s.create_group("g1", ["age", "city"], "user_id")
+    g2 = s.create_group("g2", ["age", "income"], "user_id")
+    bulk = [
+        (f"b{g.id[:4]}{i}", g.id, f"u{i % 5}",
+         {"age": i, "city": f"c{i}"} if g is g1 else {"age": i, "income": i / 4},
+         datetime(2024, 1, 1 + i % 5, i % 24))
+        for g in (g1, g2)
+        for i in range(15)
+    ]
+    appends = [
+        (f"a{g.id[:4]}{i}", g.id, f"u{i % 7}",
+         {"age": 100 + i} if g is g1 else {"income": -i},
+         datetime(2024, 1, 3, 6 + i))
+        for g in (g1, g2)
+        for i in range(7)
+    ]
+    s.write_records_df(
+        s.spark.createDataFrame(
+            [(rid, gid, eid, {k: encode_value(v) for k, v in fv.items()},
+              ts, 1)
+             for rid, gid, eid, fv, ts in bulk],
+            RECORDS_SCHEMA,
+        )
+    )
+    v_bulk = s.current_version
+    s.write_features_batch(
+        [EntityRecord(gid, eid, fv, ts, id=rid)
+         for rid, gid, eid, fv, ts in appends[:7]]
+    )
+    for rid, gid, eid, fv, ts in appends[7:]:
+        s.write_features_batch([EntityRecord(gid, eid, fv, ts, id=rid)])
+    model = bulk + appends
+    # mid-history (both writers' files hold rows past it) and latest
+    cutoffs = [datetime(2024, 1, 3, 9), datetime(2024, 2, 1)]
+    ents = [f"u{i}" for i in range(8)]
+
+    def expected_latest(gid, eid, cut):
+        hits = [r for r in model
+                if r[1] == gid and r[2] == eid and r[4] <= cut]
+        return max(hits, key=lambda r: (r[4], r[0]))[3] if hits else None
+
+    def expected_pit(cut):
+        out = []
+        for e in ents:
+            row = {"entity_id": e}
+            for g in (g1, g2):
+                values = expected_latest(g.id, e, cut)
+                if values:
+                    row.update(values)
+                else:
+                    for f in g.features:
+                        row.setdefault(f, None)
+            out.append(row)
+        return out
+
+    def expected_typed(g):
+        return sorted(
+            (rid, eid, ts, fv.get("age"), fv.get("city"), fv.get("income"))
+            for rid, gid, eid, fv, ts in model
+            if gid == g.id
+        )
+
+    def check_reads():
+        for cut in cutoffs:
+            for g in (g1, g2):
+                for e in ents:
+                    assert s.get_features(g.id, e, as_of=cut) == (
+                        expected_latest(g.id, e, cut)
+                    ), (g.name, e, cut)
+            assert s.point_in_time_join(ents, [g1.id, g2.id], cut) == (
+                expected_pit(cut)
+            )
+        for g in (g1, g2):
+            got = sorted(
+                (r["id"], r["entity_id"], r["timestamp"],
+                 r.asDict().get("age"), r.asDict().get("city"),
+                 r.asDict().get("income"))
+                for r in s.typed_records_df(g.id).collect()
+            )
+            assert got == expected_typed(g)
+        feed = sorted(
+            (r["id"], r["_commit_version"])
+            for r in s.records_changes(since_version=v_bulk).collect()
+        )
+        assert feed == sorted(
+            (rid, v_bulk + 1 + max(0, i - 6))
+            for i, (rid, *_rest) in enumerate(appends)
+        )
+
+    check_reads()
+    assert s.compact_records(g1.id) == 22
+    assert s.compact_records() == 44
+    assert len(s._log.live_files()) == 2
+    check_reads()
+
+
+def test_manifest_stats_hold_outside_the_nanosecond_range(store_with_group):
+    """Spark writes ``timestamp`` as INT96, which carries no footer
+    stats, so the manifest's min/max come from reading the column —
+    at microsecond precision: as nanoseconds a year-1000 instant
+    overflows and the file's ``min_ts`` lands centuries off, which
+    pruned it from every earlier as-of read."""
+    from blackroad_feature_store_spark.store import (
+        RECORDS_SCHEMA,
+        encode_value,
+    )
+
+    s, g = store_with_group
+    early, late = datetime(1000, 3, 1, 12), datetime(9999, 12, 31, 23, 59, 59)
+    s.write_records_df(
+        s.spark.createDataFrame(
+            [("r1", g.id, "old", {"age": encode_value(1)}, early, 1),
+             ("r2", g.id, "far", {"age": encode_value(2)}, late, 1)],
+            RECORDS_SCHEMA,
+        ).coalesce(1)
+    )
+    s.write_features(g.id, "new", {"age": 3}, datetime(2024, 1, 1))
+    assert s.compact_records(g.id) == 3
+    (entry,) = s._log.live_entries()
+    assert (entry["min_ts"], entry["max_ts"]) == (
+        early.isoformat(), late.isoformat()
+    )
+    assert s.get_features(g.id, "old", as_of=datetime(2000, 1, 1)) == {"age": 1}
+    assert s.get_features(g.id, "far", as_of=late) == {"age": 2}
+    assert s.get_features(g.id, "far", as_of=datetime(2000, 1, 1)) is None
+    assert sorted(
+        (r["entity_id"], r["timestamp"]) for r in s.records_df(g.id).collect()
+    ) == [("far", late), ("new", datetime(2024, 1, 1)), ("old", early)]
+
+
+def test_torn_first_append_stays_unreferenced(store_with_group):
+    """A direct append writes its file under the final name before the
+    commit. If the process dies mid-write in a store's first append, the
+    torn file must stay an unreferenced orphan — not be adopted by the
+    pre-versioning migration at the next open — and vacuum reclaims
+    it."""
+    import glob
+    import os
+
+    from blackroad_feature_store_spark.versioning import CommitLog
+
+    s, g = store_with_group
+    orig_commit = CommitLog.commit
+
+    def crash(self, *a, **k):
+        raise RuntimeError("simulated crash before commit")
+
+    CommitLog.commit = crash
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            s.write_features(g.id, "u1", {"age": 1})
+    finally:
+        CommitLog.commit = orig_commit
+    (torn,) = glob.glob(os.path.join(s._records_path, "*", "*.parquet"))
+    with open(torn, "r+b") as fh:
+        fh.truncate(os.path.getsize(torn) // 2)
+
+    reopened = FeatureStore(s.spark, s.base_path)
+    assert reopened.current_version is None
+    assert reopened.get_features(g.id, "u1") is None
+    assert reopened.vacuum(orphan_grace_seconds=0.0) == 1
+    reopened.write_features(g.id, "u2", {"age": 2})
+    assert reopened.get_features(g.id, "u2") == {"age": 2}
 
 
 def test_append_roundtrip_matches_decoded_rows(store_with_group):
