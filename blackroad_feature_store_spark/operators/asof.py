@@ -12,17 +12,17 @@ Global cutoff (``as_of`` a literal)::
     window row_number over (key, ts desc) == 1   -- top-1 per key
     left join onto the spine             -- broadcast if spine is small
 
-One key fixed by the filters (``keys=()``, the point read)::
-
-    filter(ts <= t, key = k)             -- pruned scan
-    order by ts desc limit 1             -- TakeOrderedAndProject, no shuffle
-
 Per-row cutoff (``as_of`` a spine column)::
 
     records left-semi spine keys         -- broadcast if spine is small
     spine rows ∪ those records           -- tagged, one shuffle on the key
     sort per key by (instant, records before spine rows, tiebreakers)
     last(record struct, ignorenulls) over ROWS UNBOUNDED PRECEDING
+
+Driver form (:func:`latest_as_of_arrow`, the serving reads)::
+
+    filter(key in keys, ts <= t)         -- per Arrow table, in pyarrow
+    max of (ts, tiebreaker) per key      -- one pass, no Spark job
 
 Scale notes (100 TB): the ts filter and key filters reach the scan via
 predicate pushdown + partition pruning (records are partitioned by
@@ -45,13 +45,40 @@ task is not split.
 
 from __future__ import annotations
 
-from datetime import datetime
-from typing import Optional, Sequence
+from datetime import datetime, timedelta, timezone
+from typing import Any, Hashable, Iterable, Optional, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+
+_EPOCH = datetime(1970, 1, 1)
+
+
+def epoch_micros(ts: datetime) -> int:
+    """Microseconds since 1970-01-01 UTC on the proleptic Gregorian
+    calendar, the one Spark and Arrow store; a naive ``ts`` is UTC."""
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    return (ts - _EPOCH) // timedelta(microseconds=1)
+
+
+def _cutoff_literal(as_of: datetime | str | Column) -> Column:
+    """An as-of bound as a Column. A ``datetime`` is built from its
+    epoch microseconds: ``F.lit(datetime)`` converts through
+    ``java.sql.Timestamp``, whose hybrid Julian calendar moves a
+    pre-1582 instant by days, and reads a naive value in the driver's
+    local zone. The constant folds to a plain timestamp literal, so
+    the scan still receives it as a pushed filter."""
+    if isinstance(as_of, Column):
+        return as_of
+    if isinstance(as_of, datetime):
+        return F.timestamp_micros(F.lit(epoch_micros(as_of)))
+    return F.lit(as_of)
 
 
 def latest_as_of(
@@ -71,12 +98,11 @@ def latest_as_of(
     ts desc, then each tiebreaker desc, NULLs last (``"forward"``:
     all ascending, as Spark's ``asc()`` orders, NULLs first).
 
-    With ``keys`` the pick is a window ``row_number`` per key (one
-    shuffle on the key). ``keys=()`` is the single-key point read
-    whose filters already fix the key: a global ordered top-1,
-    ``orderBy(...).limit(1)``, which plans as ``TakeOrderedAndProject``
-    — each scan partition keeps its best row and the driver merges
-    them, one job, no shuffle at any size.
+    The pick is a window ``row_number`` per key (one shuffle on the
+    key); empty ``keys`` makes the whole frame one window.
+
+    A ``datetime`` cutoff is UTC when naive and becomes a literal
+    through :func:`_cutoff_literal`, exact for any year.
 
     ``tolerance`` (an interval string like ``"90 days"``, requires
     ``as_of``) additionally excludes snapshots older than
@@ -99,7 +125,7 @@ def latest_as_of(
     if direction == "forward" and as_of is None:
         raise ValueError("direction='forward' requires as_of")
     if as_of is not None:
-        as_of_expr = as_of if isinstance(as_of, Column) else F.lit(as_of)
+        as_of_expr = _cutoff_literal(as_of)
         if direction == "backward":
             df = df.where(F.col(ts_col) <= as_of_expr)
             if tolerance is not None:
@@ -124,14 +150,58 @@ def latest_as_of(
         order = [F.col(ts_col).asc()] + [
             F.col(c).asc() for c in tiebreakers if c in df.columns
         ]
-    if not keys:
-        return df.orderBy(*order).limit(1)
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def latest_as_of_arrow(
+    parts: Iterable[tuple[Hashable, pa.Table]],
+    key: str,
+    want: Sequence[str],
+    value: str,
+    as_of: Optional[datetime] = None,
+    ts_col: str = "timestamp",
+    tiebreaker: str = "id",
+) -> dict[tuple[Hashable, Any], Any]:
+    """Driver form of :func:`latest_as_of` over Arrow tables, for reads
+    small enough that a Spark job would cost more than the scan: the
+    newest row per ``(part, key)`` among rows whose ``key`` is in
+    ``want`` and whose ``ts_col <= as_of``, mapped to its ``value``.
+
+    The tie rule is the window form's: ts desc, then ``tiebreaker``
+    desc, NULLs last. A NULL-ts row never passes a cutoff; with no
+    cutoff it wins only when every row of its key is NULL-ts.
+    ``ts_col`` may hold any timestamp unit, zoned or naive; it is
+    compared in epoch microseconds, the precision Spark keeps, and a
+    naive ``as_of`` is UTC.
+    """
+    want_arr = pa.array(sorted(set(want)), pa.string())
+    cutoff = None if as_of is None else epoch_micros(as_of)
+    best: dict[tuple[Hashable, Any], tuple[tuple, Any]] = {}
+    for part, tbl in parts:
+        col = tbl[ts_col]
+        ts = pc.cast(
+            col, pa.timestamp("us", tz=col.type.tz), safe=False
+        ).cast(pa.int64())
+        keep = pc.is_in(tbl[key], value_set=want_arr)
+        if cutoff is not None:
+            keep = pc.and_(keep, pc.less_equal(ts, cutoff))
+        hits = tbl.filter(keep)
+        for k, tb, t, v in zip(
+            hits[key].to_pylist(),
+            hits[tiebreaker].to_pylist(),
+            ts.filter(keep).to_pylist(),
+            hits[value].to_pylist(),
+        ):
+            rank = (t is not None, t, tb is not None, tb)
+            cur = best.get((part, k))
+            if cur is None or rank > cur[0]:
+                best[(part, k)] = (rank, v)
+    return {pk: v for pk, (_, v) in best.items()}
 
 
 def as_of_join(

@@ -40,6 +40,7 @@ Query semantics preserved bit-for-bit from the reference (see tests):
 from __future__ import annotations
 
 import base64
+import bisect
 import hashlib
 import json
 import logging
@@ -64,7 +65,7 @@ from blackroad_feature_store_spark.errors import (
     UnknownFeatureError,
     UnknownGroupError,
 )
-from blackroad_feature_store_spark.operators.asof import latest_as_of
+from blackroad_feature_store_spark.operators.asof import latest_as_of_arrow
 from blackroad_feature_store_spark.operators.stats import feature_statistics
 from blackroad_feature_store_spark.versioning import CommitLog
 
@@ -270,6 +271,36 @@ def _file_ts_stats(path: str) -> tuple[Optional[str], Optional[str]]:
         return None, None
 
 
+_SERVING_COLUMNS = ["id", "entity_id", "timestamp", "feature_values"]
+
+
+def _read_serving_rows(path: str, want: list[str]) -> pa.Table:
+    """The columns a serving read needs from the row groups of ``path``
+    whose footer ``entity_id`` min/max can hold one of ``want``
+    (sorted); a row group without usable stats is read. Row-level
+    filtering is the caller's. Spark writes ``timestamp`` as INT96,
+    decoded at microsecond precision (nanoseconds overflow outside
+    1677–2262)."""
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+        md = pf.metadata
+        idx = next(
+            i
+            for i in range(md.num_columns)
+            if md.schema.column(i).path == "entity_id"
+        )
+        groups = []
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is not None and st.has_min_max:
+                lo, hi = st.min, st.max
+                if isinstance(lo, str) and isinstance(hi, str):
+                    j = bisect.bisect_left(want, lo)
+                    if j == len(want) or want[j] > hi:
+                        continue
+            groups.append(rg)
+        return pf.read_row_groups(groups, columns=_SERVING_COLUMNS)
+
+
 # --- per-file entity-id bloom index (Delta bloom-filter-index analogue) ---
 #
 # A point lookup (get_features / records_df(entity_id=...)) on a 100 TB
@@ -322,8 +353,9 @@ def _file_entity_bloom(path: str) -> Optional[dict[str, Any]]:
         return None
 
 
-def _bloom_maybe_contains(bloom: Any, value: str) -> bool:
-    """False only when the bloom PROVES absence. Any malformed/missing
+def _bloom_maybe_contains(bloom: Any, *values: str) -> bool:
+    """False only when the bloom PROVES every value absent; the bits
+    decode once however many values are probed. Any malformed/missing
     bloom reads as "maybe present" — pruning must stay safe against
     manifests written by older versions or corrupted entries."""
     try:
@@ -331,9 +363,12 @@ def _bloom_maybe_contains(bloom: Any, value: str) -> bool:
         bits = base64.b64decode(bloom["bits"])
         if m <= 0 or not 0 < k <= 64 or len(bits) * 8 < m:
             return True
-        return all(
-            bits[pos >> 3] & (1 << (pos & 7))
-            for pos in _bloom_positions(value, m, k)
+        return any(
+            all(
+                bits[pos >> 3] & (1 << (pos & 7))
+                for pos in _bloom_positions(value, m, k)
+            )
+            for value in values
         )
     except Exception:
         return True
@@ -371,9 +406,14 @@ class FeatureStore:
         # Record-table commit log (versioning.py): every data-plane
         # mutation is one atomic manifest commit; readers resolve a
         # file set per version. Stores written before versioning
-        # existed get a migration commit adopting their files.
-        self._log = CommitLog(os.path.join(self.base_path, "_versions"))
-        self._migrate_unversioned()
+        # existed have no log directory, and only those get a
+        # migration commit adopting their files: once the directory
+        # exists, a file no commit lists is an orphan of a crashed
+        # write (vacuum's to reclaim), even before the first commit.
+        log_dir = os.path.join(self.base_path, "_versions")
+        if not os.path.isdir(log_dir):
+            self._migrate_unversioned(log_dir)
+        self._log = CommitLog(log_dir)
         # Streaming replay-guard cache: last committed batch id per
         # stream_id, seeded lazily from one manifest scan.
         self._stream_commits: dict[str, int] = {}
@@ -982,11 +1022,19 @@ class FeatureStore:
                 added.append(self._add_entry(rel))
         return added
 
-    def _migrate_unversioned(self) -> None:
-        """Adopt a pre-versioning store: if no commit log exists but
-        record files do, commit version 0 listing them verbatim."""
-        if self._log.latest_version() is not None:
-            return
+    def _migrate_unversioned(self, log_dir: str) -> None:
+        """Create the log directory of a store opened without one. A
+        pre-versioning store's record files are adopted by a version-0
+        ``migrate`` commit listing them verbatim.
+
+        The log is built in a staging directory and renamed to
+        ``log_dir`` with its commit already inside, so the directory
+        never exists without the migration: a crash or a failed commit
+        leaves the store unversioned, and the next open migrates again
+        instead of leaving the files to vacuum as orphans."""
+        import shutil
+        import tempfile
+
         found: list[str] = []
         for root, _dirs, files in os.walk(self._records_path):
             rel_root = os.path.relpath(root, self._records_path)
@@ -996,15 +1044,29 @@ class FeatureStore:
                 try:
                     pq.read_metadata(os.path.join(root, f))
                 except (OSError, pa.ArrowInvalid):
-                    # A torn direct append (a crash inside a store's
-                    # first write) has no footer: leave it unreferenced
-                    # for vacuum rather than adopt an unreadable file.
+                    # A torn file (a direct append that crashed in a
+                    # store opened before opens made the log directory)
+                    # has no footer: leave it unreferenced for vacuum
+                    # rather than adopt an unreadable file.
                     continue
                 found.append(
                     f if rel_root == "." else os.path.join(rel_root, f)
                 )
-        if found:
-            self._log.commit("migrate", add=sorted(found), remove=[])
+        stage = tempfile.mkdtemp(prefix="._versions-", dir=self.base_path)
+        try:
+            if found:
+                CommitLog(stage).commit(
+                    "migrate", add=sorted(found), remove=[]
+                )
+            try:
+                os.rename(stage, log_dir)
+            except OSError:
+                # A concurrent open got there first (the rename only
+                # replaces an empty directory); its log stands.
+                if not os.path.isdir(log_dir):
+                    raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
 
     def stream_batch_committed(self, stream_id: str, batch_id: int) -> bool:
         """True when a streaming micro-batch (identified by its
@@ -1715,35 +1777,22 @@ class FeatureStore:
     # data plane: reads
     # ------------------------------------------------------------------
 
-    def records_df(
+    def _live_entries(
         self,
-        group_id: Optional[str] = None,
+        group_ids: Optional[list[str]] = None,
         version: Optional[int] = None,
         as_of_commit: datetime | str | None = None,
         ts_lte: datetime | None = None,
-        entity_id: Optional[str] = None,
+        entity_ids: Optional[list[str]] = None,
         tag: Optional[str] = None,
-    ) -> DataFrame:
-        """The record table at a pinned version (snapshot read).
-        ``tag=`` reads the version a named tag pins
-        (:meth:`tag_version`) — 'give me exactly what
-        training-2026-08 saw'.
-
-        The file set comes from the commit log, resolved once here —
-        concurrent commits cannot change the files under a running
-        query, and uncommitted/orphaned files are never read. Time
-        travel: ``version=`` pins an exact table version,
-        ``as_of_commit=`` the latest version committed at or before a
-        wall-clock instant (Delta's `VERSION AS OF` / `TIMESTAMP AS
-        OF`). Filtering by ``group_id`` prunes the file list to one
-        partition directory driver-side; ``entity_id=`` additionally
-        drops every file whose manifest bloom proves the id absent
-        (together, the Spark analogue of the reference's
-        (group_id, entity_id) index, feature_store.py:190).
-
-        An empty store reads as an empty DataFrame; any real read error
-        (corruption, permissions) propagates rather than silently
-        looking like zero records.
+    ) -> list[dict[str, Any]]:
+        """The manifest entries a read must open: the live file set at
+        the pinned version (``tag`` / ``version`` / ``as_of_commit``,
+        checked against the vacuum watermark), pruned driver-side to
+        the ``group_ids`` partitions, to files whose ``min_ts`` is at
+        or before ``ts_lte``, and to files whose bloom admits one of
+        ``entity_ids``. Every record read resolves its files here, so
+        each pruning and time-travel rule is defined once.
         """
         if tag is not None:
             if version is not None or as_of_commit is not None:
@@ -1797,39 +1846,76 @@ class FeatureStore:
                 entries = self._log.live_entries(version)
         else:
             entries = self._log.live_entries(version)
-        if group_id is not None:
-            prefix = f"group_id={group_id}/"
-            entries = [e for e in entries if e["path"].startswith(prefix)]
+        if group_ids is not None:
+            prefixes = tuple(f"group_id={g}/" for g in group_ids)
+            entries = [e for e in entries if e["path"].startswith(prefixes)]
         if ts_lte is not None:
             # Data skipping via manifest stats (Delta-style): an as-of
             # read drops every file whose min timestamp is already past
             # the cutoff — no footer reads, no scan, pruned driver-side
             # from the commit log alone. Files without stats stay in.
-            cutoff = (
-                ts_lte.astimezone(timezone.utc).replace(tzinfo=None)
-                if ts_lte.tzinfo is not None
-                else ts_lte
-            ).isoformat()
+            cutoff = _naive_utc(ts_lte).isoformat()
             entries = [
                 e
                 for e in entries
                 if e.get("min_ts") is None or e["min_ts"] <= cutoff
             ]
-        if entity_id is not None:
+        if entity_ids is not None:
             # Bloom-index skipping: an equality lookup on a
             # high-cardinality id is invisible to min/max stats, so each
             # add-entry carries a bloom over the file's distinct
             # entity_ids; files the bloom proves id-free drop here,
             # driver-side. Entries without a bloom stay in (safe), and
-            # the row-level predicate below still applies — a bloom
+            # the reader's row-level predicate still applies — a bloom
             # false positive costs one extra file read, never a wrong
             # result.
             entries = [
                 e
                 for e in entries
                 if "entity_bloom" not in e
-                or _bloom_maybe_contains(e["entity_bloom"], str(entity_id))
+                or _bloom_maybe_contains(e["entity_bloom"], *entity_ids)
             ]
+        return entries
+
+    def records_df(
+        self,
+        group_id: Optional[str] = None,
+        version: Optional[int] = None,
+        as_of_commit: datetime | str | None = None,
+        ts_lte: datetime | None = None,
+        entity_id: Optional[str] = None,
+        tag: Optional[str] = None,
+    ) -> DataFrame:
+        """The record table at a pinned version (snapshot read).
+        ``tag=`` reads the version a named tag pins
+        (:meth:`tag_version`) — 'give me exactly what
+        training-2026-08 saw'.
+
+        The file set comes from the commit log, resolved once by
+        :meth:`_live_entries` — concurrent commits cannot change the
+        files under a running query, and uncommitted/orphaned files are
+        never read. Time
+        travel: ``version=`` pins an exact table version,
+        ``as_of_commit=`` the latest version committed at or before a
+        wall-clock instant (Delta's `VERSION AS OF` / `TIMESTAMP AS
+        OF`). Filtering by ``group_id`` prunes the file list to one
+        partition directory driver-side; ``entity_id=`` additionally
+        drops every file whose manifest bloom proves the id absent
+        (together, the Spark analogue of the reference's
+        (group_id, entity_id) index, feature_store.py:190).
+
+        An empty store reads as an empty DataFrame; any real read error
+        (corruption, permissions) propagates rather than silently
+        looking like zero records.
+        """
+        entries = self._live_entries(
+            group_ids=None if group_id is None else [group_id],
+            version=version,
+            as_of_commit=as_of_commit,
+            ts_lte=ts_lte,
+            entity_ids=None if entity_id is None else [str(entity_id)],
+            tag=tag,
+        )
         files = [e["path"] for e in entries]
         if not files:
             df = self.spark.createDataFrame([], RECORDS_SCHEMA)
@@ -1914,6 +2000,46 @@ class FeatureStore:
         )
         return df.select(*cols)
 
+    def _latest_snapshots(
+        self,
+        group_ids: list[str],
+        entity_ids: list[str],
+        as_of: Optional[datetime],
+        version: Optional[int] = None,
+    ) -> dict[tuple[str, str], dict[str, str]]:
+        """The newest record per ``(group_id, entity_id)`` over
+        ``group_ids`` × ``entity_ids`` at table ``version`` as of
+        ``as_of``, read with pyarrow on the driver — no Spark job.
+        Returns each winner's raw ``feature_values`` map (JSON-encoded
+        cells).
+
+        :meth:`_live_entries` resolves the files; each is read by
+        :func:`_read_serving_rows` (the row groups that can hold the
+        entities) and the pick is
+        :func:`operators.asof.latest_as_of_arrow`, the driver form of
+        the as-of top-1. The group comes from the partition directory.
+        """
+        want = sorted(set(entity_ids))
+        entries = self._live_entries(
+            group_ids=group_ids,
+            version=version,
+            ts_lte=as_of,
+            entity_ids=want,
+        )
+        parts = (
+            (
+                e["path"].split("/", 1)[0][len("group_id="):],
+                _read_serving_rows(
+                    os.path.join(self._records_path, e["path"]), want
+                ),
+            )
+            for e in entries
+        )
+        best = latest_as_of_arrow(
+            parts, "entity_id", want, "feature_values", as_of=as_of
+        )
+        return {key: dict(fv or ()) for key, fv in best.items()}
+
     def get_features(
         self,
         group_id: str,
@@ -1933,28 +2059,20 @@ class FeatureStore:
         together; an audit can distinguish late-arriving data from
         data present all along.
 
-        The records_df filters already fix (group, entity), so the pick
-        is :func:`latest_as_of` with ``keys=()``: an ordered top-1 over
-        the pruned scan (``TakeOrderedAndProject``) — one Spark job, one
-        stage, no shuffle.
+        No Spark job: the commit log prunes the files to the group's
+        partition, the ``as_of`` stats and the entity's bloom, and
+        pyarrow reads those on the driver (:meth:`_latest_snapshots`),
+        the one-key case of the point-in-time join's read.
         """
         self._require_group(group_id)
         as_of_dt = _coerce_ts(as_of)
-        # ts_lte and entity_id prune whole files from the manifest
-        # stats/bloom before the scan even starts; the row-level key
-        # predicates apply inside records_df, the ts one in latest_as_of.
-        df = self.records_df(
-            group_id,
-            version=table_version,
-            ts_lte=as_of_dt,
-            entity_id=str(entity_id),
-        )
-        top = latest_as_of(df, keys=(), as_of=as_of_dt).select(
-            "feature_values"
-        ).collect()
-        if not top:
+        eid = str(entity_id)
+        snap = self._latest_snapshots(
+            [group_id], [eid], as_of_dt, version=table_version
+        ).get((group_id, eid))
+        if snap is None:
             return None
-        return {k: decode_value(v) for k, v in top[0]["feature_values"].items()}
+        return {k: decode_value(v) for k, v in snap.items()}
 
     def point_in_time_join(
         self,
@@ -1979,29 +2097,22 @@ class FeatureStore:
         * entities with no data still get a row with group features None.
 
         Unlike the reference's E×G nested loop of point queries, the
-        reads are one Spark plan — filter (partition-pruned) → window
-        top-1 per (group, entity) → collect, two jobs under AQE (the
-        shuffle map stage, then the result) — returning at most E×G
-        ``(group_id, entity_id, feature_values)`` rows. Precedence and
-        null-fill then run on the driver as the reference's own loop,
-        O(E×G×F).
+        reads are one pass with no Spark job: the commit log prunes the
+        files to the listed groups' partitions, the cutoff's stats and
+        the entities' blooms (each decoded once), and pyarrow reads
+        them on the driver, keeping at most E×G snapshots
+        (:meth:`_latest_snapshots`). Precedence and null-fill then run
+        as the reference's own loop, O(E×G×F).
         """
         groups = [self._require_group(gid) for gid in feature_groups]
         as_of_dt = _coerce_ts(timestamp) or _utcnow()
         ents = [str(e) for e in entities]
 
-        recs = self.records_df(ts_lte=as_of_dt).where(
-            F.col("group_id").isin(feature_groups)
-            & F.col("entity_id").isin(ents)
-        )
-        latest = latest_as_of(
-            recs, keys=["group_id", "entity_id"], as_of=as_of_dt
-        ).select("group_id", "entity_id", "feature_values")
         snaps = {
-            (r["group_id"], r["entity_id"]): {
-                k: decode_value(v) for k, v in r["feature_values"].items()
-            }
-            for r in latest.collect()
+            key: {k: decode_value(v) for k, v in fv.items()}
+            for key, fv in self._latest_snapshots(
+                feature_groups, ents, as_of_dt
+            ).items()
         }
         out: list[dict[str, Any]] = []
         for e in ents:

@@ -675,3 +675,161 @@ if _HAVE_HYPOTHESIS:
         assert key(
             r for r in b.collect() if how == "left" or r[4] is not None
         ) == want
+
+
+def reference_pit(snaps, groups, entities):
+    """The reference's precedence and null-fill loop
+    (feature_store.py:433-442) over given (group id, entity) snapshots."""
+    out = []
+    for e in entities:
+        row = {"entity_id": e}
+        for g in groups:
+            values = snaps.get((g.id, e))
+            if values:
+                row.update(values)
+            else:
+                for f in g.features:
+                    row.setdefault(f, None)
+        out.append(row)
+    return out
+
+
+def test_driver_serving_read_matches_spark_latest_as_of(spark, tmp_path):
+    """``get_features`` and ``point_in_time_join`` read their files with
+    pyarrow on the driver; every answer must equal Spark's
+    ``latest_as_of`` over ``records_df`` of the same version. The store
+    mixes all three writers — ``write_records_df`` files (INT96 and,
+    from a session set to write them, millisecond timestamps), pyarrow
+    appends and a compacted file — with timestamp
+    ties between NULL and non-NULL ids, NULL-ts records, empty maps and
+    absent entities, read at several ``as_of`` × ``table_version``
+    pairs; vacuumed and unknown versions keep raising."""
+    import os
+    from datetime import datetime, timedelta
+
+    import pyarrow.parquet as pq
+
+    from blackroad_feature_store_spark.operators.asof import latest_as_of
+    from blackroad_feature_store_spark.store import (
+        RECORDS_SCHEMA,
+        decode_value,
+        encode_value,
+    )
+
+    rng = random.Random(20261020)
+    fs = FeatureStore(spark, str(tmp_path / "fs"))
+    for name in ["a", "b"]:
+        fs.register_feature(name, "user", "int")
+    g1 = fs.create_group("p", ["a", "b"], "user_id")
+    g2 = fs.create_group("q", ["a", "b"], "user_id")
+    t0 = datetime(2026, 1, 1)
+    days = [t0 + timedelta(days=d) for d in range(6)]  # coarse: many ties
+    taken = set()  # (group, entity, ts, id): every pick is deterministic
+    empty_maps = []
+
+    def rows(n):
+        out = []
+        while len(out) < n:
+            g = rng.choice([g1, g2])
+            ent = f"u{rng.randrange(6)}"
+            ts = rng.choice(days + [None])
+            rid = None if rng.random() < 0.25 else f"r{rng.randrange(40):02d}"
+            if (g.id, ent, ts, rid) in taken:
+                continue
+            taken.add((g.id, ent, ts, rid))
+            vals = {
+                k: rng.randrange(100)
+                for k in rng.sample(["a", "b"], rng.randrange(3))
+            }  # an empty map a third of the time
+            out.append((g, ent, ts, rid, vals))
+            empty_maps.append(not vals)
+        return out
+
+    def write_df(n):
+        fs.write_records_df(
+            spark.createDataFrame(
+                [
+                    (rid, g.id, ent,
+                     {k: encode_value(v) for k, v in vals.items()}, ts, 1)
+                    for g, ent, ts, rid, vals in rows(n)
+                ],
+                RECORDS_SCHEMA,
+            )
+        )
+
+    write_df(40)  # INT96 timestamps, Spark's default
+    # a session that writes millisecond timestamps (INT64 TIMESTAMP_MILLIS)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    try:
+        write_df(20)
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    for _ in range(2):
+        fs.write_features_batch(
+            EntityRecord(g.id, ent, vals, ts, id=rid)
+            for g, ent, ts, rid, vals in rows(15)
+        )
+    assert {
+        str(pq.read_schema(os.path.join(fs._records_path, f)).field(
+            "timestamp").type)
+        for f in fs._log.live_files()
+    } == {"timestamp[ns]", "timestamp[ms, tz=UTC]", "timestamp[us, tz=UTC]"}
+    fs.compact_records(g1.id)
+    fs.write_features_batch(
+        EntityRecord(g.id, ent, vals, ts, id=rid)
+        for g, ent, ts, rid, vals in rows(15)
+    )
+    versions = fs._log.versions()
+    assert [fs._log.read(v)["op"] for v in versions] == [
+        "append", "append", "append", "append", "compact", "append"
+    ]
+    entities = [f"u{i}" for i in range(6)] + ["absent"]
+    cutoffs = [None, days[0] - timedelta(hours=1), days[2],
+               days[3] + timedelta(hours=12), days[-1]]
+
+    def spark_answers(version, cutoff):
+        top = latest_as_of(
+            fs.records_df(version=version),
+            keys=["group_id", "entity_id"],
+            as_of=cutoff,
+        ).collect()
+        return {
+            (r["group_id"], r["entity_id"]): {
+                k: decode_value(v) for k, v in r["feature_values"].items()
+            }
+            for r in top
+        }
+
+    for version in (versions[1], versions[3], versions[-1]):
+        for cutoff in cutoffs:
+            want = spark_answers(version, cutoff)
+            for g in (g1, g2):
+                for ent in entities:
+                    got = fs.get_features(
+                        g.id, ent, as_of=cutoff, table_version=version
+                    )
+                    assert got == want.get((g.id, ent)), (
+                        version, cutoff, g.name, ent
+                    )
+            if version == versions[-1] and cutoff is not None:
+                for order in ([g1, g2], [g2, g1]):
+                    got = fs.point_in_time_join(
+                        entities, [g.id for g in order], cutoff
+                    )
+                    assert got == reference_pit(want, order, entities), (
+                        cutoff, [g.name for g in order]
+                    )
+    assert any(ts is None for _, _, ts, _ in taken)
+    assert any(rid is None for _, _, _, rid in taken)
+    assert any(empty_maps)
+
+    fs.vacuum(retain_versions=1, orphan_grace_seconds=0.0)
+    with pytest.raises(ValueError, match="vacuumed"):
+        fs.get_features(g1.id, "u0", table_version=versions[1])
+    with pytest.raises(ValueError, match="does not exist"):
+        fs.get_features(g1.id, "u0", table_version=versions[-1] + 7)
+    want = spark_answers(None, days[-1])
+    for ent in entities:
+        assert fs.get_features(g2.id, ent, as_of=days[-1]) == want.get(
+            (g2.id, ent)
+        )

@@ -230,12 +230,9 @@ def _jobs_under(sc, group, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_serving_reads_job_counts(store_with_features, monkeypatch):
-    """``get_features`` is an ordered top-1 over the pruned scan: one
-    Spark job, and a plan with no Exchange and no Window.
-    ``point_in_time_join`` runs at most two jobs: its window's shuffle
-    map stage, then the result."""
-    import blackroad_feature_store_spark.store as store_mod
+def test_serving_reads_job_counts(store_with_features):
+    """``get_features`` and ``point_in_time_join`` read the pruned files
+    with pyarrow on the driver: neither starts a Spark job."""
     from blackroad_feature_store_spark.store import EntityRecord
 
     s = store_with_features
@@ -250,15 +247,6 @@ def test_serving_reads_job_counts(store_with_features, monkeypatch):
                 for i in range(6)
             ]
         )
-    picked = []
-    real = store_mod.latest_as_of
-
-    def spy(*args, **kwargs):
-        df = real(*args, **kwargs)
-        picked.append(df)
-        return df
-
-    monkeypatch.setattr(store_mod, "latest_as_of", spy)
     sc = s.spark.sparkContext
 
     got, jobs = _jobs_under(
@@ -267,10 +255,7 @@ def test_serving_reads_job_counts(store_with_features, monkeypatch):
         lambda: s.get_features(g1.id, "u2", as_of="2024-01-02T12:00:00"),
     )
     assert got == {"age": 4}
-    assert len(jobs) == 1
-    plan = picked[-1]._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange" not in plan and "Window" not in plan
+    assert jobs == []
 
     rows, jobs = _jobs_under(
         sc,
@@ -283,7 +268,94 @@ def test_serving_reads_job_counts(store_with_features, monkeypatch):
         {"entity_id": "u2", "age": 4},
         {"entity_id": "nobody", "age": None, "income": None, "city": None},
     ]
-    assert len(jobs) <= 2
+    assert jobs == []
+
+
+def test_pre_gregorian_cutoff_is_exact(store_with_group):
+    """An as-of cutoff before 1582-10-15 bounds at the instant given:
+    the record stamped exactly at the cutoff is found by the driver
+    read and by Spark's ``latest_as_of``, and a cutoff one microsecond
+    earlier misses it (no Julian/Gregorian shift of the bound)."""
+    from datetime import timedelta
+
+    from blackroad_feature_store_spark.operators.asof import latest_as_of
+
+    s, g = store_with_group
+    at = datetime(1000, 3, 1, 12)
+    s.write_features(g.id, "u1", {"age": 1}, timestamp=at)
+    before = at - timedelta(microseconds=1)
+    assert s.get_features(g.id, "u1", as_of=at) == {"age": 1}
+    assert s.get_features(g.id, "u1", as_of=before) is None
+    assert s.point_in_time_join(["u1"], [g.id], at)[0]["age"] == 1
+    df = s.records_df(g.id)
+    for keys in (["entity_id"], []):  # no keys: one window
+        for cutoff, n in ((at, 1), (before, 0)):
+            got = latest_as_of(df, keys, as_of=cutoff).collect()
+            assert [r["feature_values"] for r in got] == [{"age": "1"}] * n
+
+
+def test_serving_read_skips_row_groups_by_entity_stats(store_with_group):
+    """A serving read opens only the row groups whose footer
+    ``entity_id`` min/max can hold a requested entity, and answers as
+    Spark's ``latest_as_of`` does over the same file. The file is
+    entity-sorted with three-row groups and millisecond timestamps, and
+    adopted by a legacy store's migration."""
+    import os
+    import shutil
+    from datetime import timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blackroad_feature_store_spark.operators.asof import latest_as_of
+    from blackroad_feature_store_spark.store import _read_serving_rows
+
+    s, g = store_with_group
+    t0 = datetime(2026, 1, 1)
+    ents = [f"u{i // 3}" for i in range(12)]
+    part = os.path.join(s._records_path, f"group_id={g.id}")
+    os.makedirs(part)
+    path = os.path.join(part, "part-legacy.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "id": [f"r{i:02d}" for i in range(12)],
+                "entity_id": ents,
+                "feature_values": pa.array(
+                    [[("age", str(i))] for i in range(12)],
+                    pa.map_(pa.string(), pa.string()),
+                ),
+                "timestamp": pa.array(
+                    [t0 + timedelta(days=i % 3) for i in range(12)],
+                    pa.timestamp("ms", tz="UTC"),
+                ),
+                "version": pa.array([1] * 12, pa.int32()),
+            }
+        ),
+        path,
+        row_group_size=3,
+    )
+    shutil.rmtree(os.path.join(s.base_path, "_versions"))
+    store = FeatureStore(s.spark, s.base_path)
+
+    assert pq.ParquetFile(path).metadata.num_row_groups == 4
+    assert _read_serving_rows(path, ["u2"])["entity_id"].to_pylist() == [
+        "u2"
+    ] * 3
+    assert _read_serving_rows(path, ["u0", "u3"]).num_rows == 6
+    assert _read_serving_rows(path, ["u", "u9"]).num_rows == 0
+    df = store.records_df(g.id)
+    for cutoff in (None, t0, t0 + timedelta(days=1, hours=1)):
+        want = {
+            r["entity_id"]: r["feature_values"]
+            for r in latest_as_of(df, ["entity_id"], as_of=cutoff).collect()
+        }
+        for ent in ["u0", "u1", "u2", "u3", "absent"]:
+            got = store.get_features(g.id, ent, as_of=cutoff)
+            assert got == (
+                None if ent not in want
+                else {"age": int(want[ent]["age"])}
+            ), (cutoff, ent)
 
 
 # -- append path (pyarrow straight to parquet) -------------------------------
@@ -537,6 +609,33 @@ def test_torn_first_append_stays_unreferenced(store_with_group):
     assert reopened.vacuum(orphan_grace_seconds=0.0) == 1
     reopened.write_features(g.id, "u2", {"age": 2})
     assert reopened.get_features(g.id, "u2") == {"age": 2}
+
+
+def test_crashed_first_append_is_not_adopted(store_with_group):
+    """A store's first append whose commit never lands leaves a whole,
+    readable file that no commit lists. Reopening must not adopt it as
+    a pre-versioning store (the open made the log directory, so this
+    store is versioned): nothing reads back, history stays empty and
+    vacuum reclaims the file."""
+    from blackroad_feature_store_spark.versioning import CommitLog
+
+    s, g = store_with_group
+    orig_commit = CommitLog.commit
+
+    def crash(self, *a, **k):
+        raise RuntimeError("simulated crash before commit")
+
+    CommitLog.commit = crash
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            s.write_features(g.id, "u1", {"age": 1})
+    finally:
+        CommitLog.commit = orig_commit
+
+    reopened = FeatureStore(s.spark, s.base_path)
+    assert reopened.get_features(g.id, "u1") is None
+    assert reopened.history() == []
+    assert reopened.vacuum(orphan_grace_seconds=0.0) == 1
 
 
 def test_append_roundtrip_matches_decoded_rows(store_with_group):
@@ -1665,6 +1764,46 @@ def test_records_changes_includes_migrate_commit(spark, tmp_path):
     assert [(r["entity_id"], r["_commit_version"]) for r in rows] == [
         ("u1", 0)
     ]
+
+
+def test_failed_migration_is_retried_on_next_open(spark, tmp_path):
+    """A pre-versioning store whose migrate commit fails (here after the
+    log directory was made, as on a full disk) stays unversioned: the
+    next open migrates again, its records still read back, and vacuum
+    reclaims none of them."""
+    import errno
+    import os
+    import shutil
+
+    from blackroad_feature_store_spark.versioning import CommitLog
+
+    base = str(tmp_path / "legacy")
+    a = FeatureStore(spark, base)
+    a.register_feature("age", "user", "int")
+    g = a.create_group("g", ["age"], "user_id")
+    a.write_features(g.id, "u1", {"age": 1}, timestamp="2026-01-01T00:00:00")
+    shutil.rmtree(os.path.join(base, "_versions"))
+    orig_commit = CommitLog.commit
+
+    def disk_full(self, *a, **k):
+        os.makedirs(self.dir, exist_ok=True)
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    CommitLog.commit = disk_full
+    try:
+        with pytest.raises(OSError, match="No space"):
+            FeatureStore(spark, base)
+    finally:
+        CommitLog.commit = orig_commit
+    assert not os.path.exists(os.path.join(base, "_versions"))
+
+    b = FeatureStore(spark, base)
+    assert [h["op"] for h in b.history()] == ["migrate"]
+    assert b.get_features(g.id, "u1") == {"age": 1}
+    assert b.vacuum(orphan_grace_seconds=0.0) == 0
+    assert b.get_features(g.id, "u1") == {"age": 1}
+    # the failed attempt's staging directory is gone too
+    assert not [n for n in os.listdir(base) if n.startswith("._versions")]
 
 
 # -- typed wide view --------------------------------------------------------
