@@ -209,6 +209,14 @@ _RECORDS_PA_SCHEMA = pa.schema(
     ]
 )
 
+# What a data file holds: the record columns minus ``group_id``.
+_RECORDS_FILE_SCHEMA = _RECORDS_PA_SCHEMA.remove(
+    _RECORDS_PA_SCHEMA.get_field_index("group_id")
+)
+
+# pyarrow's default maximum row-group length (ParquetWriter.write_table).
+_ROW_GROUP_ROWS = 1024 * 1024
+
 RECORDS_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType()),
@@ -299,6 +307,45 @@ def _read_serving_rows(path: str, want: list[str]) -> pa.Table:
                         continue
             groups.append(rg)
         return pf.read_row_groups(groups, columns=_SERVING_COLUMNS)
+
+
+def _file_batches(paths: Iterable[str]) -> Iterable[pa.RecordBatch]:
+    """The rows of the data files ``paths``, file by file, in
+    :data:`_RECORDS_FILE_SCHEMA` as Spark's ``.schema(RECORDS_SCHEMA)``
+    read sees them: each column cast to its declared type (INT96
+    decoded at microsecond precision, any timestamp unit to micros), a
+    missing column as NULLs, any other column (a data-file
+    ``group_id``) dropped."""
+    for path in paths:
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+            for b in pf.iter_batches():
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        b.column(f.name).cast(f.type)
+                        if f.name in b.schema.names
+                        else pa.nulls(b.num_rows, f.type)
+                        for f in _RECORDS_FILE_SCHEMA
+                    ],
+                    schema=_RECORDS_FILE_SCHEMA,
+                )
+
+
+def _row_groups(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.Table]:
+    """Re-cut ``batches`` into tables of :data:`_ROW_GROUP_ROWS` rows
+    (the last one shorter), so tiny inputs still make full row groups;
+    at most one table's rows plus one batch are held at a time."""
+    buf: list[pa.RecordBatch] = []
+    n = 0
+    for b in batches:
+        buf.append(b)
+        n += b.num_rows
+        while n >= _ROW_GROUP_ROWS:
+            t = pa.Table.from_batches(buf, _RECORDS_FILE_SCHEMA)
+            yield t.slice(0, _ROW_GROUP_ROWS)
+            rest = t.slice(_ROW_GROUP_ROWS)
+            buf, n = rest.to_batches(), rest.num_rows
+    if n:
+        yield pa.Table.from_batches(buf, _RECORDS_FILE_SCHEMA)
 
 
 # --- per-file entity-id bloom index (Delta bloom-filter-index analogue) ---
@@ -813,19 +860,35 @@ class FeatureStore:
             schema=_RECORDS_PA_SCHEMA,
         )
         self._enforce_constraints(tbl)
-        added: list[dict[str, Any]] = []
-        for gid in sorted(tbl["group_id"].unique().to_pylist()):
-            rows = tbl.filter(pc.equal(tbl["group_id"], gid))
-            rel = os.path.join(f"group_id={gid}", f"part-{uuid.uuid4().hex}.parquet")
-            dst = os.path.join(self._records_path, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            with open(dst, "wb") as fh:
-                pq.write_table(rows.drop_columns("group_id"), fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            added.append(self._add_entry(rel))
+        added = [
+            self._write_live_file(
+                gid,
+                [tbl.filter(pc.equal(tbl["group_id"], gid)).drop_columns("group_id")],
+            )
+            for gid in sorted(tbl["group_id"].unique().to_pylist())
+        ]
         if added:
             self._log.commit("append", add=added, remove=[])
+
+    def _write_live_file(
+        self, group_id: str, tables: Iterable[pa.Table]
+    ) -> dict[str, Any]:
+        """Write ``tables`` (in :data:`_RECORDS_FILE_SCHEMA`) as one new
+        file of ``group_id``'s partition, straight into the live tree
+        under a unique name, and fsync it; returns its manifest
+        add-entry. The file stays invisible until a commit lists it. A
+        table of up to pyarrow's default row-group length is one row
+        group."""
+        rel = os.path.join(f"group_id={group_id}", f"part-{uuid.uuid4().hex}.parquet")
+        dst = os.path.join(self._records_path, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        with open(dst, "wb") as fh:
+            with pq.ParquetWriter(fh, _RECORDS_FILE_SCHEMA) as writer:
+                for t in tables:
+                    writer.write_table(t)
+            fh.flush()
+            os.fsync(fh.fileno())
+        return self._add_entry(rel)
 
     # ------------------------------------------------------------------
     # data plane: commit-log plumbing (versioning.py)
@@ -1574,37 +1637,67 @@ class FeatureStore:
 
         The reference-parity single-record ``write_features`` emits one
         tiny parquet file per call; at any real ingest rate that is a
-        small-files scan killer. Compaction reads a group's partition
-        (or all of them), coalesces to ``ceil(rows / target)`` files,
-        and commits ``{add: compacted, remove: old}`` in one atomic
-        manifest. Returns the row count.
+        small-files scan killer. Compaction rewrites a group's partition
+        (or all of them) into ``ceil(rows / target)`` files, sized from
+        the live files' footers, and commits ``{add: compacted, remove:
+        old}`` in one atomic manifest. Returns the row count.
+
+        A rewrite into one file without ``cluster_by`` (at most
+        ``target_rows_per_file`` rows in all) runs no Spark job: each partition's
+        live files stream through pyarrow on the driver into one new
+        file per ``group_id=`` partition, in full row groups (one per
+        file at the default target), read as Spark's schema'd read
+        would (INT96 at microsecond precision, a missing column as
+        NULLs). Clustered and multi-file rewrites need a range sort or
+        parallel writers, so they stay Spark jobs.
 
         Crash safety and concurrency come from the commit log: the
         table is never unreachable (old files stay live until the
-        commit lands; a crash leaves only invisible staged files for
-        :meth:`vacuum`), readers pinned at older versions keep their
-        snapshot, and an append that commits *while* the compaction
-        runs survives — its files are not in this commit's remove set,
-        so replay keeps them live alongside the compacted files. Old
-        pre-compaction files remain for time travel until vacuumed.
+        commit lands; a crash leaves only unreferenced new files, which
+        :meth:`vacuum` reclaims after its orphan grace), readers pinned
+        at older versions keep their snapshot, and an append that
+        commits *while* the compaction runs survives — its files are
+        not in this commit's remove set, so replay keeps them live
+        alongside the compacted files. A delete that commits first
+        makes this commit's remove set stale, so it aborts with
+        :class:`ConcurrentModificationError`. Old pre-compaction files
+        remain for time travel until vacuumed.
         """
-        import math
-
         snapshot = self._log.latest_version()
         old_files = self._log.live_files(snapshot)
         if group_id is not None:
             prefix = f"group_id={group_id}/"
             old_files = [f for f in old_files if f.startswith(prefix)]
         # Footer row counts size the rewrite with no count job; exact,
-        # since every row under group_id=<g>/ belongs to <g>.
-        n = sum(
-            pq.read_metadata(os.path.join(self._records_path, f)).num_rows
-            for f in old_files
-        )
+        # since every row under group_id=<g>/ belongs to <g>. Empty
+        # files are only removed, so a group with no rows gets no new
+        # file, as in Spark's rewrite.
+        by_group: dict[str, list[str]] = {}
+        n = 0
+        for f in old_files:
+            rows = pq.read_metadata(os.path.join(self._records_path, f)).num_rows
+            if rows:
+                gid = f.split("/", 1)[0][len("group_id="):]
+                by_group.setdefault(gid, []).append(f)
+                n += rows
         if n == 0:
             return 0
-        df = self.records_df(group_id, version=snapshot)
         files = max(1, math.ceil(n / target_rows_per_file))
+        if files == 1 and not cluster_by:
+            added = [
+                self._write_live_file(
+                    gid,
+                    _row_groups(
+                        _file_batches(
+                            os.path.join(self._records_path, f) for f in paths
+                        )
+                    ),
+                )
+                for gid, paths in sorted(by_group.items())
+            ]
+            self._log.commit("compact", add=added, remove=old_files)
+            return n
+        df = self.records_df(group_id, version=snapshot)
         if cluster_by and zorder and len(cluster_by) > 1:
             from blackroad_feature_store_spark.operators.util import (
                 zorder_key,
@@ -1620,10 +1713,6 @@ class FeatureStore:
             rewritten = df.repartitionByRange(
                 files, *cluster_by
             ).sortWithinPartitions(*cluster_by)
-        elif files == 1:
-            # One output file needs no shuffle: one task reads and
-            # writes, and the rewrite is a single job.
-            rewritten = df.coalesce(1)
         else:
             rewritten = df.repartition(files)
         self._stage_and_commit(rewritten, op="compact", remove=old_files)

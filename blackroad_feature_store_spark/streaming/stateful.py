@@ -9,14 +9,16 @@ key has been quiet for ``gap`` (not on fixed window boundaries).
 State model per key: (session_start_us, last_seen_us, n_events,
 sum_value). Each micro-batch folds its rows into the open session;
 a processing-time timeout (GroupStateTimeout) flushes sessions whose
-key has gone quiet. Arrow moves the per-key batches — the kernel is
-vectorized pandas, not per-row Python.
+key has gone quiet. Arrow moves the per-key batches — the kernel
+(``_split_sessions``) is vectorized numpy, not per-row Python.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
+from typing import Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,6 +37,44 @@ SESSION_SCHEMA = T.StructType(
 )
 
 STATE_SCHEMA = "start_us long, last_us long, n long, s double"
+
+
+def _split_sessions(
+    ts_us: np.ndarray,
+    vals: np.ndarray,
+    gap_us: int,
+    carry: Optional[tuple[int, int, int, float]] = None,
+) -> tuple[tuple[np.ndarray, ...], tuple[int, int, int, float]]:
+    """Fold one key's batch — ``ts_us`` sorted ascending, non-empty —
+    into its open session ``carry`` (``(start_us, last_us, n, s)``, or
+    None for a new key). A row more than ``gap_us`` after the latest
+    timestamp seen before it closes the open session and opens the
+    next. Returns the closed sessions as ``(start, end, n, s)`` arrays
+    and the session left open, to carry to the next batch.
+
+    Vectorized: a running max seeded from the carried ``last_us`` gives
+    each row's predecessor, ``diff > gap_us`` marks the breaks, and
+    per-segment sums give ``n`` and ``s``; the carried session is the
+    first segment."""
+    if carry is None:  # last0 = t[0]: the first row never breaks
+        start0, last0, n0, s0 = int(ts_us[0]), int(ts_us[0]), 0, 0.0
+    else:
+        start0, last0, n0, s0 = carry
+    # seen[i]: the latest timestamp before row i, the carried one
+    # included; seen[-1]: the latest after the whole batch
+    seen = np.maximum.accumulate(np.concatenate(([last0], ts_us)))
+    breaks = ts_us - seen[:-1] > gap_us
+    cuts = np.flatnonzero(breaks)
+    bounds = np.concatenate(([0], cuts, [len(ts_us)]))
+    n = np.diff(bounds)
+    s = np.add.reduceat(vals, bounds[:-1])
+    s[n == 0] = 0.0  # reduceat reads an empty first segment as one row
+    n[0] += n0
+    s[0] += s0
+    start = np.concatenate(([start0], ts_us[cuts]))
+    end = seen[bounds[1:]]
+    closed = (start[:-1], end[:-1], n[:-1], s[:-1])
+    return closed, (int(start[-1]), int(end[-1]), int(n[-1]), float(s[-1]))
 
 
 def _fold(
@@ -65,24 +105,11 @@ def _fold(
     # Normalize to µs explicitly: the Arrow→pandas path may deliver
     # datetime64[ns] or datetime64[us] depending on pandas/pyarrow
     # versions, and assuming ns would shrink gaps 1000× on a us input.
-    ts_us = rows["ts"].astype("datetime64[us]").astype("int64")
-    vals = rows["value"].astype("float64")
-
-    out = []
-    if state.exists:
-        start_us, last_us, n, s = state.get
-    else:
-        start_us = last_us = int(ts_us.iloc[0])
-        n, s = 0, 0.0
-
-    for t, v in zip(ts_us, vals):
-        t = int(t)
-        if n > 0 and t - last_us > gap_us:
-            out.append((start_us, last_us, n, s, True))
-            start_us, n, s = t, 0, 0.0
-        last_us = max(last_us, t)
-        n += 1
-        s += float(v)
+    ts_us = rows["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+    vals = rows["value"].astype("float64").to_numpy()
+    closed, (start_us, last_us, n, s) = _split_sessions(
+        ts_us, vals, gap_us, state.get if state.exists else None
+    )
 
     state.update((start_us, last_us, n, s))
     if event_time:
@@ -92,15 +119,16 @@ def _fold(
     else:
         state.setTimeoutDuration(gap_us // 1000)  # µs → ms of quiet
 
-    if out:
+    if len(closed[0]):
+        start, end, count, total = closed
         yield pd.DataFrame(
             {
-                "user_id": [user_id] * len(out),
-                "session_start": [pd.Timestamp(o[0], unit="us") for o in out],
-                "session_end": [pd.Timestamp(o[1], unit="us") for o in out],
-                "n_events": [o[2] for o in out],
-                "sum_value": [o[3] for o in out],
-                "closed": [o[4] for o in out],
+                "user_id": [user_id] * len(start),
+                "session_start": pd.to_datetime(start, unit="us"),
+                "session_end": pd.to_datetime(end, unit="us"),
+                "n_events": count,
+                "sum_value": total,
+                "closed": True,
             }
         )
 

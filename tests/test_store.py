@@ -410,9 +410,10 @@ def test_append_is_job_free_one_file_per_group(store_with_features):
         assert "entity_bloom" in e
 
 
-def test_fired_maybe_compact_is_one_spark_job(store_with_group):
-    """A compaction sizes its rewrite from the live files' footers, so
-    a fired ``maybe_compact`` runs exactly one Spark job: the rewrite."""
+def test_fired_maybe_compact_runs_no_spark_job(store_with_group):
+    """A compaction sizes its rewrite from the live files' footers and
+    writes a one-file rewrite with pyarrow on the driver, so a fired
+    ``maybe_compact`` runs no Spark job."""
     from blackroad_feature_store_spark.store import EntityRecord
 
     s, g = store_with_group
@@ -427,9 +428,194 @@ def test_fired_maybe_compact_is_one_spark_job(store_with_group):
         lambda: s.maybe_compact(g.id, max_files=2),
     )
     assert n == 60
-    assert len(jobs) == 1
+    assert jobs == []
     assert len(s._log.live_files()) == 1
+    assert s.history()[0]["op"] == "compact"
     assert s.get_features(g.id, "u7") == {"age": 10}
+
+
+def test_compacted_tiny_appends_make_one_row_group(store_with_group):
+    """Forty tiny appends compact into one file holding one row group,
+    not one row group per input file. The file carries footer
+    ``timestamp`` min/max, and the manifest's stats are those."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    s, g = store_with_group
+    for i in range(40):
+        s.write_features_batch(
+            [EntityRecord(g.id, f"u{i % 7}", {"age": i},
+                          datetime(2024, 1, 1 + i % 28, i % 24))]
+        )
+    assert s.compact_records(g.id) == 40
+    (entry,) = s._log.live_entries()
+    md = pq.read_metadata(os.path.join(s._records_path, entry["path"]))
+    assert (md.num_rows, md.num_row_groups) == (40, 1)
+    names = [md.schema.column(i).name for i in range(md.num_columns)]
+    assert "group_id" not in names
+    st = md.row_group(0).column(names.index("timestamp")).statistics
+    assert st.has_min_max
+    assert (entry["min_ts"], entry["max_ts"]) == (
+        "2024-01-01T00:00:00", "2024-01-28T03:00:00"
+    )
+    assert st.min.replace(tzinfo=None).isoformat() == entry["min_ts"]
+    assert st.max.replace(tzinfo=None).isoformat() == entry["max_ts"]
+    assert "entity_bloom" in entry
+    assert s.get_features(g.id, "u3") == {"age": 24}
+
+
+def test_driver_compaction_cuts_full_row_groups(store_with_group, monkeypatch):
+    """Past the row-group length, the rewrite cuts full row groups
+    across input-file boundaries and writes the rest as a last, shorter
+    one (the length is shrunk to 4 rows here)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from blackroad_feature_store_spark import store as store_mod
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    s, g = store_with_group
+    for k in (3, 3, 1, 3):
+        s.write_features_batch(
+            [EntityRecord(g.id, f"u{k}{i}", {"age": i}, datetime(2024, 1, 1))
+             for i in range(k)]
+        )
+    before = sorted(r["entity_id"] for r in s.records_df(g.id).collect())
+    monkeypatch.setattr(store_mod, "_ROW_GROUP_ROWS", 4)
+    assert s.compact_records(g.id) == 10
+    (path,) = s._log.live_files()
+    md = pq.read_metadata(os.path.join(s._records_path, path))
+    assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] == [
+        4, 4, 2
+    ]
+    assert sorted(r["entity_id"] for r in s.records_df(g.id).collect()) == (
+        before
+    )
+
+
+def test_driver_compaction_keeps_every_row_of_mixed_files(store_with_group):
+    """A group holding a Spark INT96 bulk file, a Spark TIMESTAMP_MILLIS
+    file, a pyarrow append and a legacy file with no ``version`` column
+    compacts, with no Spark job, to one file holding exactly the row
+    multiset ``records_df`` read before: every column, NULLs kept."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blackroad_feature_store_spark.store import (
+        RECORDS_SCHEMA,
+        EntityRecord,
+    )
+
+    s, g = store_with_group
+    part = os.path.join(s._records_path, f"group_id={g.id}")
+    os.makedirs(part)
+    pq.write_table(
+        pa.table(
+            {
+                "id": ["legacy0", None],
+                "entity_id": ["u1", "u2"],
+                "feature_values": pa.array(
+                    [[("age", "7")], None], pa.map_(pa.string(), pa.string())
+                ),
+                "timestamp": pa.array(
+                    [datetime(2023, 5, 1, 1, 2, 3, 456789), None],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+            }
+        ),
+        os.path.join(part, "part-legacy.parquet"),
+    )
+    shutil.rmtree(os.path.join(s.base_path, "_versions"))
+    s = FeatureStore(s.spark, s.base_path)  # migrate adopts the file
+    spark = s.spark
+
+    def bulk(tag):
+        return spark.createDataFrame(
+            [
+                (f"{tag}0", g.id, "u1", {"age": "1", "city": None},
+                 datetime(1000, 3, 1, 12), 1),
+                (f"{tag}1", g.id, "u2", {}, None, None),
+                (None, g.id, "u3", None, datetime(2024, 1, 1, 0, 0, 1), 3),
+                (f"{tag}3", g.id, None, {"age": "4"},
+                 datetime(2024, 6, 1, 0, 0, 0, 123000), 2),
+            ],
+            RECORDS_SCHEMA,
+        )
+
+    s.write_records_df(bulk("i96"))
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    try:
+        s.write_records_df(bulk("ms"))
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    s.write_features_batch(
+        [EntityRecord(g.id, "u4", {"city": "x", "income": None},
+                      datetime(2024, 2, 2, 2), version=5, id="app0")]
+    )
+    types = {
+        str(pq.read_schema(os.path.join(s._records_path, f)).field(
+            "timestamp").type)
+        for f in s._log.live_files()
+    }
+    # INT96 (read here at pyarrow's default ns), millis, micros
+    assert types == {
+        "timestamp[ns]", "timestamp[ms, tz=UTC]", "timestamp[us, tz=UTC]"
+    }
+
+    def rows():
+        return sorted(
+            (
+                tuple(
+                    tuple(sorted(v.items())) if isinstance(v, dict) else v
+                    for v in r
+                )
+                for r in s.records_df(g.id).collect()
+            ),
+            key=repr,
+        )
+
+    before = rows()
+    assert len(before) == 11
+    n, jobs = _jobs_under(
+        spark.sparkContext, "driver_compaction",
+        lambda: s.compact_records(g.id),
+    )
+    assert (n, jobs) == (11, [])
+    assert len(s._log.live_files()) == 1
+    assert rows() == before
+
+
+def test_clustered_and_multi_file_compactions_run_on_spark(store_with_group):
+    """``cluster_by`` (lexicographic or Z-order) needs a range sort and
+    a target under the row count needs parallel writers: those
+    rewrites stay Spark jobs, and keep every row."""
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    s, g = store_with_group
+    for i in range(6):
+        s.write_features_batch(
+            [EntityRecord(g.id, f"u{i}", {"age": i}, datetime(2024, 1, 1 + i))]
+        )
+    for tag, kwargs in [
+        ("cluster_by", {"cluster_by": ["timestamp"]}),
+        ("zorder", {"cluster_by": ["entity_id", "timestamp"], "zorder": True}),
+        ("multi_file", {"target_rows_per_file": 4}),
+    ]:
+        n, jobs = _jobs_under(
+            s.spark.sparkContext, f"compaction_{tag}",
+            lambda: s.compact_records(g.id, **kwargs),
+        )
+        assert n == 6, tag
+        assert len(jobs) >= 1, tag
+        assert s.records_df(g.id).count() == 6, tag
+        assert s.get_features(g.id, "u5") == {"age": 5}, tag
 
 
 def test_mixed_writers_read_identically_before_and_after_compaction(
@@ -853,6 +1039,59 @@ def test_compact_records_crash_before_commit_is_invisible(store_with_group):
     reopened = FeatureStore(store.spark, store.base_path)
     assert reopened.compact_records(g.id) == 6
     assert reopened.records_df(g.id).count() == 6
+
+
+def test_legacy_compaction_between_renames_recovers_at_open(spark, tmp_path):
+    """A store written before the commit log could crash a compaction
+    between its two renames, leaving the pre-compaction copy of a
+    partition under ``compact_old/``. Opening it restores a copy whose
+    live partition is missing and drops a stale copy whose live
+    partition exists; the migration then adopts exactly the live
+    files."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "legacy"
+
+    def part_file(root, gid, name, age):
+        d = root / f"group_id={gid}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table(
+                {
+                    "id": [name],
+                    "entity_id": ["u1"],
+                    "feature_values": pa.array(
+                        [[("age", str(age))]], pa.map_(pa.string(), pa.string())
+                    ),
+                    "timestamp": pa.array(
+                        [datetime(2024, 1, 1)], pa.timestamp("us", tz="UTC")
+                    ),
+                    "version": pa.array([1], pa.int32()),
+                }
+            ),
+            str(d / f"{name}.parquet"),
+        )
+
+    # group a: crashed after the aside rename, before the move-in
+    part_file(base / "compact_old", "a", "a_old", 1)
+    # group b: crashed after the move-in, before the copy was dropped
+    part_file(base / "compact_old", "b", "b_old", 2)
+    part_file(base / "entity_records", "b", "b_new", 3)
+
+    s = FeatureStore(spark, str(base))
+    assert not (base / "compact_old").exists()
+    assert sorted(s._log.live_files()) == [
+        os.path.join("group_id=a", "a_old.parquet"),
+        os.path.join("group_id=b", "b_new.parquet"),
+    ]
+    got = {
+        (r["group_id"], r["id"], r["feature_values"]["age"])
+        for r in s.records_df().collect()
+    }
+    assert got == {("a", "a_old", "1"), ("b", "b_new", "3")}
 
 
 def test_time_travel_and_history(store_with_group):

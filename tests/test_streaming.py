@@ -164,6 +164,70 @@ def test_windowed_counts_streaming_plan(spark, tmp_path):
     assert rows[("view", "2026-01-01T01:00:00")] == (1, 5.0)
 
 
+def _split_sessions_by_loop(ts_us, vals, gap_us, carry):
+    """The per-row fold the vectorized kernel replaces: a row more than
+    ``gap_us`` after the latest timestamp so far closes the session."""
+    if carry is None:
+        start_us = last_us = int(ts_us[0])
+        n, s = 0, 0.0
+    else:
+        start_us, last_us, n, s = carry
+    out = []
+    for t, v in zip(ts_us, vals):
+        t = int(t)
+        if n > 0 and t - last_us > gap_us:
+            out.append((start_us, last_us, n, s))
+            start_us, n, s = t, 0, 0.0
+        last_us = max(last_us, t)
+        n += 1
+        s += float(v)
+    return out, (start_us, last_us, n, s)
+
+
+def test_split_sessions_matches_per_row_loop():
+    """The numpy sessionization kernel equals the per-row loop on random
+    sorted batches (ties and gaps straddling ``gap_us``), with no
+    carried session and with one, including a carried ``last_us`` past
+    the batch's first row (late data)."""
+    import numpy as np
+
+    from blackroad_feature_store_spark.streaming.stateful import (
+        _split_sessions,
+    )
+
+    rng = np.random.default_rng(7)
+    gap_us = 1_000
+    for case in range(600):
+        size = int(rng.integers(1, 40))
+        steps = rng.choice([0, 1, 999, 1_000, 1_001, 5_000], size=size)
+        ts_us = np.cumsum(steps).astype(np.int64) + int(rng.integers(0, 10**6))
+        vals = rng.normal(size=size).round(3)
+        mode = case % 3
+        if mode == 0:
+            carry = None
+        else:
+            # mode 2: the carried session's last row is past the
+            # batch's first (late) row, sometimes past all of them
+            lead = (
+                int(rng.integers(1, 3_000)) if mode == 1
+                else -int(rng.integers(0, ts_us[-1] - ts_us[0] + 2_000))
+            )
+            last = int(ts_us[0]) - lead
+            carry = (last - int(rng.integers(0, 5_000)), last,
+                     int(rng.integers(1, 9)), float(rng.normal()))
+        want_closed, want_open = _split_sessions_by_loop(
+            ts_us, vals, gap_us, carry
+        )
+        closed, still_open = _split_sessions(ts_us, vals, gap_us, carry)
+        got_closed = list(zip(*(a.tolist() for a in closed)))
+        assert [c[:3] for c in got_closed] == [c[:3] for c in want_closed]
+        assert [c[3] for c in got_closed] == pytest.approx(
+            [c[3] for c in want_closed], abs=1e-9
+        )
+        assert still_open[:3] == want_open[:3], case
+        assert still_open[3] == pytest.approx(want_open[3], abs=1e-9)
+
+
 def test_stateful_sessionize_stream(spark, tmp_path):
     """applyInPandasWithState sessionizer run as a real stream."""
     from blackroad_feature_store_spark.streaming.stateful import (
