@@ -33,7 +33,9 @@ Relative paths are against the record-table root. Replaying the log in
 version order yields the live file set at any version. Add actions may
 carry per-file column statistics (``min_ts``/``max_ts``) — Delta's
 stats pattern — which versioned reads use for data skipping: an as-of
-query drops whole files from the scan using the manifest alone.
+query drops whole files from the scan using the manifest alone. They
+may also carry the file's ``rows`` and ``bytes``, which
+:meth:`CommitLog.history` sums into each commit's ``rows_added``.
 
 Commit protocol: write the manifest to a temp name, fsync, then
 ``os.link`` it to ``{version:08d}.json``. Hard-linking is atomic and
@@ -261,17 +263,24 @@ class CommitLog:
 
     def history(self) -> list[dict[str, Any]]:
         """All commits, newest first, with add/remove collapsed to
-        counts (the full file lists stay in the manifests)."""
+        counts (the full file lists stay in the manifests).
+        ``rows_added`` sums the add actions' ``rows``; it is None when
+        one of them predates that field."""
         out = []
         for v in reversed(self.versions()):
             m = self.read(v)
+            rows = [
+                f.get("rows") if isinstance(f, dict) else None
+                for f in m.get("add", ())
+            ]
             out.append(
                 {
                     "version": m["version"],
                     "ts": m["ts"],
                     "op": m["op"],
-                    "files_added": len(m.get("add", ())),
+                    "files_added": len(rows),
                     "files_removed": len(m.get("remove", ())),
+                    "rows_added": None if None in rows else sum(rows),
                 }
             )
         return out

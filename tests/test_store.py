@@ -3,6 +3,10 @@ for-assertion (reference tests/test_feature_store.py:33-152; inventory
 in SURVEY.md §5.1), plus a few extras the Spark engine adds (batch
 writes, deterministic tie-breaks, open schema round-trip)."""
 
+import base64
+import hashlib
+import math
+import os
 from datetime import datetime
 
 import pytest
@@ -470,7 +474,9 @@ def test_compacted_tiny_appends_make_one_row_group(store_with_group):
 def test_driver_compaction_cuts_full_row_groups(store_with_group, monkeypatch):
     """Past the row-group length, the rewrite cuts full row groups
     across input-file boundaries and writes the rest as a last, shorter
-    one (the length is shrunk to 4 rows here)."""
+    one (the length is shrunk to 4 rows here). The add-entry's row
+    count and bloom, built from the row groups as they are written,
+    cover the whole file."""
     import os
 
     import pyarrow.parquet as pq
@@ -487,11 +493,14 @@ def test_driver_compaction_cuts_full_row_groups(store_with_group, monkeypatch):
     before = sorted(r["entity_id"] for r in s.records_df(g.id).collect())
     monkeypatch.setattr(store_mod, "_ROW_GROUP_ROWS", 4)
     assert s.compact_records(g.id) == 10
-    (path,) = s._log.live_files()
-    md = pq.read_metadata(os.path.join(s._records_path, path))
+    (entry,) = s._log.live_entries()
+    path = os.path.join(s._records_path, entry["path"])
+    md = pq.read_metadata(path)
     assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] == [
         4, 4, 2
     ]
+    assert entry["rows"] == 10
+    assert entry["entity_bloom"] == store_mod._file_entity_bloom(path)
     assert sorted(r["entity_id"] for r in s.records_df(g.id).collect()) == (
         before
     )
@@ -1207,6 +1216,124 @@ def test_delete_entity_records_last_entity_empties_partition(store_with_group):
     assert store.records_df(g.id).count() == 1
 
 
+def test_delete_entity_keeps_null_entity_rows(store_with_group):
+    """A row whose ``entity_id`` is NULL is no match for any entity, so
+    delete-entity keeps it."""
+    from blackroad_feature_store_spark.store import EntityRecord
+
+    store, g = store_with_group
+    store.write_features_batch(
+        [
+            EntityRecord(g.id, e, {"age": i}, datetime(2026, 1, 1 + i))
+            for i, e in enumerate(["a", None, "b"])
+        ]
+    )
+    assert store.delete_entity_records(g.id, "a") == 1
+    rows = [
+        (r["entity_id"], r["feature_values"]["age"])
+        for r in store.records_df(g.id).collect()
+    ]
+    assert len(rows) == 2 and set(rows) == {(None, "1"), ("b", "2")}
+
+
+def test_delete_entity_rewrites_only_the_files_holding_it(store_with_group):
+    """Delete-entity runs no Spark job. Of a group's files it removes
+    only those holding the entity, adds at most one file per removed
+    file (none for a file left empty), leaves a file whose bloom
+    admits the entity by a false positive untouched, and keeps an
+    append that commits while it runs."""
+    from blackroad_feature_store_spark.store import (
+        EntityRecord,
+        _bloom_maybe_contains,
+    )
+    from blackroad_feature_store_spark.versioning import CommitLog
+
+    store, g = store_with_group
+
+    def append(*ents):
+        store.write_features_batch(
+            [EntityRecord(g.id, e, {"age": i}, datetime(2026, 1, 1 + i % 28))
+             for i, e in enumerate(ents)]
+        )
+        return store._log.read(store._log.latest_version())["add"][0]
+
+    big = append(*[f"e{i}" for i in range(500)])
+    # an id absent from ``big`` whose bloom still admits it
+    victim = next(
+        v for v in (f"x{i}" for i in range(100_000))
+        if _bloom_maybe_contains(big["entity_bloom"], v)
+    )
+    mixed = append(victim, "k1", victim, None)
+    only = append(victim)
+    other = append("k3")
+    before = {e["path"] for e in store._log.live_entries()}
+    assert {big["path"], mixed["path"], only["path"], other["path"]} == before
+
+    orig_commit = CommitLog.commit
+    state = {"injected": False}
+
+    def racing_commit(self, op, add, remove, meta=None):
+        if op == "delete-entity" and not state["injected"]:
+            state["injected"] = True
+            store.write_features_batch(
+                [EntityRecord(g.id, "late", {"age": 7}, datetime(2026, 2, 1))]
+            )
+        return orig_commit(self, op, add, remove, meta)
+
+    CommitLog.commit = racing_commit
+    try:
+        n, jobs = _jobs_under(
+            store.spark.sparkContext,
+            "delete_entity",
+            lambda: store.delete_entity_records(g.id, victim),
+        )
+    finally:
+        CommitLog.commit = orig_commit
+    assert (n, jobs) == (3, [])
+    m = store._log.read(store._log.latest_version())
+    assert m["op"] == "delete-entity"
+    assert sorted(m["remove"]) == sorted([mixed["path"], only["path"]])
+    assert len(m["add"]) == 1 and m["add"][0]["rows"] == 2
+    live = {e["path"] for e in store._log.live_entries()}
+    assert {big["path"], other["path"]} <= live
+    assert len(live) == 4  # big, other, the rewrite of mixed, late
+    assert store.get_features(g.id, victim) is None
+    assert store.get_features(g.id, "late") == {"age": 7}
+    assert store.get_features(g.id, "k1") == {"age": 1}
+    assert store.records_df(g.id).count() == 500 + 2 + 1 + 1
+
+
+def test_history_reports_rows_added(store_with_group, tmp_path):
+    """Each add-entry records its file's ``rows`` and ``bytes``;
+    ``history`` sums the rows per commit, and reports None for a
+    manifest whose add actions predate the field."""
+    from blackroad_feature_store_spark.store import EntityRecord
+    from blackroad_feature_store_spark.versioning import CommitLog
+
+    store, g = store_with_group
+    for day in (1, 2):
+        store.write_features_batch(
+            [EntityRecord(g.id, f"u{i}", {"age": i}, datetime(2026, 1, day))
+             for i in range(5)]
+        )
+    assert store.compact_records(g.id) == 10
+    assert store.delete_entity_records(g.id, "u3") == 2
+    h = store.history()
+    assert [(e["op"], e["rows_added"]) for e in h] == [
+        ("delete-entity", 8), ("compact", 10), ("append", 5), ("append", 5)
+    ]
+    entry = store._log.read(store._log.latest_version())["add"][0]
+    path = os.path.join(store._records_path, entry["path"])
+    assert entry["bytes"] == os.path.getsize(path)
+    assert store.delete_entity_records(g.id, "ghost") == 0
+    assert len(store.history()) == 4  # no hit: no commit
+
+    log = CommitLog(str(tmp_path / "old_log"))
+    log.commit("append", add=["group_id=g/a.parquet"], remove=[])
+    log.commit("delete-entity", add=[], remove=["group_id=g/a.parquet"])
+    assert [e["rows_added"] for e in log.history()] == [0, None]
+
+
 # -- concurrent writers (registry reload-merge) ------------------------------
 
 def test_two_writers_merge_disjoint_features(spark, tmp_path):
@@ -1413,6 +1540,9 @@ def test_entity_bloom_malformed_or_absent_is_unskippable():
     assert _bloom_maybe_contains({"m": 64}, "x") is True
     assert _bloom_maybe_contains({"m": 64, "k": 7, "bits": "!!"}, "x") is True
     assert _bloom_maybe_contains({"m": -1, "k": 7, "bits": "AA=="}, "x") is True
+    # every position of a 96-bit bloom is unset, but 96 is not a power
+    # of two, so the masked positions would be wrong: unskippable
+    assert _bloom_maybe_contains({"m": 96, "k": 7, "bits": "A" * 16}, "x") is True
     # Unreadable file -> no bloom, not an exception.
     assert _file_entity_bloom("/nonexistent/file.parquet") is None
 
@@ -1447,6 +1577,78 @@ def test_entity_bloom_property_no_false_negatives(tmp_path):
         absent = [f"x{rng.randrange(10**9)}" for _ in range(500)]
         fp = sum(_bloom_maybe_contains(bloom, a) for a in absent)
         assert fp < 50  # ~1% expected at 10 bits/key; 10% is the wire
+
+
+def _reference_bloom_positions(value, m, k=7):
+    d = hashlib.blake2b(value.encode("utf-8"), digest_size=16).digest()
+    h1 = int.from_bytes(d[:8], "little")
+    h2 = int.from_bytes(d[8:], "little") | 1
+    return [(h1 + i * h2) % m for i in range(k)]
+
+
+def _reference_bloom(ids):
+    """The bloom layout every manifest holds, with Python integers:
+    10 bits per distinct non-NULL id rounded up to a power of two (at
+    least 64, at most 2**17, else no bloom), 7 Kirsch-Mitzenmacher
+    positions per id, bit ``p`` at byte ``p >> 3``, bit ``p & 7``."""
+    distinct = {v for v in ids if v is not None}
+    if not distinct:
+        return None
+    m = 1 << max(6, math.ceil(math.log2(len(distinct) * 10)))
+    if m > 1 << 17:
+        return None
+    bits = bytearray(m // 8)
+    for v in distinct:
+        for p in _reference_bloom_positions(v, m):
+            bits[p >> 3] |= 1 << (p & 7)
+    return {"m": m, "k": 7, "bits": base64.b64encode(bytes(bits)).decode()}
+
+
+def test_entity_bloom_bits_match_python_reference(tmp_path):
+    """The vectorized bloom — built from the writer's per-table
+    ``pc.unique`` chunks or from a file's column — is byte-identical
+    to the Python-integer reference, across the size cap, and probes
+    as the reference does."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blackroad_feature_store_spark.store import (
+        _BLOOM_MAX_BITS,
+        _bloom_maybe_contains,
+        _entity_bloom,
+        _file_entity_bloom,
+    )
+
+    cap = _BLOOM_MAX_BITS // 10  # most distinct ids a bloom holds
+    rng = random.Random(20261021)
+    alphabet = "ab\u00e9\u7528\U0001f600 "
+    for n in (0, 1, 2, 7, 64, 700, cap, cap + 1):
+        distinct = {""} if n else set()
+        while len(distinct) < n:
+            distinct.add(
+                "".join(rng.choice(alphabet) for _ in range(rng.randrange(12)))
+            )
+        ids = list(distinct) * 2 + [None] * 3
+        rng.shuffle(ids)
+        want = _reference_bloom(ids)
+        assert (want is None) == (n == 0 or n > cap)
+        chunks = [pa.array(ids[i::3], pa.string()) for i in range(3)]
+        assert _entity_bloom(pa.chunked_array(chunks)) == want
+        path = str(tmp_path / f"ids{n}.parquet")
+        pq.write_table(pa.table({"entity_id": pa.array(ids, pa.string())}), path)
+        assert _file_entity_bloom(path) == want
+        if want is None:
+            continue
+        bits = base64.b64decode(want["bits"])
+        probes = list(distinct)[:50] + [f"absent{i}" for i in range(300)]
+        for v in probes:
+            ref = all(
+                bits[p >> 3] >> (p & 7) & 1
+                for p in _reference_bloom_positions(v, want["m"])
+            )
+            assert _bloom_maybe_contains(want, v) is ref
 
 
 def test_entity_bloom_survives_compaction(store_with_group):
