@@ -24,6 +24,7 @@ from blackroad_feature_store_spark.store import FeatureStore, FREQ_STREAMING
 from blackroad_feature_store_spark.streaming.partials import (
     Monoid,
     PartialStore,
+    start_foreach_batch,
 )
 
 
@@ -77,7 +78,7 @@ def start_ingest(
     ts_col: str,
     value_cols: list[str],
     checkpoint: str,
-    trigger_available_now: bool = False,
+    available_now: bool = False,
     refresh_rollup: str | None = None,
     auto_compact_max_files: int | None = None,
 ):
@@ -142,14 +143,9 @@ def start_ingest(
                 group_id, max_files=auto_compact_max_files
             )
 
-    writer = (
-        shaped.writeStream.foreachBatch(_commit_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        shaped, _commit_batch, checkpoint, available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_counts(
@@ -181,7 +177,7 @@ def materialize_windowed_features(
     checkpoint: str,
     window_duration: str = "1 hour",
     watermark: str = "2 hours",
-    trigger_available_now: bool = False,
+    available_now: bool = False,
 ):
     """Streaming feature engineering end-to-end: windowed aggregates of
     an event stream land in the store AS FEATURES, timestamped at
@@ -229,14 +225,9 @@ def materialize_windowed_features(
         )
         store._note_stream_commit(stream_id, batch_id)
 
-    writer = (
-        shaped.writeStream.foreachBatch(_commit_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        shaped, _commit_batch, checkpoint, available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # The ExactSubstr index: per window-hash pair, counts add and the

@@ -25,6 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blackroad_feature_store_spark.streaming.partials import (
+    start_foreach_batch,
+    write_batch_partition,
+)
+
 
 def interval_join(
     left: DataFrame,
@@ -140,10 +145,6 @@ def process_pit_enrich_batch(
     ``batch_id=`` directory — one job per batch instead of two."""
     from blackroad_feature_store_spark.operators.asof import as_of_join
 
-    from blackroad_feature_store_spark.streaming.partials import (
-        write_batch_partition,
-    )
-
     enriched = as_of_join(
         batch_df,
         records,
@@ -175,23 +176,19 @@ def start_pit_enrich_stream(
     join's — the records are cut to the batch's keys by a broadcast
     semi join, then sorted per key with the batch's spine rows; no
     state is held in Spark between batches."""
-    writer = (
-        spine.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_pit_enrich_batch(
-                batch_df,
-                batch_id,
-                records,
-                out_path,
-                on=on,
-                spine_ts_col=spine_ts_col,
-                rec_ts_col=rec_ts_col,
-                tiebreakers=tiebreakers,
-                tolerance=tolerance,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        spine,
+        lambda batch_df, batch_id: process_pit_enrich_batch(
+            batch_df,
+            batch_id,
+            records,
+            out_path,
+            on=on,
+            spine_ts_col=spine_ts_col,
+            rec_ts_col=rec_ts_col,
+            tiebreakers=tiebreakers,
+            tolerance=tolerance,
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -37,6 +37,7 @@ from blackroad_feature_store_spark.operators.dedup import (
 from blackroad_feature_store_spark.streaming.partials import (
     Monoid,
     PartialStore,
+    start_foreach_batch,
     write_batch_partition,
 )
 
@@ -118,22 +119,18 @@ def start_neardup_stream(
     pairs table to `duplicate_clusters` / `ngram_jaccard` exactly like
     the batch path.
     """
-    writer = (
-        docs.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_neardup_batch(
-                batch_df,
-                batch_id,
-                sig_path,
-                pairs_path,
-                id_col=id_col,
-                text_col=text_col,
-                num_bands=num_bands,
-                shingle_size=shingle_size,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        docs,
+        lambda batch_df, batch_id: process_neardup_batch(
+            batch_df,
+            batch_id,
+            sig_path,
+            pairs_path,
+            id_col=id_col,
+            text_col=text_col,
+            num_bands=num_bands,
+            shingle_size=shingle_size,
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

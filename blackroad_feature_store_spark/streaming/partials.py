@@ -70,6 +70,7 @@ from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from blackroad_feature_store_spark.streaming.fsio import store_fs
 
@@ -89,6 +90,28 @@ def write_batch_partition(
     batch for the staging commit + partition resolution plus two conf
     round-trips — pure overhead when the target is known statically."""
     df.write.mode("overwrite").parquet(f"{base_path}/batch_id={int(batch_id)}")
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    available_now: bool = False,
+) -> StreamingQuery:
+    """Start ``stream`` with ``fn(batch_df, batch_id)`` as its
+    foreachBatch sink, append output mode, checkpointed at
+    ``checkpoint`` — the one writer every foreachBatch starter
+    returns. ``available_now`` drains what the source holds at start
+    and stops (a one-shot run); otherwise the query runs until
+    stopped."""
+    writer = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def keyed_fold(**aggs: Callable[[str], Column]) -> Callable:

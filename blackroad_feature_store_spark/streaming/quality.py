@@ -49,6 +49,7 @@ from blackroad_feature_store_spark.streaming.partials import (
     Monoid,
     PartialStore,
     keyed_fold,
+    start_foreach_batch,
 )
 
 
@@ -271,18 +272,14 @@ def start_unique_gate_stream(
     :func:`process_unique_gate_batch` for why not per-key Python
     state). For a bounded-state horizon contract use
     `streaming/dedup.py::dedup_stream` upstream instead."""
-    writer = (
-        records.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_unique_gate_batch(
-                batch_df, batch_id, out_path, key_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        records,
+        lambda batch_df, batch_id: process_unique_gate_batch(
+            batch_df, batch_id, out_path, key_col
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def eval_winnow_fingerprints(
@@ -411,20 +408,16 @@ def start_decontamination_stream(
     per-document, so per-batch evaluation loses nothing. Use the same
     (k, window) the fingerprints were built with; give the gate its
     own ``out_path``."""
-    writer = (
-        records.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_decontamination_batch(
-                batch_df, batch_id, out_path, benchmark_fingerprints,
-                id_col, text_col, k=k, window=window,
-                min_shared=min_shared,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        records,
+        lambda batch_df, batch_id: process_decontamination_batch(
+            batch_df, batch_id, out_path, benchmark_fingerprints,
+            id_col, text_col, k=k, window=window,
+            min_shared=min_shared,
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def eval_exact_substr_grams(
@@ -571,19 +564,15 @@ def start_exact_substr_stream(
     :func:`merge_expectations` to exactly the whole-corpus verdict.
     Use the same L the eval grams were built with; give the gate its
     own ``out_path``."""
-    writer = (
-        records.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_exact_substr_batch(
-                batch_df, batch_id, out_path, benchmark_grams,
-                id_col, text_col, L=L, min_shared=min_shared,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        records,
+        lambda batch_df, batch_id: process_exact_substr_batch(
+            batch_df, batch_id, out_path, benchmark_grams,
+            id_col, text_col, L=L, min_shared=min_shared,
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_expectations_stream(
@@ -598,15 +587,11 @@ def start_expectations_stream(
     (same transient-listing caveat as the stats store — snapshot
     between micro-batches for an exact cut)."""
     _validate_streaming_checks(checks)
-    writer = (
-        records.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_expectations_batch(
-                batch_df, batch_id, out_path, checks
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        records,
+        lambda batch_df, batch_id: process_expectations_batch(
+            batch_df, batch_id, out_path, checks
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -45,6 +45,7 @@ from blackroad_feature_store_spark.streaming.partials import (
     Monoid,
     PartialStore,
     keyed_fold,
+    start_foreach_batch,
 )
 
 
@@ -353,22 +354,18 @@ def start_stats_stream(
     the catalog queries do). Crash-recovery correctness is unaffected:
     replay rewrites the same partition and live reads ignore
     anything not referenced by the marker."""
-    writer = (
-        records.writeStream.foreachBatch(
-            lambda batch_df, batch_id: process_stats_batch(
-                batch_df,
-                batch_id,
-                stats_path,
-                group_cols=group_cols,
-                value_col=value_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return start_foreach_batch(
+        records,
+        lambda batch_df, batch_id: process_stats_batch(
+            batch_df,
+            batch_id,
+            stats_path,
+            group_cols=group_cols,
+            value_col=value_col,
+        ),
+        checkpoint,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def process_cms_batch(

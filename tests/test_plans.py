@@ -327,6 +327,134 @@ def test_fact_broadcast_lint_catches_reintroduction():
         assert _fact_broadcast_offenders(src), f"lint missed: {src}"
 
 
+# Who may touch the stream and scratch machinery: each name (a key may
+# be dotted, for an attribute read off another attribute) is used only
+# inside the top-level function that owns it.
+_CATALOG_DRAIN_OWNERS = {
+    "mkdtemp": "_scratch",
+    "awaitTermination": "_await",
+    "writeStream": "_drain_memory",
+}
+_STREAMING_DRAIN_OWNERS = {"writeStream.foreachBatch": "start_foreach_batch"}
+
+
+def _drain_offenders(src: str, owners: dict) -> list:
+    """AST scan: each use of a name or attribute in ``owners`` outside
+    the top-level function that owns it, as (function, use, line)."""
+    import ast
+
+    def uses(node):
+        if isinstance(node, ast.Name):
+            return [node.id]
+        if not isinstance(node, ast.Attribute):
+            return []
+        if isinstance(node.value, ast.Attribute):
+            return [node.attr, f"{node.value.attr}.{node.attr}"]
+        return [node.attr]
+
+    offenders = []
+
+    def visit(node, top):
+        for child in ast.iter_child_nodes(node):
+            fn = child.name if top is None and isinstance(
+                child, ast.FunctionDef
+            ) else top
+            offenders.extend(
+                (fn, u, child.lineno)
+                for u in uses(child)
+                if u in owners and owners[u] != fn
+            )
+            visit(child, fn)
+
+    visit(ast.parse(src), None)
+    return offenders
+
+
+def test_stream_drain_and_scratch_have_one_owner_each():
+    """The catalog reaches ``mkdtemp``, ``awaitTermination`` and
+    ``writeStream`` only through its scratch and drain helpers, and no
+    streaming module starts a foreachBatch sink but
+    ``start_foreach_batch`` — a hand-written drain fails here."""
+    import glob
+    import inspect
+    import os
+
+    from blackroad_feature_store_spark.streaming import partials
+
+    with open(inspect.getsourcefile(dq)) as fh:
+        assert _drain_offenders(fh.read(), _CATALOG_DRAIN_OWNERS) == []
+    stream_dir = os.path.dirname(inspect.getsourcefile(partials))
+    for path in sorted(glob.glob(f"{stream_dir}/*.py")):
+        with open(path) as fh:
+            assert (
+                _drain_offenders(fh.read(), _STREAMING_DRAIN_OWNERS) == []
+            ), path
+
+
+def test_stream_drain_lint_catches_each_offence():
+    """Mutation check: the lint fires on each offence it guards."""
+    catalog = [
+        'def q(spark, sf):\n'
+        '    base = tempfile.mkdtemp(prefix="stream_x_")\n',
+        'def q(spark, sf):\n'
+        '    q_ = start_stats_stream(s, p, c, ["k"], "v", True)\n'
+        '    q_.awaitTermination()\n',
+        'def q(spark, sf):\n'
+        '    s.writeStream.format("memory").queryName("t").start()\n',
+    ]
+    for src in catalog:
+        assert _drain_offenders(src, _CATALOG_DRAIN_OWNERS), src
+    streaming = (
+        'def start_x_stream(records, fn, checkpoint):\n'
+        '    return records.writeStream.foreachBatch(fn).start()\n'
+    )
+    assert _drain_offenders(streaming, _STREAMING_DRAIN_OWNERS), streaming
+    # the owners themselves pass
+    assert not _drain_offenders(
+        'def _await(query):\n    query.awaitTermination()\n',
+        _CATALOG_DRAIN_OWNERS,
+    )
+
+
+def test_stream_drain_bounded_wait_stops_and_raises(spark):
+    """A drain whose bounded wait runs out stops the query and raises
+    rather than handing back a partial sink: a rate source under the
+    default trigger never terminates."""
+    q_ = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop").start()
+    )
+    try:
+        with pytest.raises(TimeoutError):
+            dq._await(q_, 2)
+        assert not q_.isActive
+    finally:
+        q_.stop()
+
+
+def test_catalog_scratch_sits_under_one_root_removed_at_exit(spark):
+    """Catalog scratch — store roots and written-out sources alike —
+    lands under one per-process root beside where ``mkdtemp`` puts
+    directories, and the exit hook removes the whole root."""
+    import os
+    import tempfile
+
+    dq._remove_scratch_root()
+    before = set(os.listdir(tempfile.gettempdir()))
+    dq.store_registry_ops(spark, SF).collect()
+    dq.source_csv_roundtrip(spark, SF).collect()
+    root = dq._SCRATCH_ROOT
+    assert os.path.dirname(root) == tempfile.gettempdir()
+    names = sorted(os.listdir(root))
+    assert len(names) == 2, names
+    assert names[0].startswith("fs_registry_"), names
+    assert names[1].startswith("src_csv_"), names
+    new = set(os.listdir(tempfile.gettempdir())) - before
+    assert not [n for n in new if n.startswith(("fs_", "src_"))], new
+    dq._remove_scratch_root()
+    assert not os.path.exists(root)
+
+
 def test_q6_all_filters_pushed_and_pruned(spark):
     """TPC-H Q6 is THE pushdown query: ship-date range, discount band,
     and quantity cap must all reach the parquet reader (row-group

@@ -50,7 +50,7 @@ def test_streaming_ingest_then_asof_read(spark, tmp_path, streaming_store):
         ts_col="ts",
         value_cols=["clicks", "city"],
         checkpoint=str(tmp_path / "ckpt"),
-        trigger_available_now=True,
+        available_now=True,
     )
     assert q.awaitTermination(600), "drain did not finish"
 
@@ -100,7 +100,7 @@ def test_streaming_ingest_refreshes_rollup_per_batch(
         ts_col="ts",
         value_cols=["clicks", "city"],
         checkpoint=str(tmp_path / "ckpt"),
-        trigger_available_now=True,
+        available_now=True,
         refresh_rollup="live",
     )
     assert q.awaitTermination(600), "drain did not finish"
@@ -333,7 +333,7 @@ def test_streaming_sink_replay_guard(spark, tmp_path, streaming_store):
     q = start_ingest(
         fs, g.id, stream,
         entity_col="user_id", ts_col="ts", value_cols=["clicks", "city"],
-        checkpoint=str(tmp_path / "ckpt"), trigger_available_now=True,
+        checkpoint=str(tmp_path / "ckpt"), available_now=True,
     )
     assert q.awaitTermination(600), "drain did not finish"
     assert fs.records_df(g.id).count() == 1
@@ -451,7 +451,7 @@ def test_materialize_windowed_features_asof_visible(spark, tmp_path):
         fs, g.id, stream, ts_col="ts", key_col="event_type",
         checkpoint=str(tmp_path / "mwf_ckpt"),
         window_duration="1 hour", watermark="30 minutes",
-        trigger_available_now=True,
+        available_now=True,
     )
     assert q.awaitTermination(600), "drain did not finish"
 
@@ -663,7 +663,7 @@ def test_streaming_ingest_auto_compacts_over_threshold(
         ts_col="ts",
         value_cols=["clicks", "city"],
         checkpoint=str(tmp_path / "ckpt_ac"),
-        trigger_available_now=True,
+        available_now=True,
         auto_compact_max_files=3,
     )
     assert q.awaitTermination(600), "drain did not finish"
@@ -806,7 +806,7 @@ def test_streaming_ingest_enforces_check_constraints(
         entity_col="user_id", ts_col="ts",
         value_cols=["clicks", "city"],
         checkpoint=str(tmp_path / "ckpt_cc"),
-        trigger_available_now=True,
+        available_now=True,
     )
     import pytest as _pytest
 

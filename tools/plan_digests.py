@@ -28,7 +28,7 @@ explain; also used by the test — keep in sync with _normalize):
 * ``#123`` expression ids, ``plan_id=``/``[id=…]`` tags → stripped
 * ``0x7f…`` object addresses (pandas-UDF closures) → stripped
 * absolute paths under /tmp, /root/testdata, spark-warehouse and any
-  ``file:`` URL → ``<PATH>`` (streaming queries build from mkdtemp)
+  ``file:`` URL → ``<PATH>`` (catalog scratch sits under /tmp)
 * file-listing facts that track data, not plan shape — Statistics,
   sizes, "N paths", row counts — → stripped
 * UUID-shaped tokens (checkpoint/query ids) → ``<UUID>``
