@@ -68,6 +68,10 @@ from blackroad_feature_store_spark.errors import (
 )
 from blackroad_feature_store_spark.operators.asof import latest_as_of_arrow
 from blackroad_feature_store_spark.operators.stats import feature_statistics
+from blackroad_feature_store_spark.streaming.fsio import (
+    read_json,
+    write_json_atomic,
+)
 from blackroad_feature_store_spark.versioning import CommitLog
 
 # Declared dtypes (reference feature_store.py:25-31).
@@ -963,27 +967,21 @@ class FeatureStore:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         current = self.list_constraints(group_id)
         current[name] = expr
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(current, fh)
-        os.replace(tmp, path)
+        write_json_atomic(path, current)
 
     def list_constraints(self, group_id: str) -> dict[str, str]:
         # Only an ABSENT file means "no constraints". A corrupted or
         # unreadable _constraints/<group>.json must surface — silently
         # returning {} here would disable CHECK enforcement for the
         # group and let writes that should be rejected land unnoticed.
+        path = self._constraints_path(group_id)
         try:
-            with open(self._constraints_path(group_id)) as fh:
-                return dict(json.load(fh))
-        except FileNotFoundError:
-            return {}
+            return dict(read_json(path) or {})
         except (OSError, ValueError) as e:
             raise RuntimeError(
                 f"Constraint file for group {group_id!r} is unreadable "
                 f"or corrupt ({e}); refusing to silently disable CHECK "
-                "enforcement. Repair or delete "
-                f"{self._constraints_path(group_id)}"
+                f"enforcement. Repair or delete {path}"
             ) from e
 
     def drop_constraint(self, group_id: str, name: str) -> None:
@@ -991,11 +989,7 @@ class FeatureStore:
         if name not in current:
             raise ValueError(f"Constraint {name!r} does not exist")
         del current[name]
-        path = self._constraints_path(group_id)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(current, fh)
-        os.replace(tmp, path)
+        write_json_atomic(self._constraints_path(group_id), current)
 
     def _enforce_constraints(self, batch: DataFrame | pa.Table) -> None:
         """One aggregation pass over the batch counting violations of
@@ -1379,11 +1373,7 @@ class FeatureStore:
         return os.path.join(self.base_path, "_materialized", name)
 
     def _mv_state(self, name: str) -> Optional[dict[str, Any]]:
-        try:
-            with open(os.path.join(self._mv_dir(name), "cursor.json")) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, ValueError):
-            return None
+        return read_json(os.path.join(self._mv_dir(name), "cursor.json"))
 
     def read_entity_rollup(self, name: str) -> DataFrame:
         """The materialized per-entity rollup as last refreshed (a
@@ -1422,7 +1412,10 @@ class FeatureStore:
         self._require_group(group_id)
         latest = self._log.latest_version()
         mv_dir = self._mv_dir(name)
-        state = self._mv_state(name)
+        try:
+            state = self._mv_state(name)
+        except ValueError:
+            state = None  # a corrupt cursor is rebuilt: full recompute
         if latest is None or (state is not None and state["version"] == latest):
             if state is not None:
                 return self.read_entity_rollup(name)
@@ -1473,15 +1466,10 @@ class FeatureStore:
         data_rel = f"v{latest:08d}-{uuid.uuid4().hex[:8]}"
         out_dir = os.path.join(mv_dir, data_rel)
         merged.write.mode("overwrite").parquet(out_dir)
-        os.makedirs(mv_dir, exist_ok=True)
-        tmp = os.path.join(mv_dir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"version": latest, "data": data_rel, "group_id": group_id}, fh
-            )
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(mv_dir, "cursor.json"))
+        write_json_atomic(
+            os.path.join(mv_dir, "cursor.json"),
+            {"version": latest, "data": data_rel, "group_id": group_id},
+        )
         # Best-effort GC of data dirs older than the one just superseded
         # (keep the previous dir: a reader may still hold it).
         import shutil
@@ -1532,29 +1520,25 @@ class FeatureStore:
             )
         path = self._tag_path(name)
         os.makedirs(self._tags_dir(), exist_ok=True)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"version": version, "created": _utcnow().isoformat()}, fh
-            )
-        os.replace(tmp, path)
+        write_json_atomic(
+            path, {"version": version, "created": _utcnow().isoformat()}
+        )
         return version
 
     def list_tags(self) -> dict[str, int]:
-        """All tags as {name: version} (unreadable files skipped)."""
+        """All tags as {name: version}. An unreadable or corrupt tag
+        file raises: skipped, its version would lose vacuum's
+        protection."""
         out: dict[str, int] = {}
         try:
             names = os.listdir(self._tags_dir())
-        except OSError:
+        except FileNotFoundError:
             return out
         for f in sorted(names):
-            if not f.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(self._tags_dir(), f)) as fh:
-                    out[f[:-5]] = int(json.load(fh)["version"])
-            except (OSError, ValueError, KeyError, TypeError):
-                continue
+            if f.endswith(".json"):
+                doc = read_json(os.path.join(self._tags_dir(), f))
+                if doc is not None:  # None: deleted since the listing
+                    out[f[:-5]] = int(doc["version"])
         return out
 
     def delete_tag(self, name: str) -> None:
@@ -1589,6 +1573,9 @@ class FeatureStore:
         retention-hours pattern. Committed-but-superseded files (those
         some old manifest added and a later commit removed) carry no
         such risk and are deleted regardless of age.
+
+        An unreadable or corrupt tag file or watermark stops it before
+        any delete: skipped, a tag would stop protecting its version.
         """
         import time
 
@@ -1632,23 +1619,23 @@ class FeatureStore:
                     pass
         return deleted
 
+    def _vacuum_path(self) -> str:
+        return os.path.join(self.base_path, "_versions", "_vacuum.json")
+
     def _write_vacuum_watermark(self, earliest_retained: int) -> None:
         """Persist the earliest still-travelable version (monotonic)."""
-        path = os.path.join(self.base_path, "_versions", "_vacuum.json")
         current = self._vacuum_watermark() or 0
-        doc = {"retained_from": max(current, earliest_retained)}
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, path)
+        write_json_atomic(
+            self._vacuum_path(),
+            {"retained_from": max(current, earliest_retained)},
+        )
 
     def _vacuum_watermark(self) -> Optional[int]:
-        path = os.path.join(self.base_path, "_versions", "_vacuum.json")
-        try:
-            with open(path) as fh:
-                return json.load(fh)["retained_from"]
-        except (OSError, ValueError, KeyError):
-            return None
+        """The earliest still-travelable version; None before any
+        vacuum. A corrupt watermark raises: read as "no horizon" it
+        would admit reads of versions whose files are gone."""
+        doc = read_json(self._vacuum_path())
+        return None if doc is None else doc["retained_from"]
 
     def compact_records(
         self,

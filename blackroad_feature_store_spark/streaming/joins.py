@@ -99,10 +99,11 @@ def enrich_with_features(
 
     if isinstance(as_of, str):
         as_of = datetime.fromisoformat(as_of)
-    recs = store.records_df(group_id, ts_lte=as_of)
-    if as_of is not None:
-        recs = recs.where(F.col("timestamp") <= F.lit(as_of))
-    latest = latest_as_of(recs, keys=["group_id", "entity_id"]).select(
+    latest = latest_as_of(
+        store.records_df(group_id, ts_lte=as_of),
+        keys=["group_id", "entity_id"],
+        as_of=as_of,
+    ).select(
         F.col("entity_id").alias("__entity"),
         *[
             F.col("feature_values").getItem(f).alias(f"feature_{f}")

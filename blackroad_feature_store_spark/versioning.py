@@ -53,6 +53,7 @@ from datetime import datetime, timezone
 from typing import Any, Optional
 
 from .errors import ConcurrentModificationError
+from .streaming.fsio import read_json, write_json_atomic
 
 _MANIFEST_DIGITS = 8
 
@@ -167,12 +168,11 @@ class CommitLog:
             if v > at_most:
                 continue
             try:
-                with open(os.path.join(self.dir, _checkpoint_name(v))) as fh:
-                    doc = json.load(fh)
-                if all(k in doc for k in need):
-                    return doc
-            except (OSError, ValueError, KeyError):
-                continue
+                doc = read_json(os.path.join(self.dir, _checkpoint_name(v)))
+            except (OSError, ValueError):
+                continue  # unreadable: fall back to an older one
+            if doc is not None and all(k in doc for k in need):
+                return doc
         return None
 
     def _maybe_checkpoint(self, version: int) -> None:
@@ -192,12 +192,9 @@ class CommitLog:
                 # instead of an O(full history) manifest walk.
                 "added_paths": sorted(self._added_paths_at(version)),
             }
-            tmp = os.path.join(self.dir, f".tmp-cp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as fh:
-                json.dump(doc, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, os.path.join(self.dir, _checkpoint_name(version)))
+            write_json_atomic(
+                os.path.join(self.dir, _checkpoint_name(version)), doc
+            )
         except OSError:
             pass
 

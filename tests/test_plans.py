@@ -328,19 +328,31 @@ def test_fact_broadcast_lint_catches_reintroduction():
 
 
 # Who may touch the stream and scratch machinery: each name (a key may
-# be dotted, for an attribute read off another attribute) is used only
-# inside the top-level function that owns it.
+# be dotted, for an attribute read off a name or another attribute) is
+# used only inside the top-level functions that own it; a method of a
+# top-level class is named ``Class.method``.
 _CATALOG_DRAIN_OWNERS = {
-    "mkdtemp": "_scratch",
-    "awaitTermination": "_await",
-    "writeStream": "_drain_memory",
+    "mkdtemp": {"_scratch"},
+    "awaitTermination": {"_await"},
+    "writeStream": {"_drain_memory"},
 }
-_STREAMING_DRAIN_OWNERS = {"writeStream.foreachBatch": "start_foreach_batch"}
+_STREAMING_DRAIN_OWNERS = {"writeStream.foreachBatch": {"start_foreach_batch"}}
+# The one local JSON control-file writer (``streaming/fsio.py``); the
+# commit log's exclusive-link commit and the registry's parquet rename
+# and compaction recovery are the only other writers and renames.
+_CONTROL_FILE_OWNERS = {
+    "json.dump": {"write_json_atomic", "CommitLog.commit"},
+    "os.replace": {
+        "write_json_atomic",
+        "FeatureStore._atomic_write",
+        "FeatureStore._recover_compaction",
+    },
+}
 
 
 def _drain_offenders(src: str, owners: dict) -> list:
     """AST scan: each use of a name or attribute in ``owners`` outside
-    the top-level function that owns it, as (function, use, line)."""
+    the top-level functions that own it, as (function, use, line)."""
     import ast
 
     def uses(node):
@@ -350,23 +362,27 @@ def _drain_offenders(src: str, owners: dict) -> list:
             return []
         if isinstance(node.value, ast.Attribute):
             return [node.attr, f"{node.value.attr}.{node.attr}"]
+        if isinstance(node.value, ast.Name):
+            return [node.attr, f"{node.value.id}.{node.attr}"]
         return [node.attr]
 
     offenders = []
 
-    def visit(node, top):
+    def visit(node, top, cls):
         for child in ast.iter_child_nodes(node):
-            fn = child.name if top is None and isinstance(
-                child, ast.FunctionDef
-            ) else top
+            fn, inner = top, cls
+            if top is None and isinstance(child, ast.FunctionDef):
+                fn = f"{cls}.{child.name}" if cls else child.name
+            elif top is None and isinstance(child, ast.ClassDef):
+                inner = child.name
             offenders.extend(
                 (fn, u, child.lineno)
                 for u in uses(child)
-                if u in owners and owners[u] != fn
+                if u in owners and fn not in owners[u]
             )
-            visit(child, fn)
+            visit(child, fn, inner)
 
-    visit(ast.parse(src), None)
+    visit(ast.parse(src), None, None)
     return offenders
 
 
@@ -414,6 +430,56 @@ def test_stream_drain_lint_catches_each_offence():
         'def _await(query):\n    query.awaitTermination()\n',
         _CATALOG_DRAIN_OWNERS,
     )
+
+
+def test_json_control_files_have_one_writer():
+    """Package-wide, ``json.dump`` appears only in the one control-file
+    writer and the commit log's commit, and ``os.replace`` only in that
+    writer and the registry's parquet rename and compaction recovery —
+    a hand-rolled write-and-rename fails here."""
+    import glob
+    import inspect
+    import os
+
+    import blackroad_feature_store_spark as pkg
+
+    pkg_dir = os.path.dirname(inspect.getsourcefile(pkg))
+    paths = sorted(glob.glob(f"{pkg_dir}/**/*.py", recursive=True))
+    assert len(paths) > 20, paths
+    for path in paths:
+        with open(path) as fh:
+            assert _drain_offenders(fh.read(), _CONTROL_FILE_OWNERS) == [], path
+
+
+def test_json_control_file_lint_catches_each_offence():
+    """Mutation check: a store method writing its own JSON, a module
+    function renaming its own temp file and a commit-log method other
+    than ``commit`` all fire; the owners and look-alikes
+    (``json.dumps``, ``str.replace``) pass."""
+    offences = [
+        'class FeatureStore:\n'
+        '    def tag_version(self, name):\n'
+        '        with open(tmp, "w") as fh:\n'
+        '            json.dump({"version": 1}, fh)\n',
+        'def save(path, obj):\n'
+        '    os.replace(path + ".tmp", path)\n',
+        'class CommitLog:\n'
+        '    def _maybe_checkpoint(self, v):\n'
+        '        json.dump(doc, fh)\n',
+    ]
+    for src in offences:
+        assert _drain_offenders(src, _CONTROL_FILE_OWNERS), src
+    clean = (
+        'def write_json_atomic(path, obj):\n'
+        '    json.dump(obj, f)\n'
+        '    os.replace(tmp, path)\n'
+        'class CommitLog:\n'
+        '    def commit(self, op):\n'
+        '        json.dump(doc, fh)\n'
+        'def encode_value(v):\n'
+        '    return json.dumps(v).replace("a", "b")\n'
+    )
+    assert not _drain_offenders(clean, _CONTROL_FILE_OWNERS)
 
 
 def test_stream_drain_bounded_wait_stops_and_raises(spark):

@@ -7,6 +7,7 @@ import base64
 import hashlib
 import math
 import os
+import re
 from datetime import datetime
 
 import pytest
@@ -2542,6 +2543,80 @@ def test_tag_validation_and_retag(store_with_group):
     store.vacuum(retain_versions=1, orphan_grace_seconds=0)
     with _pytest.raises(ValueError, match="watermark"):
         store.tag_version("old", version=0)
+
+
+# -- torn control files: what cannot be rebuilt raises, the rest rebuilds --
+
+
+def _tree(store):
+    return sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(store.base_path)
+        for f in files
+    )
+
+
+def _torn_tag_stops_vacuum(store, g):
+    _write_batch(store, g.id, "a", 2, 1)                    # v0
+    store.tag_version("train")
+    _write_batch(store, g.id, "b", 2, 2)                    # v1
+    store.compact_records(g.id, target_rows_per_file=10)    # v2
+    path = store._tag_path("train")
+    with open(path) as fh:
+        good = fh.read()
+    open(path, "w").close()  # what a torn write leaves
+    before = _tree(store)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        store.vacuum(retain_versions=1, orphan_grace_seconds=0)
+    assert _tree(store) == before  # nothing deleted
+    with open(path, "w") as fh:
+        fh.write(good)
+    assert store.vacuum(retain_versions=1, orphan_grace_seconds=0) > 0
+    tagged = store.records_df(g.id, tag="train").collect()
+    assert sorted(r["entity_id"] for r in tagged) == ["a0", "a1"]
+
+
+def _corrupt_watermark_raises(store, g):
+    _write_batch(store, g.id, "a", 2, 1)                    # v0
+    _write_batch(store, g.id, "b", 2, 2)                    # v1
+    store.compact_records(g.id, target_rows_per_file=10)    # v2
+    store.vacuum(retain_versions=1, orphan_grace_seconds=0)
+    path = store._vacuum_path()
+    with open(path, "w") as fh:
+        fh.write('{"retained_from": ')
+    # read as "no horizon" these would reach files vacuum deleted
+    with pytest.raises(ValueError, match=re.escape(path)):
+        store.records_df(g.id, version=0)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        store.tag_version("old", version=0)
+
+
+def _corrupt_cursor_rebuilds(store, g):
+    _write_batch(store, g.id, "a", 2, 1)                    # v0
+    store.refresh_entity_rollup("roll", g.id)
+    _write_batch(store, g.id, "a", 3, 2)                    # v1
+    with open(os.path.join(store._mv_dir("roll"), "cursor.json"), "w") as fh:
+        fh.write("{")
+    got = {
+        r["entity_id"]: r["n_records"]
+        for r in store.refresh_entity_rollup("roll", g.id).collect()
+    }
+    assert got == {"a0": 2, "a1": 2, "a2": 1}  # recomputed in full
+    assert store.read_entity_rollup("roll").count() == 3
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_torn_tag_stops_vacuum, _corrupt_watermark_raises,
+     _corrupt_cursor_rebuilds],
+    ids=["tag", "vacuum_watermark", "rollup_cursor"],
+)
+def test_torn_control_file(store_with_group, case):
+    """A control file that cannot be rebuilt (a tag, the vacuum
+    watermark) raises naming the file when it is torn or corrupt,
+    before anything acts on it; one that can (the rollup cursor) is
+    rebuilt by the next refresh."""
+    case(*store_with_group)
 
 
 # -- CHECK constraints -------------------------------------------------------

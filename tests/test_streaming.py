@@ -515,24 +515,31 @@ def test_enrichment_as_of_string_pins_snapshot(spark, tmp_path, streaming_store)
     )
 
     fs, g = streaming_store
-    fs.write_features(g.id, "u1", {"clicks": 5, "city": "x"},
-                      timestamp="2026-01-01T00:00:00")
-    fs.write_features(g.id, "u1", {"clicks": 9, "city": "x"},
-                      timestamp="2026-02-01T00:00:00")
     src = str(tmp_path / "enrich_asof_src")
     spark.createDataFrame([("u1",)], "user string").write.parquet(src)
-    stream = spark.readStream.schema("user string").parquet(src)
-    out = enrich_with_features(
-        stream, fs, g.id, entity_col="user", features=["clicks"],
-        as_of="2026-01-15T00:00:00",  # ISO string accepted
-    )
-    q = (
-        out.writeStream.format("memory").queryName("enrich_asof")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(600), "drain did not finish"
-    row = spark.sql("SELECT * FROM enrich_asof").collect()[0]
-    assert row["feature_clicks"] == "5"  # pinned before the Feb update
+    for early, late, as_of in [
+        ("2026-01-01T00:00:00", "2026-02-01T00:00:00", "2026-01-15T00:00:00"),
+        # pre-1582: a java.sql.Timestamp literal moves the cutoff back
+        # nine days, before the first record, and the pin reads nothing
+        ("1500-01-01T00:00:00", "1500-01-12T00:00:00", "1500-01-05T00:00:00"),
+    ]:
+        fs.write_features(g.id, "u1", {"clicks": 5, "city": "x"},
+                          timestamp=early)
+        fs.write_features(g.id, "u1", {"clicks": 9, "city": "x"},
+                          timestamp=late)
+        stream = spark.readStream.schema("user string").parquet(src)
+        out = enrich_with_features(
+            stream, fs, g.id, entity_col="user", features=["clicks"],
+            as_of=as_of,  # ISO string accepted
+        )
+        q = (
+            out.writeStream.format("memory").queryName("enrich_asof")
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(600), "drain did not finish"
+        row = spark.sql("SELECT * FROM enrich_asof").collect()[0]
+        # pinned before the later update
+        assert row["feature_clicks"] == "5", as_of
 
 
 def test_drain_and_stop_propagates_stream_failure(spark, tmp_path):
